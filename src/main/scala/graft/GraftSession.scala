@@ -10,12 +10,12 @@ import org.apache.spark.sql.SparkSession
   * 100 TB. `nanosAsLong` is required to read the ns-timestamp events table.
   *
   * State store: RocksDB, not the default HDFS-backed in-memory provider —
-  * the stateful streaming operators (pattern twins, streaming dedup,
-  * as-of join) keep one entry per open key, and at 100 TB key cardinality
-  * an executor-heap-bounded map is the first thing to fall over. RocksDB
-  * spills state to local disk with bounded block-cache memory
-  * (`boundedMemoryUsage`), so state scales with disk, not heap; changelog
-  * checkpointing keeps commits incremental.
+  * the stateful streaming operators (CEP patterns, streaming dedup,
+  * as-of join, latest image) keep one entry per open key, and at 100 TB
+  * key cardinality an executor-heap-bounded map is the first thing to
+  * fall over. RocksDB spills state to local disk with bounded
+  * block-cache memory (`boundedMemoryUsage`), so state scales with disk,
+  * not heap; changelog checkpointing keeps commits incremental.
   */
 object GraftSession {
   def builder(cpus: String): SparkSession.Builder =

@@ -310,8 +310,7 @@ object CoreQueries {
     * row; the trailing partial batch emits nothing. Completes the
     * count-window pair (q23 is the SLIDING one). Via
     * [[graft.operators.Patterns.lengthBatch]]; streaming twin
-    * `StreamPatterns.lengthBatch` (parity + both engines in
-    * StreamPatternsSpec). */
+    * `StreamPatterns.lengthBatch` (parity in StreamPatternsSpec). */
   private def q27(s: SparkSession, dir: String): DataFrame =
     graft.operators.Patterns.lengthBatch(
       eventsUs(s, dir).filter(col("event_type") === "purchase"),

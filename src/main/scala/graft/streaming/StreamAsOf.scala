@@ -64,6 +64,7 @@ object StreamAsOf {
   def asOf(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
            idCol: String, stateCols: Seq[String], delay: String): Dataset[AsOfMatch] = {
     require(stateCols.nonEmpty, "as-of join needs at least one state column")
+    StreamPatterns.requireFmgwsEngine(left.sparkSession)
     val l = left.select(
       col(keyCol).cast("long").as("key"),
       unix_micros(col(tsCol)).as("tsUs"),
@@ -82,28 +83,24 @@ object StreamAsOf {
     // one-sided watermark would stall flushes when the other side idles)
     val unioned = l.unionByName(r).withWatermark("eventTime", delay).as[SideRow]
 
-    if (left.sparkSession.conf.getOption(StreamPatterns.EngineConf).contains("tws"))
-      unioned.groupByKey(_.key).transformWithState(new AsOfProcessor,
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-    else
-      unioned.groupByKey(_.key).flatMapGroupsWithState[Buf, AsOfMatch](
-          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, it: Iterator[SideRow], state: GroupState[Buf]) =>
-          val merged = (state.getOption.map(_.rows.toVector).getOrElse(Vector.empty) ++ it)
-            .sortBy(e => (e.tsUs, -e.side, e.id))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (out, retained, wake) = flush(merged, wmUs)
-          if (retained.isEmpty) state.remove()
-          else {
-            state.update(Buf(retained))
-            wake.foreach(f => state.setTimeoutTimestamp(
-              math.max(f / 1000L + 1, state.getCurrentWatermarkMs() + 1)))
-          }
-          out.iterator
-      }
+    unioned.groupByKey(_.key).flatMapGroupsWithState[Buf, AsOfMatch](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
+      (_: Long, it: Iterator[SideRow], state: GroupState[Buf]) =>
+        val merged = (state.getOption.map(_.rows.toVector).getOrElse(Vector.empty) ++ it)
+          .sortBy(e => (e.tsUs, -e.side, e.id))
+        val wmUs = state.getCurrentWatermarkMs() * 1000L
+        val (out, retained, wake) = flush(merged, wmUs)
+        if (retained.isEmpty) state.remove()
+        else {
+          state.update(Buf(retained))
+          wake.foreach(f => state.setTimeoutTimestamp(
+            math.max(f / 1000L + 1, state.getCurrentWatermarkMs() + 1)))
+        }
+        out.iterator
+    }
   }
 
-  /** The as-of flush, shared by both state engines:
+  /** The as-of flush:
     * `(sorted buffer, watermark) → (emissions, retained, earliest pending)`.
     * The sort puts the dimension (side 1) before events on ties —
     * inclusive at-or-before, the batch operator's `side DESC`. */
@@ -123,40 +120,5 @@ object StreamAsOf {
     val retained = pendingEvents.result() ++ live ++ old.lastOption
     val pend = retained.filter(_.side == 0)
     (out.result(), retained, if (pend.nonEmpty) Some(pend.map(_.tsUs).min) else None)
-  }
-
-  /** [[StreamPatterns.PatProcessor]]'s shape for the as-of buffer: typed
-    * `ValueState` + one pending per-key timer on `transformWithState`
-    * (selected by the shared `spark.graft.patterns.engine` conf). */
-  private class AsOfProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, SideRow, AsOfMatch] {
-    @transient private var buf: org.apache.spark.sql.streaming.ValueState[Buf] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      buf = getHandle.getValueState[Buf]("buf", bufEnc,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    private def run(incoming: Iterator[SideRow], wmUs: Long,
-                    expiringMs: Long = Long.MinValue): Iterator[AsOfMatch] = {
-      val prev = if (buf.exists()) buf.get().rows.toVector else Vector.empty
-      val merged = (prev ++ incoming).sortBy(e => (e.tsUs, -e.side, e.id))
-      val (out, retained, wake) = flush(merged, wmUs)
-      getHandle.listTimers().toSeq.filter(_ != expiringMs)
-        .foreach(getHandle.deleteTimer)
-      if (retained.isEmpty) buf.clear()
-      else {
-        buf.update(Buf(retained))
-        wake.foreach(f =>
-          getHandle.registerTimer(math.max(f / 1000L + 1, wmUs / 1000L + 1)))
-      }
-      out.iterator
-    }
-    override def handleInputRows(key: Long, rows: Iterator[SideRow],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[AsOfMatch] =
-      run(rows, tv.getCurrentWatermarkInMs() * 1000L)
-    override def handleExpiredTimer(key: Long,
-        tv: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[AsOfMatch] =
-      run(Iterator.empty, tv.getCurrentWatermarkInMs() * 1000L,
-        expiringMs = info.getExpiryTimeInMs())
   }
 }

@@ -63,17 +63,14 @@ object StreamDedup {
           s"$other — map ids to an integral column upstream (the batch " +
           "Dedup.lshCandidatePairs accepts any id type)")
     }
+    StreamPatterns.requireFmgwsEngine(docs.sparkSession)
     val sigRows = Dedup.minhashSignatureRows(
       Dedup.shingleArrays(docs, idCol, textCol), bands)
       .select(col("sid").cast("long").as("sid"), col("band").cast("int").as("band"),
         col("sig"))
       .as[SigRow]
-    val grouped = sigRows.groupByKey(r => (r.band, r.sig))
-    if (docs.sparkSession.conf.getOption(StreamPatterns.EngineConf).contains("tws"))
-      grouped.transformWithState(new BucketProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-    else
-      grouped.flatMapGroupsWithState[Bucket, CandPair](
+    sigRows.groupByKey(r => (r.band, r.sig))
+      .flatMapGroupsWithState[Bucket, CandPair](
           OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (_: (Int, String), it: Iterator[SigRow], state: GroupState[Bucket]) =>
           val seen = state.getOption.map(_.sids.toVector).getOrElse(Vector.empty)
@@ -83,9 +80,9 @@ object StreamDedup {
       }
   }
 
-  /** Bucket-arrival emit, shared by both state engines: new members in id
-    * order (deterministic intra-batch pairs, doc_a < doc_b), each pairing
-    * with every earlier bucket member. Returns (pairs, members-after). */
+  /** Bucket-arrival emit: new members in id order (deterministic
+    * intra-batch pairs, doc_a < doc_b), each pairing with every earlier
+    * bucket member. Returns (pairs, members-after). */
   private def emitPairs(seen: Vector[Long], it: Iterator[SigRow])
   : (Vector[CandPair], Vector[Long]) = {
     val fresh = it.map(_.sid).toVector.distinct.sorted.filterNot(seen.contains)
@@ -98,25 +95,5 @@ object StreamDedup {
       members :+= sid
     }
     (out.result(), members)
-  }
-
-  /** The bucket state machine on `transformWithState` (selected by the
-    * shared `spark.graft.patterns.engine` conf): timer-free — a member
-    * can pair with a document arriving arbitrarily later, so TimeMode is
-    * None and eviction stays a caller retention decision. */
-  private class BucketProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[(Int, String), SigRow, CandPair] {
-    @transient private var buf: org.apache.spark.sql.streaming.ValueState[Bucket] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      buf = getHandle.getValueState[Bucket]("bucket", bucketEnc,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: (Int, String), rows: Iterator[SigRow],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[CandPair] = {
-      val seen = if (buf.exists()) buf.get().sids.toVector else Vector.empty
-      val (out, members) = emitPairs(seen, rows)
-      if (members.size != seen.size) buf.update(Bucket(members))
-      out.iterator
-    }
   }
 }

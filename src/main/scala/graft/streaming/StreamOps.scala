@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TimeMode, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming analytics over change streams — the host-query surface the
   * reference delegates to Siddhi core (SURVEY §2.2), expressed with
@@ -60,30 +59,4 @@ object StreamOps {
           best
       }
   }
-
-  /** Same semantics on the `transformWithState` API (SURVEY §7.4: the
-    * 100 TB-preferred state surface — typed `ValueState` handles backed
-    * by the RocksDB state-store provider on a cluster). */
-  class LatestImageProcessor extends StatefulProcessor[String, KeyedChange, LatestImage] {
-    @transient private var state: ValueState[LatestImage] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[LatestImage]("latest", imageEnc, org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[KeyedChange],
-                                 timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[LatestImage] = {
-      val newest = rows.maxBy(_.seq)
-      val best = Option(state.get()) match {
-        case Some(prev) if prev.seq >= newest.seq => prev
-        case _ => LatestImage(key, newest.seq, newest.op, newest.payload,
-          deleted = newest.op == "delete")
-      }
-      state.update(best)
-      Iterator.single(best)
-    }
-  }
-
-  def latestImageTws(changes: Dataset[KeyedChange]): Dataset[LatestImage] =
-    changes.groupByKey(_.key)
-      .transformWithState(new LatestImageProcessor, TimeMode.None(), OutputMode.Update(), imageEnc)
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -115,35 +115,27 @@ object StreamPatterns {
       .withWatermark("eventTime", delay)
       .as[PatEvent]
 
-  /** Conf key selecting the state engine for the WHOLE pattern family:
-    * `fmgws` (default, flatMapGroupsWithState) or `tws`
-    * (transformWithState) — every operator routes through here, so a
-    * deployment flips engines without code changes.
-    *
-    * ONE CAVEAT: "without code changes" does not mean "mid-stream". The
-    * two engines write checkpoint state in incompatible formats (fMGWS is
-    * a single implicit value state; TWS is named ValueState + timers), so
-    * flipping this conf and restarting an EXISTING streaming query from
-    * its old checkpoint fails at state-store load (or, worse, misreads).
-    * Switching engines requires a fresh `checkpointLocation`; treat the
-    * conf as fixed for the lifetime of a given checkpoint directory. */
-  val EngineConf = "spark.graft.patterns.engine"
+  /** Fails fast on `spark.graft.patterns.engine`, the removed selector of
+    * a second (TWS) state engine. The pattern, as-of and dedup operators
+    * run on `flatMapGroupsWithState` only, and a TWS state checkpoint is
+    * unreadable here: any value but `fmgws` throws when the operator is
+    * built instead of letting a restart load incompatible state. */
+  private[streaming] def requireFmgwsEngine(spark: SparkSession): Unit = {
+    val conf = "spark.graft.patterns.engine"
+    spark.conf.getOption(conf).filter(_ != "fmgws").foreach { v =>
+      throw new IllegalArgumentException(
+        s"$conf=$v is no longer supported: the stateful streaming operators run on " +
+          "flatMapGroupsWithState only. Unset the conf; a query whose state checkpoint " +
+          "was written by the TWS engine needs a fresh checkpointLocation.")
+    }
+  }
 
   private def runPattern[O: Encoder](events: DataFrame, keyCol: String, tsCol: String,
       idCol: String, typeCol: String, delay: String, onlyType: Option[String] = None,
       valueCol: Option[String] = None)(
       flush: (Vector[PatEvent], Long, Long) => (Seq[O], Vector[PatEvent], Option[Long]))
-  : Dataset[O] =
-    if (events.sparkSession.conf.getOption(EngineConf).contains("tws"))
-      runPatternTws(events, keyCol, tsCol, idCol, typeCol, delay, onlyType, valueCol)(flush)
-    else
-      runPatternFmgws(events, keyCol, tsCol, idCol, typeCol, delay, onlyType, valueCol)(flush)
-
-  private def runPatternFmgws[O: Encoder](events: DataFrame, keyCol: String, tsCol: String,
-      idCol: String, typeCol: String, delay: String, onlyType: Option[String] = None,
-      valueCol: Option[String] = None)(
-      flush: (Vector[PatEvent], Long, Long) => (Seq[O], Vector[PatEvent], Option[Long]))
   : Dataset[O] = {
+    requireFmgwsEngine(events.sparkSession)
     val ds = watermarkedEvents(events, keyCol, tsCol, idCol, typeCol, delay, valueCol)
     ds.groupByKey(_.key).flatMapGroupsWithState[PatBuf, O](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
@@ -166,66 +158,6 @@ object StreamPatterns {
         out.iterator
     }
   }
-
-  /** The [[runPattern]] engine on `transformWithState` — Spark 4's
-    * successor to `flatMapGroupsWithState` (SURVEY §7.4's preferred
-    * state API): identical watermark-buffered finalization and flush
-    * contract, but state lives in a typed `ValueState` on the RocksDB
-    * provider (which transformWithState REQUIRES — `GraftSession` wires
-    * it) and wake-ups are explicit per-key timers, deleted and
-    * re-registered on every flush so at most one is pending. Any flush
-    * function from this file runs unchanged on either engine;
-    * [[followedByTws]] is the parity-pinned pilot. */
-  private class PatProcessor[O](onlyType: Option[String],
-      flush: (Vector[PatEvent], Long, Long) => (Seq[O], Vector[PatEvent], Option[Long]))
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, PatEvent, O] {
-    @transient private var buf: org.apache.spark.sql.streaming.ValueState[PatBuf] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      buf = getHandle.getValueState[PatBuf]("buf", patBufEnc,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    private def run(incoming: Iterator[PatEvent], wmUs: Long,
-                    expiringMs: Long = Long.MinValue): Iterator[O] = {
-      val prev = if (buf.exists()) Option(buf.get()) else None
-      val frontier = prev.map(_.frontierUs).getOrElse(Long.MinValue)
-      val merged = (prev.map(_.evs.toVector).getOrElse(Vector.empty) ++
-        onlyType.fold(incoming)(t => incoming.filter(_.typ == t)))
-        .sortBy(e => (e.tsUs, e.id))
-      val (out, retained, nextFinalize) = flush(merged, frontier, wmUs)
-      // the firing timer is removed by the framework — deleting it again
-      // only logs a warning, so it is excluded
-      getHandle.listTimers().toSeq.filter(_ != expiringMs)
-        .foreach(getHandle.deleteTimer)
-      if (retained.isEmpty) buf.clear()
-      else {
-        buf.update(PatBuf(retained, math.max(frontier, wmUs)))
-        nextFinalize.foreach { f =>
-          // fire once the watermark strictly passes f (ms granularity) —
-          // the same math as the fMGWS engine's setTimeoutTimestamp
-          getHandle.registerTimer(math.max(f / 1000L + 1, wmUs / 1000L + 1))
-        }
-      }
-      out.iterator
-    }
-    override def handleInputRows(key: Long, rows: Iterator[PatEvent],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[O] =
-      run(rows, tv.getCurrentWatermarkInMs() * 1000L)
-    override def handleExpiredTimer(key: Long,
-        tv: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[O] =
-      run(Iterator.empty, tv.getCurrentWatermarkInMs() * 1000L,
-        expiringMs = info.getExpiryTimeInMs())
-  }
-
-  private def runPatternTws[O: Encoder](events: DataFrame, keyCol: String, tsCol: String,
-      idCol: String, typeCol: String, delay: String, onlyType: Option[String] = None,
-      valueCol: Option[String] = None)(
-      flush: (Vector[PatEvent], Long, Long) => (Seq[O], Vector[PatEvent], Option[Long]))
-  : Dataset[O] =
-    watermarkedEvents(events, keyCol, tsCol, idCol, typeCol, delay, valueCol)
-      .groupByKey(_.key)
-      .transformWithState(new PatProcessor[O](onlyType, flush),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
 
   /** First `typeB` strictly after `a` in `(ts, id)` order, within the
     * horizon — the batch operator's `_next_b` pick. */
@@ -277,17 +209,6 @@ object StreamPatterns {
         firstB(evs, a, typeB, withinUs).map(bb =>
           SeqMatch(a.key, a.id, bb.id, bb.tsUs - a.tsUs))))
 
-  /** [[followedBy]] on the `transformWithState` engine — identical output
-    * contract, parity-pinned against both the batch operator and the
-    * fMGWS twin (StreamPatternsSpec). */
-  def followedByTws(events: DataFrame, keyCol: String, tsCol: String, idCol: String,
-                    typeCol: String, typeA: String, typeB: String, withinUs: Long,
-                    delay: String): Dataset[SeqMatch] =
-    runPatternTws[SeqMatch](events, keyCol, tsCol, idCol, typeCol, delay)(
-      seqFlush[SeqMatch](typeA, withinUs, (evs, a) =>
-        firstB(evs, a, typeB, withinUs).map(bb =>
-          SeqMatch(a.key, a.id, bb.id, bb.tsUs - a.tsUs))))
-
   /** Streaming `A not followed by B within T` — batch twin
     * [[graft.operators.Patterns.absence]]. Output: (key, a_id). The
     * timeout-driven flush IS the absence detector: the per-key event-time
@@ -296,17 +217,6 @@ object StreamPatterns {
               typeCol: String, typeA: String, typeB: String, withinUs: Long,
               delay: String): Dataset[AbsMatch] =
     runPattern[AbsMatch](events, keyCol, tsCol, idCol, typeCol, delay)(
-      seqFlush[AbsMatch](typeA, withinUs, (evs, a) =>
-        if (firstB(evs, a, typeB, withinUs).isEmpty) Some(AbsMatch(a.key, a.id))
-        else None))
-
-  /** [[absence]] on the `transformWithState` engine — the timer-driven
-    * flush is the absence detector, so this pins TWS timer semantics
-    * (fire on watermark advance with no further key input). */
-  def absenceTws(events: DataFrame, keyCol: String, tsCol: String, idCol: String,
-                 typeCol: String, typeA: String, typeB: String, withinUs: Long,
-                 delay: String): Dataset[AbsMatch] =
-    runPatternTws[AbsMatch](events, keyCol, tsCol, idCol, typeCol, delay)(
       seqFlush[AbsMatch](typeA, withinUs, (evs, a) =>
         if (firstB(evs, a, typeB, withinUs).isEmpty) Some(AbsMatch(a.key, a.id))
         else None))
@@ -653,8 +563,8 @@ object StreamPatterns {
     rateLimited(events, keyCol, tsCol, idCol, periodUs, delay, onlyType,
       _.maxBy(e => (e.tsUs, e.id)))
 
-  /** Rate-limit flush (shared by both engines): the frontier guard is
-    * what makes a bucket emit exactly once across flushes. */
+  /** Rate-limit flush: the frontier guard is what makes a bucket emit
+    * exactly once across flushes. */
   private def rateFlush(periodUs: Long, pick: Vector[PatEvent] => PatEvent)(
       evs: Vector[PatEvent], frontier: Long, wmUs: Long)
   : (Seq[FirstEveryMatch], Vector[PatEvent], Option[Long]) = {
@@ -683,19 +593,6 @@ object StreamPatterns {
     runPattern[FirstEveryMatch](tagged, keyCol, tsCol, idCol, typeColName,
       delay = delay, onlyType = Option(onlyType).map(_._2))(
       rateFlush(periodUs, pick))
-  }
-
-  /** [[outputFirstEvery]] on the `transformWithState` engine — pins the
-    * emission-FRONTIER state (exactly-once bucket emission across
-    * flushes), the third distinct state shape after buffer (followedBy)
-    * and timer-driven (absence). */
-  def outputFirstEveryTws(events: DataFrame, keyCol: String, tsCol: String,
-                          idCol: String, periodUs: Long, delay: String)
-  : Dataset[FirstEveryMatch] = {
-    require(periodUs > 0, s"period must be positive, got $periodUs")
-    val tagged = events.withColumn("_ptyp", lit("e"))
-    runPatternTws[FirstEveryMatch](tagged, keyCol, tsCol, idCol, "_ptyp", delay)(
-      rateFlush(periodUs, _.minBy(e => (e.tsUs, e.id))))
   }
 
   /** Streaming session windows — batch twin

@@ -159,7 +159,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"),
       s"no join in keeper selection may sort-merge the corpus:\n$p")
     // exactly one evaluation of the quality kernel over the corpus
-    assert(p.sliding("word_stats".length).count(_ == "word_stats") <= 1,
+    assert(p.sliding("word_stats".length).count(_ == "word_stats") == 1,
       s"quality kernel must be evaluated once:\n$p")
   }
 

@@ -16,9 +16,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *    version per key forever (a years-later event still joins it).
   *
   * The soak feeds thousands of events across many micro-batches and pins
-  * the state-store ROW count against the open-key count on BOTH state
-  * engines: rows must not grow as events churn on a fixed key set, and
-  * must grow exactly linearly when new keys open. Together with the
+  * the state-store ROW count against the open-key count: exactly one
+  * row per open key, no growth as events churn on a fixed key set, and
+  * exactly linear growth when new keys open. Together with the
   * per-operator eviction specs (which pin buffer CONTENT), this bounds
   * total state at O(open keys), the contract a 100 TB deployment relies
   * on. */
@@ -32,22 +32,14 @@ class BoundedStateSoakSpec extends SparkSpec {
       .flatMap(_.stateOperators.toSeq.headOption)
       .map(_.numRowsTotal).nextOption().getOrElse(-1L)
 
-  // pin the conf EXPLICITLY for both legs — neither soak may silently
-  // run on whatever the session default happens to be
-  private def withEngine[A](engine: String)(f: => A): A = {
-    spark.conf.set(StreamPatterns.EngineConf, engine)
-    try f
-    finally spark.conf.unset(StreamPatterns.EngineConf)
-  }
-
-  private def lengthWindowSoak(engine: String): Unit = withEngine(engine) {
+  test("lengthWindow soak: state rows track open keys exactly (fmgws)") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long)]
     val src = in.toDF().toDF("k", "ts_us", "id")
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withColumn("value", lit(1.0))
     val q = StreamPatterns.lengthWindow(src, "k", "ts", "id", "value", 5, "0 seconds")
-      .toDF().writeStream.format("memory").queryName(s"soak_lw_$engine")
+      .toDF().writeStream.format("memory").queryName("soak_lw")
       .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
     try {
       var id = 0L
@@ -67,31 +59,28 @@ class BoundedStateSoakSpec extends SparkSpec {
       val rows2 = stateRows(q)
       feed(K + 1 to 2 * K, 5, 5) // K new keys: rows must grow linearly
       val rows3 = stateRows(q)
-      assert(rows1 > 0, s"no state metrics reported ($engine)")
+      assert(rows1 > 0, "no state metrics reported")
       assert(rows2 === rows1,
-        s"$engine: state rows grew with events on a fixed key set ($rows1 -> $rows2)")
+        s"state rows grew with events on a fixed key set ($rows1 -> $rows2)")
       assert(rows3 === 2 * rows1,
-        s"$engine: doubling open keys did not double state rows ($rows1 -> $rows3)")
-      // the per-key multiplicity is an engine constant, starting at one
-      // state row per key (fMGWS: the whole buffer is one row; TWS may
-      // add bookkeeping rows per key but must stay proportional)
-      assert(rows1 % K === 0L, s"$engine: $rows1 rows not a multiple of $K keys")
-      if (engine == "fmgws") assert(rows1 === K.toLong)
+        s"doubling open keys did not double state rows ($rows1 -> $rows3)")
+      // one state row per key: the whole buffer is one fMGWS state value
+      assert(rows1 === K.toLong, s"$rows1 rows for $K keys")
     } finally q.stop()
   }
 
-  /** [[StreamPatterns.lengthBatch]] keeps one PERMANENT sentinel row per
+  /* [[StreamPatterns.lengthBatch]] keeps one PERMANENT sentinel row per
     * key (the consumed-batch counter) plus the current partial batch —
     * emitted batches must be evicted, so rows stay flat as complete
     * batches churn through and grow only with open keys. */
-  private def lengthBatchSoak(engine: String): Unit = withEngine(engine) {
+  test("lengthBatch soak: emitted batches evicted, rows track open keys (fmgws)") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long)]
     val src = in.toDF().toDF("k", "ts_us", "id")
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withColumn("value", lit(1.0))
     val q = StreamPatterns.lengthBatch(src, "k", "ts", "id", "value", 5, "0 seconds")
-      .toDF().writeStream.format("memory").queryName(s"soak_lb_$engine")
+      .toDF().writeStream.format("memory").queryName("soak_lb")
       .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
     try {
       var id = 0L
@@ -111,17 +100,16 @@ class BoundedStateSoakSpec extends SparkSpec {
       val rows2 = stateRows(q)
       feed(K + 1 to 2 * K, 5, 5)
       val rows3 = stateRows(q)
-      assert(rows1 > 0, s"no state metrics reported ($engine)")
+      assert(rows1 > 0, "no state metrics reported")
       assert(rows2 === rows1,
-        s"$engine: state rows grew as complete batches churned ($rows1 -> $rows2)")
+        s"state rows grew as complete batches churned ($rows1 -> $rows2)")
       assert(rows3 === 2 * rows1,
-        s"$engine: doubling open keys did not double state rows ($rows1 -> $rows3)")
-      assert(rows1 % K === 0L, s"$engine: $rows1 rows not a multiple of $K keys")
-      if (engine == "fmgws") assert(rows1 === K.toLong)
+        s"doubling open keys did not double state rows ($rows1 -> $rows3)")
+      assert(rows1 === K.toLong, s"$rows1 rows for $K keys")
     } finally q.stop()
   }
 
-  private def asOfSoak(engine: String): Unit = withEngine(engine) {
+  test("as-of join soak: state rows track open keys exactly (fmgws)") {
     implicit val sqlCtx = spark.sqlContext
     val evIn = MemoryStream[(Long, Long, Long)]
     val dimIn = MemoryStream[(Long, Long, String)]
@@ -130,7 +118,7 @@ class BoundedStateSoakSpec extends SparkSpec {
     val dimSrc = dimIn.toDF().toDF("k", "ts_us", "sv")
       .withColumn("ts", timestamp_micros(col("ts_us")))
     val q = StreamAsOf.asOf(evSrc, dimSrc, "k", "ts", "id", Seq("sv"), "0 seconds")
-      .toDF().writeStream.format("memory").queryName(s"soak_asof_$engine")
+      .toDF().writeStream.format("memory").queryName("soak_asof")
       .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
     try {
       var id = 0L
@@ -152,30 +140,29 @@ class BoundedStateSoakSpec extends SparkSpec {
       val rows2 = stateRows(q)
       feed(K + 1 to 2 * K, 5)
       val rows3 = stateRows(q)
-      assert(rows1 > 0, s"no state metrics reported ($engine)")
+      assert(rows1 > 0, "no state metrics reported")
       assert(rows2 === rows1,
-        s"$engine: state rows grew with dimension churn ($rows1 -> $rows2)")
+        s"state rows grew with dimension churn ($rows1 -> $rows2)")
       assert(rows3 === 2 * rows1,
-        s"$engine: doubling open keys did not double state rows ($rows1 -> $rows3)")
-      assert(rows1 % K === 0L, s"$engine: $rows1 rows not a multiple of $K keys")
-      if (engine == "fmgws") assert(rows1 === K.toLong)
+        s"doubling open keys did not double state rows ($rows1 -> $rows3)")
+      assert(rows1 === K.toLong, s"$rows1 rows for $K keys")
     } finally q.stop()
   }
 
-  /** [[StreamPatterns.sortWindow]] keeps ≤ n member rows + one counter
+  /* [[StreamPatterns.sortWindow]] keeps ≤ n member rows + one counter
     * sentinel per key forever BY DESIGN (evicted events are dropped, so
     * churn must not grow state); [[StreamPatterns.frequentTypes]] keeps
     * one counter row per distinct attribute value per key (bounded by
     * attribute cardinality). Both must stay flat as events churn on a
     * fixed key set and grow exactly linearly with open keys. */
-  private def sortWindowSoak(engine: String): Unit = withEngine(engine) {
+  test("sort window soak: eviction churn leaves state flat, rows track open keys (fmgws)") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long)]
     val src = in.toDF().toDF("k", "ts_us", "id")
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withColumn("value", (col("id") * 31 % 997).cast("double"))
     val q = StreamPatterns.sortWindow(src, "k", "ts", "id", "value", 5, "0 seconds")
-      .toDF().writeStream.format("memory").queryName(s"soak_sw_$engine")
+      .toDF().writeStream.format("memory").queryName("soak_sw")
       .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
     try {
       var id = 0L
@@ -195,23 +182,22 @@ class BoundedStateSoakSpec extends SparkSpec {
       val rows2 = stateRows(q)
       feed(K + 1 to 2 * K, 5, 5)
       val rows3 = stateRows(q)
-      assert(rows1 > 0, s"no state metrics reported ($engine)")
+      assert(rows1 > 0, "no state metrics reported")
       assert(rows2 === rows1,
-        s"$engine: state rows grew as the sort window churned ($rows1 -> $rows2)")
+        s"state rows grew as the sort window churned ($rows1 -> $rows2)")
       assert(rows3 === 2 * rows1,
-        s"$engine: doubling open keys did not double state rows ($rows1 -> $rows3)")
-      assert(rows1 % K === 0L, s"$engine: $rows1 rows not a multiple of $K keys")
-      if (engine == "fmgws") assert(rows1 === K.toLong)
+        s"doubling open keys did not double state rows ($rows1 -> $rows3)")
+      assert(rows1 === K.toLong, s"$rows1 rows for $K keys")
     } finally q.stop()
   }
 
-  private def frequentSoak(engine: String): Unit = withEngine(engine) {
+  test("frequent window soak: counts grow but state rows stay attr-bounded (fmgws)") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long, String)]
     val src = in.toDF().toDF("k", "ts_us", "id", "typ")
       .withColumn("ts", timestamp_micros(col("ts_us")))
     val q = StreamPatterns.frequentTypes(src, "k", "ts", "id", "typ", 2, "0 seconds")
-      .toDF().writeStream.format("memory").queryName(s"soak_fq_$engine")
+      .toDF().writeStream.format("memory").queryName("soak_fq")
       .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
     try {
       var id = 0L
@@ -235,25 +221,24 @@ class BoundedStateSoakSpec extends SparkSpec {
       val rows2 = stateRows(q)
       feed(K + 1 to 2 * K, 5, 6)
       val rows3 = stateRows(q)
-      assert(rows1 > 0, s"no state metrics reported ($engine)")
+      assert(rows1 > 0, "no state metrics reported")
       assert(rows2 === rows1,
-        s"$engine: state rows grew though attr cardinality was fixed ($rows1 -> $rows2)")
+        s"state rows grew though attr cardinality was fixed ($rows1 -> $rows2)")
       assert(rows3 === 2 * rows1,
-        s"$engine: doubling open keys did not double state rows ($rows1 -> $rows3)")
-      assert(rows1 % K === 0L, s"$engine: $rows1 rows not a multiple of $K keys")
-      if (engine == "fmgws") assert(rows1 === K.toLong)
+        s"doubling open keys did not double state rows ($rows1 -> $rows3)")
+      assert(rows1 === K.toLong, s"$rows1 rows for $K keys")
     } finally q.stop()
   }
 
-  /** [[StreamPatterns.delayWindow]] keeps two PERMANENT sentinel rows
+  /* [[StreamPatterns.delayWindow]] keeps two PERMANENT sentinel rows
     * (the released-prefix count + cents fold) plus only the trailing
     * `T` span of events per key — the fold must keep draining the buffer
     * as the watermark advances, so state stays flat under churn and
     * tracks open keys exactly. The delay here (0.1 s) is far smaller
     * than the feed horizon (1 s per feed), so folding is continuously
     * active — a regression that stopped folding would strand events and
-    * (on either engine) blow the per-key row multiple. */
-  private def delaySoak(engine: String): Unit = withEngine(engine) {
+    * grow the buffer. */
+  test("delay window soak: prefix fold drains the buffer, rows track open keys (fmgws)") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long)]
     val src = in.toDF().toDF("k", "ts_us", "id")
@@ -261,7 +246,7 @@ class BoundedStateSoakSpec extends SparkSpec {
       .withColumn("value", lit(1.0))
     val q = StreamPatterns.delayWindow(src, "k", "ts", "id", "value",
         100_000L, "0 seconds")
-      .toDF().writeStream.format("memory").queryName(s"soak_dw_$engine")
+      .toDF().writeStream.format("memory").queryName("soak_dw")
       .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
     try {
       var id = 0L
@@ -281,50 +266,12 @@ class BoundedStateSoakSpec extends SparkSpec {
       val rows2 = stateRows(q)
       feed(K + 1 to 2 * K, 5, 5)
       val rows3 = stateRows(q)
-      assert(rows1 > 0, s"no state metrics reported ($engine)")
+      assert(rows1 > 0, "no state metrics reported")
       assert(rows2 === rows1,
-        s"$engine: state rows grew as the delay buffer folded ($rows1 -> $rows2)")
+        s"state rows grew as the delay buffer folded ($rows1 -> $rows2)")
       assert(rows3 === 2 * rows1,
-        s"$engine: doubling open keys did not double state rows ($rows1 -> $rows3)")
-      assert(rows1 % K === 0L, s"$engine: $rows1 rows not a multiple of $K keys")
-      if (engine == "fmgws") assert(rows1 === K.toLong)
+        s"doubling open keys did not double state rows ($rows1 -> $rows3)")
+      assert(rows1 === K.toLong, s"$rows1 rows for $K keys")
     } finally q.stop()
-  }
-
-  test("lengthWindow soak: state rows track open keys exactly (fmgws)") {
-    lengthWindowSoak("fmgws")
-  }
-  test("lengthWindow soak: state rows track open keys exactly (tws)") {
-    lengthWindowSoak("tws")
-  }
-  test("lengthBatch soak: emitted batches evicted, rows track open keys (fmgws)") {
-    lengthBatchSoak("fmgws")
-  }
-  test("lengthBatch soak: emitted batches evicted, rows track open keys (tws)") {
-    lengthBatchSoak("tws")
-  }
-  test("as-of join soak: state rows track open keys exactly (fmgws)") {
-    asOfSoak("fmgws")
-  }
-  test("as-of join soak: state rows track open keys exactly (tws)") {
-    asOfSoak("tws")
-  }
-  test("sort window soak: eviction churn leaves state flat, rows track open keys (fmgws)") {
-    sortWindowSoak("fmgws")
-  }
-  test("sort window soak: eviction churn leaves state flat, rows track open keys (tws)") {
-    sortWindowSoak("tws")
-  }
-  test("frequent window soak: counts grow but state rows stay attr-bounded (fmgws)") {
-    frequentSoak("fmgws")
-  }
-  test("frequent window soak: counts grow but state rows stay attr-bounded (tws)") {
-    frequentSoak("tws")
-  }
-  test("delay window soak: prefix fold drains the buffer, rows track open keys (fmgws)") {
-    delaySoak("fmgws")
-  }
-  test("delay window soak: prefix fold drains the buffer, rows track open keys (tws)") {
-    delaySoak("tws")
   }
 }

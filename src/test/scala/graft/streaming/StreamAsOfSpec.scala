@@ -32,12 +32,6 @@ class StreamAsOfSpec extends SparkSpec {
     parityRun("sa_parity")
   }
 
-  test("streaming temporal join parity on the transformWithState engine") {
-    spark.conf.set(StreamPatterns.EngineConf, "tws")
-    try parityRun("sa_parity_tws")
-    finally spark.conf.unset(StreamPatterns.EngineConf)
-  }
-
   private def parityRun(name: String): Unit = {
     implicit val sqlCtx = spark.sqlContext
     val evIn = MemoryStream[(Long, Long, Long)]

@@ -32,12 +32,6 @@ class StreamDedupSpec extends SparkSpec {
     parityRun("sd_pairs")
   }
 
-  test("streaming candidates parity on the transformWithState engine") {
-    spark.conf.set(StreamPatterns.EngineConf, "tws")
-    try parityRun("sd_pairs_tws")
-    finally spark.conf.unset(StreamPatterns.EngineConf)
-  }
-
   private def parityRun(name: String): Unit = {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]

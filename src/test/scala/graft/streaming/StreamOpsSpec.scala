@@ -50,38 +50,6 @@ class StreamOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("latestImageTws (transformWithState) matches mapGroupsWithState semantics") {
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState needs column families -> RocksDB provider (the
-    // 100 TB-recommended store anyway; HDFS-backed can't do it)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[StreamOps.KeyedChange]
-    val out = StreamOps.latestImageTws(in.toDS())
-    val q = out.writeStream.format("memory").queryName("tws_sink")
-      .outputMode(OutputMode.Update()).trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      in.addData(
-        StreamOps.KeyedChange("k1", 1, "insert", "v1"),
-        StreamOps.KeyedChange("k1", 2, "update", "v2"))
-      q.processAllAvailable()
-      in.addData(StreamOps.KeyedChange("k1", 1, "insert", "v1")) // late replay
-      q.processAllAvailable()
-      val last = spark.table("tws_sink")
-        .orderBy(col("seq").desc).limit(1).collect().head
-      assert(last.getAs[String]("payload") === "v2")
-      assert(!last.getAs[Boolean]("deleted"))
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   test("latestImage state: updates supersede, deletes tombstone, late replays ignored") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[StreamOps.KeyedChange]

@@ -74,52 +74,6 @@ class StreamPatternsSpec extends SparkSpec {
     assert(want.nonEmpty && got === want)
   }
 
-  test("followedBy parity on the transformWithState engine") {
-    // the same flush contract on Spark 4's successor state API: typed
-    // ValueState + explicit per-key timers on the (required) RocksDB store
-    val got = runStream(src => StreamPatterns.followedByTws(
-      src, "k", "ts", "id", "typ", "signup", "purchase", WithinUs, "0 seconds").toDF(),
-      "sp_seq_tws")
-    val want = Patterns.followedBy(staticDf, "k", "ts_us", "id", "typ",
-      "signup", "purchase", WithinUs).collect().map(_.toSeq).toSet
-    assert(want.nonEmpty && got === want)
-  }
-
-  test("the whole family runs on transformWithState via the engine conf") {
-    // covers the flush shapes without dedicated Tws pilots: conjunction
-    // (backward horizon), burst (trailing count), lengthWindow (count
-    // window), sessionize (gap merge), chain (two-hop seqFlush emit)
-    spark.conf.set(StreamPatterns.EngineConf, "tws")
-    try {
-      val conj = runStream(src => StreamPatterns.conjunction(
-        src, "k", "ts", "id", "typ", "signup", "purchase", WithinUs, "0 seconds").toDF(),
-        "tws_conj")
-      assert(conj === Patterns.conjunction(staticDf, "k", "ts_us", "id", "typ",
-        "signup", "purchase", WithinUs).collect().map(_.toSeq).toSet)
-      val burst = runStream(src => StreamPatterns.burst(
-        src, "k", "ts", "id", "typ", "error", WindowUs, 3L, "0 seconds").toDF(),
-        "tws_burst")
-      assert(burst === Patterns.burst(staticDf, "k", "ts_us", "id", "typ",
-        "error", WindowUs, 3L).collect().map(_.toSeq).toSet)
-      val valued = (df: DataFrame) => df.withColumn("value", (col("id") * 13 % 100) / lit(10.0))
-      val lw = runStream(src => StreamPatterns.lengthWindow(
-        valued(src), "k", "ts", "id", "value", 5, "0 seconds",
-        onlyType = ("typ", "purchase")).toDF(), "tws_lw")
-      assert(lw === Patterns.lengthWindow(
-        valued(staticDf).where(col("typ") === "purchase"),
-        "k", "ts_us", "id", "value", 5).collect().map(_.toSeq).toSet)
-      val sess = runStream(src => StreamPatterns.sessionize(
-        src, "k", "ts", GapUs, "0 seconds").toDF(), "tws_sess")
-      assert(sess === Patterns.sessionize(staticDf, "k", "ts_us", GapUs)
-        .collect().map(_.toSeq).toSet)
-      val chain = runStream(src => StreamPatterns.chain(
-        src, "k", "ts", "id", "typ", "signup", "noise", "purchase",
-        2 * WithinUs, "0 seconds").toDF(), "tws_chain")
-      assert(chain === Patterns.chain(staticDf, "k", "ts_us", "id", "typ",
-        "signup", "noise", "purchase", 2 * WithinUs).collect().map(_.toSeq).toSet)
-    } finally spark.conf.unset(StreamPatterns.EngineConf)
-  }
-
   test("stateful twins run on the RocksDB state store (session default)") {
     // the session wires RocksDBStateStoreProvider (GraftSession) so state
     // scales with executor disk, not heap — every parity test in this
@@ -142,6 +96,28 @@ class StreamPatternsSpec extends SparkSpec {
         .flatMap(_.customMetrics.keySet.toArray.map(_.toString))
       assert(metrics.exists(_.toLowerCase.contains("rocksdb")), metrics.mkString(", "))
     } finally q.stop()
+  }
+
+  test("the removed engine conf fails fast at operator build; unset or fmgws still works") {
+    val conf = "spark.graft.patterns.engine"
+    val events = staticDf.withColumn("ts", timestamp_micros(col("ts_us")))
+    val docs = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text")
+    val builds: Seq[() => Any] = Seq(
+      () => StreamPatterns.followedBy(events, "k", "ts", "id", "typ",
+        "signup", "purchase", WithinUs, "0 seconds"),
+      () => StreamAsOf.asOf(events, events.withColumn("sv", col("typ")),
+        "k", "ts", "id", Seq("sv"), "0 seconds"),
+      () => StreamDedup.lshCandidates(docs, 4))
+    spark.conf.set(conf, "tws")
+    try builds.foreach { build =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(conf) && e.getMessage.contains("checkpointLocation"),
+        e.getMessage)
+    } finally spark.conf.unset(conf)
+    builds.foreach(_())
+    spark.conf.set(conf, "fmgws")
+    try builds.foreach(_())
+    finally spark.conf.unset(conf)
   }
 
   test("absence parity with batch operator") {
@@ -226,16 +202,10 @@ class StreamPatternsSpec extends SparkSpec {
       valued(staticDf).where(col("typ") === "purchase"),
       "k", "ts_us", "id", "value", WindowUs, 5)
       .collect().map(_.toSeq).toSet
-    for (engine <- Seq(None, Some("tws"))) {
-      engine.foreach(spark.conf.set(StreamPatterns.EngineConf, _))
-      val got =
-        try runStream(src => StreamPatterns.timeLengthWindow(
-          valued(src), "k", "ts", "id", "value", WindowUs, 5, "0 seconds",
-          onlyType = ("typ", "purchase")).toDF(),
-          s"sp_tlwin_${engine.getOrElse("fmgws")}")
-        finally engine.foreach(_ => spark.conf.unset(StreamPatterns.EngineConf))
-      assert(want.nonEmpty && got === want)
-    }
+    val got = runStream(src => StreamPatterns.timeLengthWindow(
+        valued(src), "k", "ts", "id", "value", WindowUs, 5, "0 seconds",
+        onlyType = ("typ", "purchase")).toDF(), "sp_tlwin")
+    assert(want.nonEmpty && got === want)
   }
 
   test("lengthBatch parity with batch operator (tumbling count window, partial batch withheld)") {
@@ -250,35 +220,12 @@ class StreamPatternsSpec extends SparkSpec {
     assert(want.nonEmpty && got === want)
   }
 
-  test("lengthBatch parity on the transformWithState engine") {
-    val valued = (df: DataFrame) => df.withColumn("value", (col("id") * 13 % 100) / lit(10.0))
-    spark.conf.set(StreamPatterns.EngineConf, "tws")
-    val got =
-      try runStream(src => StreamPatterns.lengthBatch(
-        valued(src), "k", "ts", "id", "value", 5, "0 seconds",
-        onlyType = ("typ", "purchase")).toDF(), "sp_lenbatch_tws")
-      finally spark.conf.unset(StreamPatterns.EngineConf)
-    val want = Patterns.lengthBatch(
-      valued(staticDf).where(col("typ") === "purchase"),
-      "k", "ts_us", "id", "value", 5)
-      .collect().map(_.toSeq).toSet
-    assert(want.nonEmpty && got === want)
-  }
-
   test("outputFirstEvery parity with batch operator (rate-limit throttle)") {
     val got = runStream(src => StreamPatterns.outputFirstEvery(
       src, "k", "ts", "id", WindowUs, "0 seconds",
       onlyType = ("typ", "error")).toDF(), "sp_first")
     val want = Patterns.outputFirstEvery(
       staticDf.where(col("typ") === "error"), "k", "ts_us", "id", WindowUs)
-      .collect().map(_.toSeq).toSet
-    assert(want.nonEmpty && got === want)
-  }
-
-  test("outputFirstEvery parity on the transformWithState engine (frontier state)") {
-    val got = runStream(src => StreamPatterns.outputFirstEveryTws(
-      src, "k", "ts", "id", WindowUs, "0 seconds").toDF(), "sp_first_tws")
-    val want = Patterns.outputFirstEvery(staticDf, "k", "ts_us", "id", WindowUs)
       .collect().map(_.toSeq).toSet
     assert(want.nonEmpty && got === want)
   }
@@ -401,38 +348,6 @@ class StreamPatternsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("absence parity + timer-only firing on the transformWithState engine") {
-    // full-stream parity
-    val got = runStream(src => StreamPatterns.absenceTws(
-      src, "k", "ts", "id", "typ", "signup", "purchase", WithinUs, "0 seconds").toDF(),
-      "sp_abs_tws")
-    val want = Patterns.absence(staticDf, "k", "ts_us", "id", "typ",
-      "signup", "purchase", WithinUs).collect().map(_.toSeq).toSet
-    assert(want.nonEmpty && got === want)
-    // timer path: the absence must fire on watermark advance carried by a
-    // DIFFERENT key — TWS handleExpiredTimer, no further input for key 1
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Long, Long, String)]
-    val src = in.toDF().toDF("k", "ts_us", "id", "typ")
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = StreamPatterns.absenceTws(src, "k", "ts", "id", "typ",
-        "signup", "purchase", WithinUs, "0 seconds")
-      .toDF().writeStream.format("memory").queryName("sp_timer_tws")
-      .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      in.addData((1L, 1_000_000L, 1L, "signup"))
-      q.processAllAvailable()
-      assert(spark.table("sp_timer_tws").isEmpty)
-      in.addData((2L, WithinUs + 3_000_000L, 2L, "noise"))
-      q.processAllAvailable()
-      in.addData((2L, WithinUs + 4_000_000L, 3L, "noise"))
-      q.processAllAvailable()
-      val got2 = spark.table("sp_timer_tws").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got2 === Set((1L, 1L)))
-    } finally q.stop()
-  }
-
   /** Snapshot twins emit the full window contents tagged with
     * `rev` = events consumed; parity contract = the max-rev snapshot
     * per key equals the batch operator's final answer. */
@@ -447,34 +362,22 @@ class StreamPatternsSpec extends SparkSpec {
     val want = Patterns.sortWindow(
         valued(staticDf).where(col("typ") === "purchase"), "k", "id", "value", 4)
       .select("k", "rk", "id", "value").collect().map(_.toSeq).toSet
-    for (engine <- Seq(None, Some("tws"))) {
-      engine.foreach(spark.conf.set(StreamPatterns.EngineConf, _))
-      val rows =
-        try runStreamRows(src => StreamPatterns.sortWindow(
-          valued(src), "k", "ts", "id", "value", 4, "0 seconds",
-          onlyType = ("typ", "purchase")).toDF(),
-          s"sp_sortwin_${engine.getOrElse("fmgws")}")
-        finally engine.foreach(_ => spark.conf.unset(StreamPatterns.EngineConf))
-      // every snapshot's ranks are contiguous from 1 (internally consistent)
-      rows.groupBy(r => (r.head, r(1))).foreach { case (_, snap) =>
-        assert(snap.map(_(2).asInstanceOf[Long]).sorted === (1L to snap.size).toSeq)
-      }
-      assert(want.nonEmpty && lastSnapshots(rows) === want)
+    val rows = runStreamRows(src => StreamPatterns.sortWindow(
+        valued(src), "k", "ts", "id", "value", 4, "0 seconds",
+        onlyType = ("typ", "purchase")).toDF(), "sp_sortwin")
+    // every snapshot's ranks are contiguous from 1 (internally consistent)
+    rows.groupBy(r => (r.head, r(1))).foreach { case (_, snap) =>
+      assert(snap.map(_(2).asInstanceOf[Long]).sorted === (1L to snap.size).toSeq)
     }
+    assert(want.nonEmpty && lastSnapshots(rows) === want)
   }
 
   test("frequentTypes snapshot parity: max-rev top-k equals batch counts (both engines)") {
     val want = Patterns.frequentTypes(staticDf, "k", "typ", 2)
       .select("k", "rk", "typ", "cnt").collect().map(_.toSeq).toSet
-    for (engine <- Seq(None, Some("tws"))) {
-      engine.foreach(spark.conf.set(StreamPatterns.EngineConf, _))
-      val rows =
-        try runStreamRows(src => StreamPatterns.frequentTypes(
-          src, "k", "ts", "id", "typ", 2, "0 seconds").toDF(),
-          s"sp_freq_${engine.getOrElse("fmgws")}")
-        finally engine.foreach(_ => spark.conf.unset(StreamPatterns.EngineConf))
-      assert(want.nonEmpty && lastSnapshots(rows).map(r => r.head +: r.drop(1)) === want)
-    }
+    val rows = runStreamRows(src => StreamPatterns.frequentTypes(
+        src, "k", "ts", "id", "typ", 2, "0 seconds").toDF(), "sp_freq")
+    assert(want.nonEmpty && lastSnapshots(rows).map(r => r.head +: r.drop(1)) === want)
   }
 
   test("delayWindow parity with batch operator on both engines (released-prefix fold)") {
@@ -483,32 +386,20 @@ class StreamPatternsSpec extends SparkSpec {
         valued(staticDf).where(col("typ") === "purchase"),
         "k", "ts_us", "id", "value", WindowUs)
       .collect().map(_.toSeq).toSet
-    for (engine <- Seq(None, Some("tws"))) {
-      engine.foreach(spark.conf.set(StreamPatterns.EngineConf, _))
-      val got =
-        try runStream(src => StreamPatterns.delayWindow(
-          valued(src), "k", "ts", "id", "value", WindowUs, "0 seconds",
-          onlyType = ("typ", "purchase")).toDF(),
-          s"sp_delay_${engine.getOrElse("fmgws")}")
-        finally engine.foreach(_ => spark.conf.unset(StreamPatterns.EngineConf))
-      assert(want.nonEmpty && got === want)
-    }
+    val got = runStream(src => StreamPatterns.delayWindow(
+        valued(src), "k", "ts", "id", "value", WindowUs, "0 seconds",
+        onlyType = ("typ", "purchase")).toDF(), "sp_delay")
+    assert(want.nonEmpty && got === want)
   }
 
   test("lossyFrequent snapshot parity: max-rev passing set equals batch answer (both engines)") {
     val want = Patterns.lossyFrequent(staticDf, "k", "typ", 250L)
       .collect().map(_.toSeq).toSet
-    for (engine <- Seq(None, Some("tws"))) {
-      engine.foreach(spark.conf.set(StreamPatterns.EngineConf, _))
-      val rows =
-        try runStreamRows(src => StreamPatterns.lossyFrequent(
-          src, "k", "ts", "id", "typ", 250L, "0 seconds").toDF(),
-          s"sp_lossy_${engine.getOrElse("fmgws")}")
-        finally engine.foreach(_ => spark.conf.unset(StreamPatterns.EngineConf))
-      // snapshot-reading convention: a rev's snapshot is its
-      // non-null-attr rows (a lone null-attr row is the empty tombstone)
-      assert(want.nonEmpty && lastSnapshots(rows).filter(_(1) != null) === want)
-    }
+    val rows = runStreamRows(src => StreamPatterns.lossyFrequent(
+        src, "k", "ts", "id", "typ", 250L, "0 seconds").toDF(), "sp_lossy")
+    // snapshot-reading convention: a rev's snapshot is its
+    // non-null-attr rows (a lone null-attr row is the empty tombstone)
+    assert(want.nonEmpty && lastSnapshots(rows).filter(_(1) != null) === want)
   }
 
   test("lossyFrequent: empty passing set at final rev emits a tombstone snapshot") {
