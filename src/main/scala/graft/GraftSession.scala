@@ -62,7 +62,9 @@ object GraftSession {
     * every Generate sits DIRECTLY on its deriving scan, so the inferred
     * prune can never pay for itself: it drops only rows explode would drop
     * in the same stage anyway. Measured (ProbeFamily `_noinfer` twins,
-    * x40, min-of-6): cross_corpus 5.66 -> 3.53 s (the minhash_bands kernel
+    * x40, min-of-6; the probe is in git history,
+    * `git show 68ce229:src/main/scala/graft/tools/ProbeFamily.scala`):
+    * cross_corpus 5.66 -> 3.53 s (the minhash_bands kernel
     * ran 3x per indexed doc), containment_scan 4.64 -> 4.45 s (the cheaper
     * trigram kernel). Exclusion is semantics-preserving — the rule is an
     * optimization only.

@@ -702,7 +702,9 @@ object PipelineQueries {
   /** p42's input with the fixture reline paid ONCE per corpus dir, not on
     * every scan of every timed execution.
     *
-    * Why: ProfileP42 attributes ~75% of p42's wall time to the reline
+    * Why: profiling p42 (ProfileP42, now only in git history:
+    * `git show 68ce229:src/main/scala/graft/tools/ProfileP42.scala`)
+    * attributed ~75% of p42's wall time to the reline
     * scaffolding (normText + regex word-split + per-doc array rebuild,
     * ~1.0 s/scan at sf0.1, paid twice — lineStats and the rewrite each
     * scan the input), not to [[Dedup.lineDedup]] itself (~0.75 s on a
@@ -888,7 +890,8 @@ object PipelineQueries {
     * keeps BOTH the bulk pair scan and per-batch ingest increments flat
     * as the corpus grows (total fine cells ∝ corpus while assignment
     * pays coarseK + k/coarseK ≈ 2·√k dots per vector; the r14 regime
-    * trade, resolved — SemKnProbe carries the three-way A/B). coarseK=4
+    * trade, resolved — the three-way A/B is recorded in SURVEY.md
+    * round 15). coarseK=4
     * against the contract-scale kTotal=16 exercises a real 4×4
     * hierarchy; the threshold matches p49/p13 so the embedding-dedup
     * routes stay directly comparable. */

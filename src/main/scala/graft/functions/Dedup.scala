@@ -892,8 +892,11 @@ object Dedup {
     * `docsQ` = (idCol, qualityCol) for the whole corpus; `clusters` =
     * (doc_id, canonical_id, cluster_sz) as produced by
     * [[nearDupClusters]]. Scale shape (r17): ONE pass over `docsQ` — a
-    * left broadcast join tags each doc with its cluster (the clustered
-    * set is tiny relative to the corpus: only docs with a near-dup);
+    * left join tags each doc with its cluster. The join carries no
+    * broadcast hint: AQE broadcasts the clustered set at runtime when it
+    * is small (typically, since only docs with a near-dup are in it) and
+    * falls back to a shuffle join on a dup-heavy corpus whose clustered
+    * set would exceed Spark's broadcast limits (8 GB / 512M rows);
     * singletons become their own one-member cluster
     * (`coalesce(canonical_id, id)`), and a single struct-min aggregation
     * keyed on the canonical id emits keeper and pass-through rows
@@ -904,13 +907,13 @@ object Dedup {
     * only (canonical, quality, id) cells, never text. Mostly-singleton
     * keys means partial aggregation barely reduces, but a narrow
     * cell shuffle is far cheaper than a second corpus-wide text scan +
-    * kernel pass at any scale. Measured (ProfileR17, sf0.1 min-of-N
-    * matched windows): p30 2.40 → 1.68 s; output row-identical
+    * kernel pass at any scale. Measured (sf0.1 min-of-N matched
+    * windows, OPTIMIZATION_r17.md §4): p30 2.40 → 1.68 s; output row-identical
     * (DedupSpec semantics pins unchanged). */
   def keepBest(docsQ: DataFrame, clusters: DataFrame,
                idCol: String = "doc_id", qualityCol: String = "quality"): DataFrame =
     docsQ.select(col(idCol), col(qualityCol))
-      .join(broadcast(clusters), Seq(idCol), "left")
+      .join(clusters, Seq(idCol), "left")
       .select(coalesce(col("canonical_id"), col(idCol)).as("_canon"),
         coalesce(col("cluster_sz"), lit(1L)).as("_csz"),
         col(qualityCol), col(idCol))
@@ -963,7 +966,8 @@ object Dedup {
     * three times. The candidate subtree is referenced three times but
     * its corpus-sized (band, sig) exchange executes once — AQE
     * stage-reuse dedups identical shuffle stages at runtime, verified by
-    * listener accounting in the ProbeFamily A/B (shuffle bytes 26.6 vs
+    * listener accounting in a ProbeFamily A/B, SURVEY.md round 12
+    * (shuffle bytes 26.6 vs
     * 26.3 MB unpruned at the x10 smoke point; a re-execution would read
     * ~3x) — and the post-exchange prune work is candidate-sized (no
     * distinct on the id sets: a semi join is an existence check, and the
@@ -1051,7 +1055,8 @@ object Dedup {
     * broadcast of an exploded side), and hash-not-merge because the
     * merge form SORTS the corpus-sized exploded train side — an
     * n·log n with spill that was the x400 super-linearity (r15
-    * root-cause, ProbeFamily fresh-JVM mins: join output rows grow
+    * root-cause, fresh-JVM mins from the since-deleted ProbeFamily
+    * probe, SURVEY.md round 15: join output rows grow
     * exactly linearly — 11.4M -> 45.6M for 4x data, word-tagged
     * replicas share nothing so there is NO hot-shingle densification —
     * yet merge timed 4.93 -> 16.85 s (3.42x) while test-side
@@ -1066,27 +1071,17 @@ object Dedup {
     * the corpus. Output: (test_id, train_id, containment_pm), one row
     * per test doc with a match ≥ `thresholdMilli`‰. */
   def containmentScan(docs: DataFrame, thresholdMilli: Int,
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    containmentScanImpl(docs, thresholdMilli, idCol, textCol,
-      trainHint = None, testHint = Some("shuffle_hash"))
-
-  /** [[containmentScan]] with the shingle equi-join's strategy exposed —
-    * ProbeFamily's A/B hook (a hint binds to the side it is called on,
-    * so the build/stream roles are part of the lever). */
-  private[graft] def containmentScanImpl(docs: DataFrame, thresholdMilli: Int,
-                                         idCol: String, textCol: String,
-                                         trainHint: Option[String],
-                                         testHint: Option[String]): DataFrame = {
+                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(thresholdMilli >= 0 && thresholdMilli <= 1000,
       s"thresholdMilli must be in [0, 1000] (got $thresholdMilli)")
     val sh = shingleArrays(docs, idCol, textCol)
       .withColumn("_bucket", TextFunctions.splitBucket(col("sid")))
     val testArr = sh.where(col("_bucket") >= 95)
-    val train0 = sh.where(col("_bucket") < 90)
+    val train = sh.where(col("_bucket") < 90)
       .select(col("sid").as("train_id"), explode(col("shs")).as("sh"))
-    val train = trainHint.fold(train0)(train0.hint(_))
-    val test0 = testArr.select(col("sid").as("test_id"), explode(col("shs")).as("sh"))
-    val test = testHint.fold(test0)(test0.hint(_))
+    // the hint binds to the side it is called on: test is the build side
+    val test = testArr.select(col("sid").as("test_id"), explode(col("shs")).as("sh"))
+      .hint("shuffle_hash")
     val inter = train.join(test, Seq("sh"))
       .groupBy(col("test_id"), col("train_id")).agg(count(lit(1)).as("_inter"))
     val sizes = testArr

@@ -219,7 +219,8 @@ object IvfIndex {
     * k branches carries a boxed per-centroid array literal, the same
     * plumbing-tax class as the codebook literals (smoke semdedup_probe
     * ×4 [k=64 inline] min 7.05 s vs ×10 [k=160 kernel] 0.95 on a
-    * SMALLER corpus; SemKnProbe ×4 A/B: flat-book increments 7.0-8.5 s
+    * SMALLER corpus; the since-deleted SemKnProbe's ×4 A/B, SURVEY.md
+    * round 15: flat-book increments 7.0-8.5 s
     * inline vs 0.97 via the always-kernel two-level route, same
     * artifacts, same sums). Kernel-less sessions keep the size
     * dispatch: the inline form codegens fine to k≈100, the interpreted
@@ -435,7 +436,7 @@ object IvfIndex {
     * maxTrainPerCell total with a per-cell row_number cap, so training
     * cost stops scaling with the corpus — and is FAR cheaper than a
     * flat k ∝ n book (each sampled vector scores 64 + fineK centroids
-    * per pass instead of kTotal; measured in SemKnProbe).
+    * per pass instead of kTotal; measured r15, SURVEY.md round 15).
     *
     * Deterministic at any partitioning: hash-sample + hash-ordered
     * row_number caps, id-ordered seeds, fixed-point long accumulation
@@ -626,7 +627,8 @@ object IvfIndex {
     * unprobed coarse cell is invisible — raise `coarseProbe` to trade
     * query flops for recall; SketchesSpec pins the exactness floor and
     * the full-fan-out == brute-force ceiling). Measured recall@10 on
-    * the rotated-replica corpus (the knn_recall ProbeFamily family, ×100, ~1.6% of cells
+    * the rotated-replica corpus (the knn_recall family of the deleted
+    * ProbeFamily probe, SURVEY.md rounds 15-16; ×100, ~1.6% of cells
     * probed on every route): two-level (cp=8, nprobe=25 of 1600) 0.630
     * vs flat k∝n (nprobe=25) 0.540 vs capped-512 (nprobe=8) 0.485 —
     * the hierarchy gives the BEST recall per probed volume, on top of

@@ -35,17 +35,18 @@ import graft.functions.expr.CodebookCodec
   * oracle. Training reuses [[IvfIndex.train]] per sub-space (fixed-point
   * centroid accumulation: bit-identical books at any parallelism).
   *
-  * Measured (ProbeFamily `pq_adc`, sf0.1 rotated replicas, m=8
-  * ksub=256, PQ_LOCAL_r16): the stored index is ~18× smaller than the
-  * exact [[IvfIndex.index2]] at every factor (8.1→0.41 MB at ×10,
-  * 81→4.6 MB at ×100 — parquet-encoded; ~30× raw) with ADC search
-  * wall-ahead of the exact route (×40: 1.38 vs 1.96 s min on ~4× less
-  * summed task work; ×100: 5.0 vs 6.1 s). The two-stage [[knnRerank]]
-  * is slower than exact search AT TOY SCALE (×100: 14.4 s — it re-pays
-  * the ADC sub-stages' literal deserialization plus one corpus
-  * semi-pass); its value is recall-at-the-top when the raw-vector
-  * index cannot be scanned at all, which is the regime PQ exists for
-  * (PqSpec: ADC recall@5 0.550 → rerank 0.950 at a 10k shortlist). */
+  * Measured (the since-deleted ProbeFamily `pq_adc`, sf0.1 rotated
+  * replicas, m=8 ksub=256; record in PQ_LOCAL_r16.json): the stored
+  * index is ~18× smaller than the exact [[IvfIndex.index2]] at every
+  * factor (8.1→0.41 MB at ×10, 81→4.6 MB at ×100 — parquet-encoded;
+  * ~30× raw) with ADC search wall-ahead of the exact route (×40: 1.38
+  * vs 1.96 s min on ~4× less summed task work; ×100: 5.0 vs 6.1 s).
+  * The two-stage [[knnRerank]] is slower than exact search AT TOY
+  * SCALE (×100: 14.4 s — it re-pays the ADC sub-stages' literal
+  * deserialization plus one corpus semi-pass); its value is
+  * recall-at-the-top when the raw-vector index cannot be scanned at
+  * all, which is the regime PQ exists for (PqSpec: ADC recall@5 0.550
+  * → rerank 0.950 at a 10k shortlist). */
 object Pq {
 
   /** Trained product quantizer: one independent codebook per sub-space.

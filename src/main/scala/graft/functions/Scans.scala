@@ -41,9 +41,10 @@ object Scans {
     * unchanged: such frames arrive shuffle-partitioned (≥ the session's
     * shuffle parallelism) and were never this helper's target.
     *
-    * Applied ONLY where measured to win (ProfileR16, sf0.1 min-of-5
-    * matched windows): heavy-kernel paths gain 25-60% (minhashLsh
-    * 1.14→0.91 s, ngramNovelty 1.75→0.83, jaccardEstimate 1.61→1.02,
+    * Applied ONLY where measured to win (sf0.1 min-of-5 matched
+    * windows; per-site table in OPTIMIZATION_r16.md §3): heavy-kernel
+    * paths gain 25-60% (minhashLsh 1.14→0.91 s, ngramNovelty
+    * 1.75→0.83, jaccardEstimate 1.61→1.02,
     * cosineNearDupPairs 0.48→0.18, nearDupClusters 1.59→1.27, langid
     * eval 0.95→0.41, fingerprint 1.18→0.81); cheap-kernel paths LOSE
     * the exchange cost (ngramJaccardPairs 0.86→1.28, tfidf 0.84→1.30,

@@ -169,8 +169,8 @@ object Similarity {
     * keeper join), and handing the SAME DataFrame in lets Spark reuse
     * one exchange instead of re-deriving the assignment thrice.
     *
-    * Codebook sizing was a measured two-regime trade (r14,
-    * `tools/SemKnProbe` + the smoke A/B):
+    * Codebook sizing was a measured two-regime trade (r14, the
+    * since-deleted SemKnProbe + the smoke A/B; SURVEY.md rounds 14-15):
     *   - BULK dedup rounds (this scan dominates): size k WITH the
     *     corpus (SemDeDup's k ∝ n) — the pair scan is ~n²/k, so a
     *     fixed k drifts quadratic (capped-512 scan min 3.66 s at ×400
@@ -189,7 +189,7 @@ object Similarity {
     * fastest at both factors; flat k∝n is 3.6× slower at depth).
     * Prefer the two-level artifact for new deployments; the flat
     * regimes remain for stored-artifact compatibility and as the
-    * measured record (SemKnProbe carries the standing three-way A/B).
+    * measured record (the three-way A/B is in SURVEY.md round 15).
     * Two prerequisites made it win, both r15 measurements: packed
     * BINARY codebook literals ([[expr.CodebookCodec]] — boxed array
     * literals taxed stage serialization/deserialization) and
@@ -242,7 +242,7 @@ object Similarity {
     * batch pays coarseK + kTotal/coarseK dots per vector instead of the
     * flat book's kTotal — the shape that keeps increments flat while
     * the TOTAL cell count tracks the corpus (the r14 regime trade,
-    * resolved; A/B in SemKnProbe). */
+    * resolved; A/B recorded in SURVEY.md round 15). */
   def semDedupIncrement2(idx: DataFrame, newEmb: DataFrame, model: IvfIndex.Model2,
                          thresholdMicro: Long, idCol: String = "vec_id"): DataFrame =
     semDedupIncrementAssigned(idx, IvfIndex.index2(newEmb, model, idCol),
@@ -288,7 +288,9 @@ object Similarity {
     *
     * Measured (ProbeFamily `sem_contam`, sf0.1 rotated replicas,
     * k = 16·factor, nprobe = fine sub-book size, 20-vector suite, min
-    * of fresh-JVM steady reps): ×1 0.8 s, ×10 1.7, ×40 6.6, ×100 14.8 —
+    * of fresh-JVM steady reps; probe in git history,
+    * `git show 68ce229:src/main/scala/graft/tools/ProbeFamily.scala`):
+    * ×1 0.8 s, ×10 1.7, ×40 6.6, ×100 14.8 —
     * linear in the corpus (the index scan + assignment pass IS the
     * cost; ×10→×40 3.8× per 4×, ×40→×100 2.3× per 2.5×) with ~0 MB
     * shuffled at every factor (broadcast probe + map-side fold). */
@@ -456,7 +458,16 @@ object Similarity {
     * skips the fan-out because on local[32] the replication costs ~25%
     * for no parallelism gain. q37 ([[activityCosineTopKLsh]]) is the
     * candidate-pruned scale route; this knob keeps the exact anchor
-    * itself cluster-parallelizable. */
+    * itself cluster-parallelizable.
+    *
+    * Release obligation: the call is EAGER — it runs the events
+    * aggregation and checkpoints the activity cells when the frame is
+    * built, and registers those checkpoint blocks in the session-wide
+    * ledger. The caller must free them with
+    * [[CheckpointUtil.releaseRegistered]] (or [[Dedup.releaseCcLabels]],
+    * which also drains it) once the returned frame is fully consumed;
+    * its lineage is truncated, so a frame executed after the release
+    * fails. */
   def activityCosineTopK(events: DataFrame, keyCol: String, tsCol: String,
                          hourUs: Long, queryPred: Column, k: Int,
                          salts: Int = 1, bins: Int = 24): DataFrame = {
@@ -470,7 +481,7 @@ object Similarity {
     // exchange, so AQE stage reuse cannot dedupe it. Cells are
     // key×bins-bounded (the persistable-index storage class), so at
     // 100 TB this replaces 4 full event-corpus scans per query with one;
-    // locally it measures a wash-to-slight-win (ProfileR17 min-of-8:
+    // locally it measures a wash-to-slight-win (min-of-8, OPTIMIZATION_r17.md §2:
     // 0.61 → 0.59 s — the corpus aggregation is cheap at sf0.1). Blocks
     // register in the shared ledger drained by [[Dedup.releaseCcLabels]]
     // — consume the returned frame before releasing (lineage is
@@ -649,7 +660,7 @@ object Similarity {
     // it is the CC-labels storage class, and at 100 TB it replaces
     // repeated full event-corpus scans with one. Blocks are registered
     // in the shared ledger drained by [[Dedup.releaseCcLabels]].
-    // Measured (ProfileR16, sf0.1 min-of-5): 1.08 → 0.50 s, output
+    // Measured (sf0.1 min-of-5, OPTIMIZATION_r16.md §5): 1.08 → 0.50 s, output
     // row-identical. Durability: executor-loss makes the truncated-
     // lineage index unrecomputable → query-level retry; the bounded-
     // state trade is documented on [[CheckpointUtil]].

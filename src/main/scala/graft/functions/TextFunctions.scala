@@ -514,7 +514,8 @@ object TextFunctions {
     * repeats inside one document are rare, unlike word repeats at
     * tf≈2–3), so the kernel's per-row hash map bought ~10% fewer
     * join-back rows while roughly doubling the ×1 scan cost — measured
-    * via ProbeFamily `bigram_lm_wtc` vs `bigram_lm`: 2.1–3.2 s
+    * via ProbeFamily `bigram_lm_wtc` vs `bigram_lm` (git history:
+    * `git show 68ce229:src/main/scala/graft/tools/ProbeFamily.scala`): 2.1–3.2 s
     * exploded vs 3.9–8.9 s kernel at ×1 warm, 5.0 vs 4.3 s at ×10 —
     * a trade that only breaks even where the smoke already shows the
     * family sub-linear. The exploded occurrence stream stays. */
@@ -535,8 +536,8 @@ object TextFunctions {
     // [[graft.functions.Dedup.ngramJaccardPairs]]. Sort-merge on _bg is
     // the shape that survives the mid-size regime where the estimate
     // still clears the broadcast threshold but the stream no longer
-    // fits; measured local-neutral (ProfileR17 min-of-6: 1.32 vs 1.32 s,
-    // rows equal)
+    // fits; measured local-neutral (min-of-6, OPTIMIZATION_r17.md §8:
+    // 1.32 vs 1.32 s, rows equal)
     val perDoc = bg.hint("merge").join(model, "_bg")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("_ppm")).as("_s"))
@@ -692,10 +693,10 @@ object TextFunctions {
     * the previous round's blocks freed as soon as the next materializes
     * — per-round plan cost stays O(1), storage stays one vocabulary
     * table. Stops early when no pair remains (fully merged vocabulary).
-    * Measured (ProbeFamily `bpe_train`, K=30 over word-tagged doc
-    * replicas, BPE_LOCAL_r16): min wall ×1/×10/×40/×100 =
-    * 5.6/5.2/6.6/7.6 s — NEAR FLAT for 100× the corpus, ~0.3 MB
-    * shuffled per run at ×100.
+    * Measured (the since-deleted ProbeFamily `bpe_train`, K=30 over
+    * word-tagged doc replicas; record in BPE_LOCAL_r16.json): min wall
+    * ×1/×10/×40/×100 = 5.6/5.2/6.6/7.6 s — NEAR FLAT for 100× the
+    * corpus, ~0.3 MB shuffled per run at ×100.
     *
     * Output: (rank, left, right, merged, freq) — rank 1-based in merge
     * order, `freq` the pair's weighted count at its merge step. */

@@ -8,12 +8,14 @@ import java.nio.{ByteBuffer, ByteOrder}
   * GenericArrayData of BOXED doubles inside the plan tree — at k=1600
   * (dim 64) that is ~100k heap objects which the driver Java-serializes
   * into EVERY stage's task binary, every task re-deserializes, and plan
-  * canonicalization deep-hashes. Measured (the assign_literal_tax ProbeFamily family, ×100, the
-  * SemDeDup increment): the boxed-literal plans spent more wall time in
-  * driver/task plumbing than in all task work combined — capped k=512
-  * probed 2.3 s vs k=1600's 5.7 s with FEWER pairs to compare and summed
-  * task run time ~4 s across 32 cores. A BinaryType literal is one
-  * primitive byte[]: O(bytes) serialize/hash, no per-element boxing.
+  * canonicalization deep-hashes. Measured (the assign_literal_tax
+  * family of the since-deleted ProbeFamily probe, SURVEY.md rounds
+  * 15-16; ×100, the SemDeDup increment): the boxed-literal plans spent
+  * more wall time in driver/task plumbing than in all task work
+  * combined — capped k=512 probed 2.3 s vs k=1600's 5.7 s with FEWER
+  * pairs to compare and summed task run time ~4 s across 32 cores. A
+  * BinaryType literal is one primitive byte[]: O(bytes) serialize/hash,
+  * no per-element boxing.
   *
   * Layouts (little-endian):
   *   vector  = [int n][n doubles]

@@ -139,7 +139,7 @@ object IncrementalAgg {
     // change row instead EXPLODES into its signed cell contributions
     // (after-image +1 for insert/update, before-image −1 for
     // update/delete); same contribution multiset, one derivation.
-    // Measured (ProfileR17, sf0.1 min-of-5 matched window): q35
+    // Measured (sf0.1 min-of-5 matched window, OPTIMIZATION_r17.md §1): q35
     // 1.30 → 1.15 s, plan 5 → 3 events scans; bit-identical output
     // (decimal sums are order-independent; IncrementalAggSpec pins
     // advanceChanges == rollup of the after-table).

@@ -72,7 +72,16 @@ object SnapshotDiff {
     * trade, astronomically unlikely by accident and verifiable by
     * running the exact [[diff]] on any schedule. Output and column
     * contract are identical to [[diff]] (parity pinned in
-    * SnapshotDiffSpec). */
+    * SnapshotDiffSpec).
+    *
+    * Release obligation: the call is EAGER — it runs the digest
+    * aggregation and checkpoints the dirty-bucket set when the frame is
+    * built, and registers those checkpoint blocks in the session-wide
+    * ledger. The caller must free them with
+    * [[graft.functions.CheckpointUtil.releaseRegistered]] (or
+    * [[graft.functions.Dedup.releaseCcLabels]], which also drains it)
+    * once the returned frame is fully consumed; its lineage is
+    * truncated, so a frame executed after the release fails. */
   def diffPruned(before: DataFrame, after: DataFrame, pk: Seq[String],
                  buckets: Int = 4096): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
@@ -90,7 +99,12 @@ object SnapshotDiff {
     * artifact), and the next round pays ONE full scan (digesting the new
     * snapshot) instead of the plain diff's two-scans-plus-full-join or
     * the self-contained prune's four scans. Rows enter the PK join only
-    * from dirty buckets. */
+    * from dirty buckets. Same release obligation as [[diffPruned]]: the
+    * dirty-bucket set is checkpointed at call time and its blocks stay
+    * registered until the caller runs
+    * [[graft.functions.CheckpointUtil.releaseRegistered]] or
+    * [[graft.functions.Dedup.releaseCcLabels]] after consuming the
+    * result. */
   def diffPrunedIncremental(before: DataFrame, beforeDigests: DataFrame,
                             after: DataFrame, pk: Seq[String],
                             buckets: Int = 4096): DataFrame =

@@ -271,7 +271,6 @@ class CdcScan(fullSchema: StructType, pruned: StructType, opts: CdcOptions,
     * IN-lists wider than [[Jdbc.MaxRuntimeInList]] stay Spark-side
     * (vendors cap IN length — Oracle at 1000). */
   private val runtimeHolder = new RuntimeWhere
-  private[sources] def whereNow: Array[String] = where ++ runtimeHolder.extra
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     pruned.fields.collect {
       case StructField(n, dt, _, _) if dt != StringType && dt != BinaryType =>

@@ -11,7 +11,8 @@ import graft.functions.{IvfIndex, Similarity}
   * route: keeps a vector corpus near-duplicate-free (cosine ≥ τ) as
   * increments arrive, over the TWO-LEVEL quantizer artifact
   * ([[IvfIndex.trainTwoLevel]]) whose assignment cost stays flat as the
-  * stored corpus grows (the r15 SemKnProbe adjudication). Vector frames
+  * stored corpus grows (the r15 SemKnProbe adjudication; SURVEY.md
+  * round 15 has the numbers). Vector frames
   * use the embeddings-table convention (`vec_id` long, `embedding`
   * array<float>, `label`).
   *
@@ -354,7 +355,9 @@ object SemIngest {
     * the whole corpus through the re-built `seed`.
     *
     * Measured cost (ProbeFamily `sem_reseed`, sf0.1 rotated replicas,
-    * kTotal = 16·factor, min of fresh-JVM steady-state reps): ×1 2.2 s,
+    * kTotal = 16·factor, min of fresh-JVM steady-state reps; record in
+    * RESEED_LOCAL_r16.json and
+    * `git show 68ce229:src/main/scala/graft/tools/ProbeFamily.scala`): ×1 2.2 s,
     * ×4 1.9, ×10 2.9, ×40 5.4, ×100 5.1 — TRAINING-dominated and near
     * flat past the sample cap (`trainTwoLevel`'s maxTrainPerCell bounds
     * the k-means input); the re-index term is linear in n but map-side

@@ -3,16 +3,9 @@ package graft.tools
 import graft.GraftSession
 import org.apache.spark.sql.SparkSession
 
-/** Shared harness for the dev diagnostics (ProfileR4, ScaleSmoke): one
-  * session recipe and one timing printer, so the tools stay consistent. */
+/** Shared session recipe for the dev diagnostics (ScaleSmoke,
+  * KernelAudit), so the tools stay consistent. */
 private[tools] object DevTool {
   def session(): SparkSession =
     GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-
-  def time[A](prefix: String, tag: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[$prefix] $tag%-32s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    r
-  }
 }

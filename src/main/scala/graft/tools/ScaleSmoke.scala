@@ -392,8 +392,9 @@ object ScaleSmoke {
         eventsN, "user_id", "ts_us", 3600000000L, col("user_id") < 20, 3).count())
       // the r13 wide-bins routing at scale: bins=168 (hour-of-week) rides
       // the bin_count_agg kernel past the codegen maxFields limit —
-      // O(1) per row, one exchange of array partials (ProbeFamily carries
-      // the rejected fused-interpreted and two-step twins for A/B)
+      // O(1) per row, one exchange of array partials (the rejected
+      // fused-interpreted and two-step twins are in git history:
+      // `git show 68ce229:src/main/scala/graft/tools/ProbeFamily.scala`)
       // consumption folds the WHOLE array: element_at(hist, 1) would let
       // SimplifyExtractValueOps collapse the CreateArray to one
       // conditional sum and time 1/168th of the operator
@@ -422,8 +423,8 @@ object ScaleSmoke {
       time("dedup_clusters", n)(Dedup.nearDupClusters(docs, 8, 800).count())
       // p37's shape at depth (r14): in-query LSH index over 3/4 of the
       // corpus + increment probe of the rest. Committed so the r13
-      // rule-exclusion win (probe x40 5.66 -> 3.53 s, previously only a
-      // ProbeFamily record) stays regression-guarded the way
+      // rule-exclusion win (probe x40 5.66 -> 3.53 s, first measured by
+      // the since-deleted ProbeFamily probe) stays regression-guarded the way
       // activity_hist_wide is — a re-enabled InferFiltersFromGenerate
       // (or any future rule that clones the minhash_bands kernel into a
       // scan filter) shows up as this curve stepping back up
@@ -524,8 +525,9 @@ object ScaleSmoke {
       // replicateEmbsRotated) and a codebook k = min(16·n, 512). The cap
       // is a MEASURED two-sided trade, not an oversight (r14 probed both
       // regimes end to end): uncapping to the paper's k ∝ n flattens the
-      // within-cell SCAN (SemKnProbe ×400: capped min 3.78 s vs k∝n
-      // 1.35 s — the scan is ~n²/k) but regresses the INCREMENT probe
+      // within-cell SCAN (since-deleted SemKnProbe ×400, SURVEY.md round
+      // 14: capped min 3.78 s vs k∝n 1.35 s — the scan is ~n²/k) but
+      // regresses the INCREMENT probe
       // 2.2× at ×100 (semdedup_probe min 2.63 → 5.73 s, 3-pass medians,
       // SCALE_SMOKE_LOCAL_r14 vs the rejected r14b run): `nearest_cell`
       // assignment is exact over all k cells, so each probed batch pays
@@ -579,10 +581,11 @@ object ScaleSmoke {
     /** TWO-LEVEL SemDeDup scan + increment (r15): total fine cells ∝ n
       * through a ≤64-cell coarse router — the regime that resolves the
       * r14 capped-vs-k∝n trade (scan stays off the n²/k drift AND the
-      * increment stays flat; SemKnProbe carries the three-way A/B with
-      * the flat books). Codebooks ride CodebookCodec-packed binary
-      * literals — the boxed-literal plumbing tax was the real increment
-      * cost, see the assign_literal_tax ProbeFamily family (née AssignProbe r15). */
+      * increment stays flat; the three-way A/B with the flat books is
+      * recorded in SURVEY.md round 15). Codebooks ride CodebookCodec-packed
+      * binary literals — the boxed-literal plumbing tax was the real
+      * increment cost, measured by the assign_literal_tax family of the
+      * deleted ProbeFamily probe (née AssignProbe; SURVEY.md rounds 15-16). */
     def semDedupTwoPair(n: Int): Unit = {
       val idxPath = s"$smokeDir/sem2_idx_x$n"
       val modelPath = s"$smokeDir/sem2_model_x$n"

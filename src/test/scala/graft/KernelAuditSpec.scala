@@ -21,8 +21,9 @@ class KernelAuditSpec extends SparkSpec {
     *   - p13/p49/p6/p12: InferFiltersFromConstraints isnotnulls over a
     *     DERIVED join key (isnotnull(sqrt(vec_dot(e,e))),
     *     isnotnull(size(trigram_shingles(text))), isnotnull of the
-    *     nearest-cell argmin) — probed via ProbeFamily's `_noconstraints`
-    *     lever in r13 and adjudicated harmless: the rule's join-key
+    *     nearest-cell argmin) — probed via the since-deleted
+    *     ProbeFamily's `_noconstraints` lever in r13 and adjudicated
+    *     harmless (SURVEY.md round 14): the rule's join-key
     *     isnotnulls are load-bearing in general, and the flagged scans
     *     re-pay only a cheap per-row guard, not a per-conjunct explode
     *     kernel (VERDICT r13 "probed and adjudicated harmless").

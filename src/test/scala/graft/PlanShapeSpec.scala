@@ -629,8 +629,8 @@ class PlanShapeSpec extends SparkSpec {
     // runtime guard, not a plan-string pin: p54's perf contract is that
     // AQE stage-reuse dedups the corpus-sized (band, sig) exchange the
     // candidate subtree ships, even though the plan references it three
-    // times (verify driver + two semi-join prunes). Proven by ProbeFamily
-    // listener runs (26.6 vs 26.3 MB at x10); this spec makes an
+    // times (verify driver + two semi-join prunes). Proven by listener
+    // runs (26.6 vs 26.3 MB at x10, SURVEY.md round 12); this spec makes an
     // AQE/config change that silently re-executes it a test failure.
     val bytes = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {

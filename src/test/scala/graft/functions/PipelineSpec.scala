@@ -778,6 +778,22 @@ class PipelineSpec extends SparkSpec {
       Similarity.activityCells(df, "k", "ts", 0L, 24))
   }
 
+  test("vec_dot codegen: the kernel loop is in the generated code, compiles and sums right") {
+    // a janino failure would otherwise fall back to interpreted eval
+    // silently; fallback=false makes it throw. The plan has no exchange,
+    // so AQE leaves it alone and the codegen span is static
+    val priorFallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val df = spark.range(5)
+        .select(array(col("id").cast("double"), lit(2.0)).as("a"))
+        .select(call_function("vec_dot", col("a"), col("a")).as("d"))
+      val gen = org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)
+      assert(gen.contains("vdN"), s"vec_dot loop missing from generated code:\n$gen")
+      assert(df.agg(sum("d")).head().getDouble(0) === 50.0)
+    } finally spark.conf.set("spark.sql.codegen.fallback", priorFallback)
+  }
+
   test("bin_count_agg kernel: null/out-of-range bins drop, merge is partition-independent") {
     // direct-call contract beyond what the routed parity covers: a null
     // bin and an out-of-range bin must contribute nothing (the

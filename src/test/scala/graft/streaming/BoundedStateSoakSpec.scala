@@ -32,7 +32,7 @@ class BoundedStateSoakSpec extends SparkSpec {
       .flatMap(_.stateOperators.toSeq.headOption)
       .map(_.numRowsTotal).nextOption().getOrElse(-1L)
 
-  test("lengthWindow soak: state rows track open keys exactly (fmgws)") {
+  test("lengthWindow soak: state rows track open keys exactly") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long)]
     val src = in.toDF().toDF("k", "ts_us", "id")
@@ -73,7 +73,7 @@ class BoundedStateSoakSpec extends SparkSpec {
     * key (the consumed-batch counter) plus the current partial batch —
     * emitted batches must be evicted, so rows stay flat as complete
     * batches churn through and grow only with open keys. */
-  test("lengthBatch soak: emitted batches evicted, rows track open keys (fmgws)") {
+  test("lengthBatch soak: emitted batches evicted, rows track open keys") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long)]
     val src = in.toDF().toDF("k", "ts_us", "id")
@@ -109,7 +109,7 @@ class BoundedStateSoakSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("as-of join soak: state rows track open keys exactly (fmgws)") {
+  test("as-of join soak: state rows track open keys exactly") {
     implicit val sqlCtx = spark.sqlContext
     val evIn = MemoryStream[(Long, Long, Long)]
     val dimIn = MemoryStream[(Long, Long, String)]
@@ -155,7 +155,7 @@ class BoundedStateSoakSpec extends SparkSpec {
     * one counter row per distinct attribute value per key (bounded by
     * attribute cardinality). Both must stay flat as events churn on a
     * fixed key set and grow exactly linearly with open keys. */
-  test("sort window soak: eviction churn leaves state flat, rows track open keys (fmgws)") {
+  test("sort window soak: eviction churn leaves state flat, rows track open keys") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long)]
     val src = in.toDF().toDF("k", "ts_us", "id")
@@ -191,7 +191,7 @@ class BoundedStateSoakSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("frequent window soak: counts grow but state rows stay attr-bounded (fmgws)") {
+  test("frequent window soak: counts grow but state rows stay attr-bounded") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long, String)]
     val src = in.toDF().toDF("k", "ts_us", "id", "typ")
@@ -238,7 +238,7 @@ class BoundedStateSoakSpec extends SparkSpec {
     * than the feed horizon (1 s per feed), so folding is continuously
     * active — a regression that stopped folding would strand events and
     * grow the buffer. */
-  test("delay window soak: prefix fold drains the buffer, rows track open keys (fmgws)") {
+  test("delay window soak: prefix fold drains the buffer, rows track open keys") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long)]
     val src = in.toDF().toDF("k", "ts_us", "id")

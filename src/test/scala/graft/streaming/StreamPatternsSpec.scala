@@ -196,7 +196,7 @@ class StreamPatternsSpec extends SparkSpec {
     assert(want.nonEmpty && got === want)
   }
 
-  test("timeLengthWindow parity with batch operator on both engines (doubly-bounded window)") {
+  test("timeLengthWindow parity with batch operator (doubly-bounded window)") {
     val valued = (df: DataFrame) => df.withColumn("value", (col("id") * 13 % 100) / lit(10.0))
     val want = Patterns.timeLengthWindow(
       valued(staticDf).where(col("typ") === "purchase"),
@@ -357,7 +357,7 @@ class StreamPatternsSpec extends SparkSpec {
       rs.filter(_(1) == maxRev).map(r => r.head +: r.drop(2))
     }.toSet
 
-  test("sortWindow snapshot parity: max-rev window equals batch top-n (both engines)") {
+  test("sortWindow snapshot parity: max-rev window equals batch top-n") {
     val valued = (df: DataFrame) => df.withColumn("value", (col("id") * 13 % 100) / lit(10.0))
     val want = Patterns.sortWindow(
         valued(staticDf).where(col("typ") === "purchase"), "k", "id", "value", 4)
@@ -372,7 +372,7 @@ class StreamPatternsSpec extends SparkSpec {
     assert(want.nonEmpty && lastSnapshots(rows) === want)
   }
 
-  test("frequentTypes snapshot parity: max-rev top-k equals batch counts (both engines)") {
+  test("frequentTypes snapshot parity: max-rev top-k equals batch counts") {
     val want = Patterns.frequentTypes(staticDf, "k", "typ", 2)
       .select("k", "rk", "typ", "cnt").collect().map(_.toSeq).toSet
     val rows = runStreamRows(src => StreamPatterns.frequentTypes(
@@ -380,7 +380,7 @@ class StreamPatternsSpec extends SparkSpec {
     assert(want.nonEmpty && lastSnapshots(rows).map(r => r.head +: r.drop(1)) === want)
   }
 
-  test("delayWindow parity with batch operator on both engines (released-prefix fold)") {
+  test("delayWindow parity with batch operator (released-prefix fold)") {
     val valued = (df: DataFrame) => df.withColumn("value", (col("id") * 13 % 100) / lit(10.0))
     val want = Patterns.delayWindow(
         valued(staticDf).where(col("typ") === "purchase"),
@@ -392,7 +392,7 @@ class StreamPatternsSpec extends SparkSpec {
     assert(want.nonEmpty && got === want)
   }
 
-  test("lossyFrequent snapshot parity: max-rev passing set equals batch answer (both engines)") {
+  test("lossyFrequent snapshot parity: max-rev passing set equals batch answer") {
     val want = Patterns.lossyFrequent(staticDf, "k", "typ", 250L)
       .collect().map(_.toSeq).toSet
     val rows = runStreamRows(src => StreamPatterns.lossyFrequent(
