@@ -8,8 +8,8 @@ import org.apache.spark.storage.StorageLevel
   * (connected components in [[Dedup]], the BPE merge loop in
   * [[TextFunctions.bpeTrain]]) and for RETURNED frames whose plan
   * references one bounded intermediate several ways (the q37
-  * activity-LSH index, the q36 activity cells, the snapshot-diff
-  * dirty-bucket set): `localCheckpoint` a frame eagerly and hand back
+  * activity-LSH index, the q36 activity cells): `localCheckpoint` a
+  * frame eagerly and hand back
   * the persisted RDDs that now back it, so the caller can free each
   * round's blocks DETERMINISTICALLY once the next round has
   * materialized — `Dataset.unpersist` only talks to the CacheManager,
@@ -25,7 +25,7 @@ import org.apache.spark.storage.StorageLevel
   * lineage, so on a cluster an executor loss makes the checkpointed
   * frame unrecomputable and fails the job — the caller re-runs the
   * query. Every site using this device checkpoints BOUNDED state (cell
-  * tables, label tables, digest sets — never the corpus), so the
+  * tables, label tables, index cells — never the corpus), so the
   * re-run-on-loss trade buys the removal of repeated corpus-wide scans;
   * a deployment that cannot accept query-level retry should configure
   * `spark.checkpoint.dir` and switch these sites to reliable
@@ -61,16 +61,15 @@ object CheckpointUtil {
 
   /** Free every checkpoint block registered by a returned frame —
     * the neutral release hook for callers of ANY module that uses the
-    * ledger (activityCosineTopKLsh / activityCosineTopK indexes,
-    * SnapshotDiff's pruned-diff dirty sets; [[Dedup.releaseCcLabels]]
-    * remains the historical alias and additionally drains the CC label
-    * ledger). SESSION-GLOBAL and ordering-sensitive: call it only once
-    * every previously returned registered frame has been fully consumed
-    * (written / aggregated / collected) — their lineage is truncated, so
-    * executing a still-held result frame after release fails
-    * unrecoverably. Harnesses call this between queries; batch loops
-    * ([[graft.streaming.SnapshotCapture.captureAndApply]]) call it in
-    * their per-round epilogue. */
+    * ledger (activityCosineTopKLsh / activityCosineTopK indexes;
+    * [[Dedup.releaseCcLabels]] remains the historical alias and
+    * additionally drains the CC label ledger). SESSION-GLOBAL and
+    * ordering-sensitive: call it only once every previously returned
+    * registered frame has been fully consumed (written / aggregated /
+    * collected) — their lineage is truncated, so executing a still-held
+    * result frame after release fails unrecoverably. Harnesses call this
+    * between queries. A loop must not call it from a per-round epilogue:
+    * it would free blocks of frames other code still holds. */
   def releaseRegistered(): Unit = ledger.synchronized {
     ledger.foreach(_.unpersist(blocking = false))
     ledger.clear()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Snapshot differencing — the batch analog of CDC for sources the
@@ -55,6 +55,20 @@ object SnapshotDiff {
       .drop("_in_before", "_in_after")
   }
 
+  /** The change set of [[diff]] against an EMPTY `before` — every row of
+    * `after` an insert — as one projection: no join, no exchange. Column
+    * names, order and types are those of `diff(after.limit(0), after, pk)`
+    * (pk columns, after-image, null `before_`-prefixed images, `_op`);
+    * a capture loop's bootstrap round (pinned in SnapshotCaptureSpec). */
+  private[graft] def inserts(after: DataFrame, pk: Seq[String]): DataFrame = {
+    val cols = after.columns.toSeq
+    require(pk.nonEmpty && pk.forall(cols.contains), s"pk $pk must be schema columns")
+    val nonPk = cols.filterNot(pk.contains)
+    after.select((pk ++ nonPk).map(col) ++
+      nonPk.map(c => lit(null).cast(after.schema(c).dataType).as(s"before_$c")) :+
+      lit("insert").as("_op"): _*)
+  }
+
   /** [[diff]] behind a digest prune — the shape that makes repeated
     * snapshot capture viable at 100 TB, where between rounds almost
     * nothing changed: both snapshots first collapse map-side to one
@@ -74,14 +88,11 @@ object SnapshotDiff {
     * contract are identical to [[diff]] (parity pinned in
     * SnapshotDiffSpec).
     *
-    * Release obligation: the call is EAGER — it runs the digest
-    * aggregation and checkpoints the dirty-bucket set when the frame is
-    * built, and registers those checkpoint blocks in the session-wide
-    * ledger. The caller must free them with
-    * [[graft.functions.CheckpointUtil.releaseRegistered]] (or
-    * [[graft.functions.Dedup.releaseCcLabels]], which also drains it)
-    * once the returned frame is fully consumed; its lineage is
-    * truncated, so a frame executed after the release fails. */
+    * Evaluation: the call is EAGER — it runs the digest aggregation and
+    * collects the dirty bucket ids (at most `buckets` longs) when the
+    * frame is built; both sides are then pruned by a plain filter on
+    * those ids. Nothing is cached or checkpointed, so there is nothing to
+    * release and the returned frame stays recomputable. */
   def diffPruned(before: DataFrame, after: DataFrame, pk: Seq[String],
                  buckets: Int = 4096): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
@@ -89,8 +100,8 @@ object SnapshotDiff {
     require(before.columns.toSeq == cols,
       s"snapshots must share a schema; got ${before.columns.toSeq} vs $cols")
     prunedDiff(before, after,
-      dirtyBuckets(bucketDigests(before, pk, buckets),
-        bucketDigests(after, pk, buckets)), pk, buckets)
+      dirtyBuckets(bucketDigests(before, pk, buckets), bucketDigests(after, pk, buckets))
+        .collect().map(_.getLong(0)).toSeq, pk, buckets)
   }
 
   /** [[diffPruned]] with the BEFORE side's digests supplied instead of
@@ -99,18 +110,27 @@ object SnapshotDiff {
     * artifact), and the next round pays ONE full scan (digesting the new
     * snapshot) instead of the plain diff's two-scans-plus-full-join or
     * the self-contained prune's four scans. Rows enter the PK join only
-    * from dirty buckets. Same release obligation as [[diffPruned]]: the
-    * dirty-bucket set is checkpointed at call time and its blocks stay
-    * registered until the caller runs
-    * [[graft.functions.CheckpointUtil.releaseRegistered]] or
-    * [[graft.functions.Dedup.releaseCcLabels]] after consuming the
-    * result. */
+    * from dirty buckets. Eager like [[diffPruned]]: the supplied digests
+    * are validated and collected, and the dirty bucket ids computed on
+    * the driver, at call time; nothing to release. */
   def diffPrunedIncremental(before: DataFrame, beforeDigests: DataFrame,
                             after: DataFrame, pk: Seq[String],
                             buckets: Int = 4096): DataFrame =
-    prunedDiff(before, after,
-      dirtyBuckets(validateDigests(beforeDigests, colsTag(after.columns.toSeq, pk), buckets),
-        bucketDigests(after, pk, buckets)), pk, buckets)
+    diffPrunedIncremental(before, beforeDigests, after,
+      bucketDigests(after, pk, buckets).collect().toSeq, pk, buckets)
+
+  /** [[diffPrunedIncremental]] with the AFTER side's digests supplied too,
+    * as the collected rows of `bucketDigests(after, pk, buckets)` — for a
+    * caller that already holds them (the capture loop persists the same
+    * rows as its digest artifact), so `after` is digested once per round,
+    * not twice. */
+  private[graft] def diffPrunedIncremental(before: DataFrame, beforeDigests: DataFrame,
+                                           after: DataFrame, afterDigests: Seq[Row],
+                                           pk: Seq[String], buckets: Int): DataFrame = {
+    val prev = validateDigests(beforeDigests, colsTag(after.columns.toSeq, pk), buckets)
+      .select("_bkt", "_digest", "_n").collect().toSeq
+    prunedDiff(before, after, dirtyIds(prev, afterDigests), pk, buckets)
+  }
 
   /** Guard for persisted digest artifacts: a digest table built with a
     * different bucket count (or a different column list/order) than this
@@ -147,27 +167,24 @@ object SnapshotDiff {
   private def colsTag(cols: Seq[String], pk: Seq[String]): String =
     s"pk=${pk.mkString(",")};cols=${cols.mkString(",")}"
 
-  private def prunedDiff(before: DataFrame, after: DataFrame, dirty: DataFrame,
+  private def prunedDiff(before: DataFrame, after: DataFrame, dirty: Seq[Long],
                          pk: Seq[String], buckets: Int): DataFrame = {
-    // Materialize the dirty-bucket set ONCE (r17): both prune sides
-    // broadcast `dirty`, whose subtree is the two full digest scans —
-    // and the planner does not reuse the two broadcast exchanges, so
-    // without truncation every digest pass ran twice (q28's plan showed
-    // 6 source scans for a 4-scan algorithm). The set is ≤ `buckets`
-    // rows of one long — the bounded-index storage class — and at 100 TB
-    // this removes two full snapshot scans per pruned diff. Blocks
-    // register in the shared ledger drained by
-    // [[graft.functions.Dedup.releaseCcLabels]]; consume the returned
-    // frame before releasing. The diff becomes eager at call time (the
-    // digest aggregation runs when the frame is built), like the bloom
-    // sketch in [[graft.functions.Dedup.contaminationPairs]].
-    val (dirtyCp, blocks) =
-      graft.functions.CheckpointUtil.trackedLocalCheckpoint(dirty)
-    graft.functions.CheckpointUtil.register(blocks)
+    // the dirty set is at most `buckets` longs, already on the driver: a
+    // literal IN-set filter prunes both sides with no join, no broadcast
+    // exchange and no re-run of the digest passes (an empty set plans
+    // both sides as empty relations)
     def prune(df: DataFrame): DataFrame =
-      df.withColumn("_bkt", bucketOf(pk, buckets))
-        .join(broadcast(dirtyCp), "_bkt").drop("_bkt")
+      df.where(bucketOf(pk, buckets).isInCollection(dirty))
     diff(prune(before), prune(after), pk)
+  }
+
+  /** [[dirtyBuckets]] over collected digest rows whose leading columns are
+    * (`_bkt`, `_digest`, `_n`): the bucket ids whose digest or row count
+    * differs, or that exist on one side only. */
+  private def dirtyIds(before: Seq[Row], after: Seq[Row]): Seq[Long] = {
+    def cells(rows: Seq[Row]) = rows.map(r => r.getLong(0) -> ((r.get(1), r.get(2)))).toMap
+    val (b, a) = (cells(before), cells(after))
+    (b.keySet ++ a.keySet).filter(k => b.get(k) != a.get(k)).toSeq
   }
 
   private def bucketOf(pk: Seq[String], buckets: Int) =

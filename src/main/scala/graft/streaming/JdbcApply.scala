@@ -50,6 +50,45 @@ object JdbcApply {
   def apply(spec: Jdbc.ConnectionSpec, table: String, keyCols: Seq[String],
             orderCols: Seq[String] = Nil, numPartitions: Int = 8)
   : (DataFrame, Long) => Unit = { (batch: DataFrame, _: Long) =>
+    val Prepared(ordered, cols, nonKeys, hasBefore) = prepare(batch, keyCols, orderCols, numPartitions)
+    ordered.foreachPartition { rows: Iterator[Row] =>
+      if (rows.nonEmpty) {
+        val conn = Jdbc.connect(spec)
+        try applyPartition(conn, table, keyCols.toSeq, nonKeys.toSeq, cols.toSeq, rows, hasBefore)
+        finally conn.close()
+      }
+    }
+  }
+
+  /** [[apply]] with default ordering and partitioning as one call that
+    * returns the number of change rows it wrote, counted by the write
+    * pass itself: a caller that needs the count (the snapshot capture
+    * loop) computes its change set once, with no separate count job and
+    * no cache. Accumulator updates inside an action apply once per
+    * partition, so task retries do not double-count. */
+  private[graft] def applyCounted(spec: Jdbc.ConnectionSpec, table: String,
+                                  keyCols: Seq[String], batch: DataFrame): Long = {
+    val Prepared(ordered, cols, nonKeys, hasBefore) = prepare(batch, keyCols, Nil, 8)
+    val written = batch.sparkSession.sparkContext.longAccumulator("JdbcApply rows")
+    ordered.foreachPartition { rows: Iterator[Row] =>
+      if (rows.nonEmpty) {
+        var n = 0L
+        val conn = Jdbc.connect(spec)
+        try applyPartition(conn, table, keyCols, nonKeys, cols, rows.map { r => n += 1; r }, hasBefore)
+        finally conn.close()
+        written.add(n)
+      }
+    }
+    written.sum
+  }
+
+  /** The batch keyed, partitioned and ordered for the per-partition
+    * writes, plus the column roles those writes need. */
+  private final case class Prepared(ordered: DataFrame, cols: Seq[String],
+                                    nonKeys: Seq[String], hasBefore: Boolean)
+
+  private def prepare(batch: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
+                      numPartitions: Int): Prepared = {
     val cols = batch.columns.filter(c => !c.startsWith("_") && !c.startsWith(ChangeEnvelope.BeforePrefix))
     val nonKeys = cols.filterNot(keyCols.contains)
     val hasBefore = keyCols.forall(k => batch.columns.contains(ChangeEnvelope.BeforePrefix + k))
@@ -71,13 +110,7 @@ object JdbcApply {
       .select((batch.columns.map(col) :+ col("_seq") :+ struct(effKeys: _*).as("_gk")).toIndexedSeq: _*)
       .repartition(numPartitions, col("_gk"))
       .sortWithinPartitions(order.map(col): _*)
-    ordered.foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) {
-        val conn = Jdbc.connect(spec)
-        try applyPartition(conn, table, keyCols.toSeq, nonKeys.toSeq, cols.toSeq, rows, hasBefore)
-        finally conn.close()
-      }
-    }
+    Prepared(ordered, cols.toSeq, nonKeys.toSeq, hasBefore)
   }
 
   /** Rows apply in the resolved order: consecutive same-op rows batch into

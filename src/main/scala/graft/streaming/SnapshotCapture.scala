@@ -1,7 +1,10 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators.SnapshotDiff
 import graft.sources.Jdbc
@@ -18,9 +21,16 @@ import graft.sources.Jdbc
   * State layout (any Hadoop filesystem — local, HDFS, S3A):
   * {{{
   * stateDir/round_<n>/snapshot/   parquet image of the source at round n
+  * stateDir/round_<n>/schema      its schema as JSON, so the next round
+  *                                reads it without schema inference
   * stateDir/round_<n>/digests/    SnapshotDiff.bucketDigests of it
   * stateDir/round_<n>/_COMMIT     marker, written LAST by commit()
   * }}}
+  * One committed round is live at a time: each capture starts by deleting
+  * every other round directory (uncommitted crash garbage and superseded
+  * committed rounds), so the state is one snapshot plus the round in
+  * flight, not one snapshot per round ever captured. State written before
+  * the `schema` sidecar existed still reads (by inference).
   *
   * Delivery is AT-LEAST-ONCE with the same commit geometry as the
   * streaming engine's foreachBatch checkpoint (offsets commit AFTER the
@@ -38,12 +48,11 @@ object SnapshotCapture {
     * snapshot as the new baseline. Call `commit()` only after `changes`
     * has been fully applied/persisted downstream.
     *
-    * Storage note (r17): on a non-bootstrap round `changes` comes from
-    * the digest-pruned diff, whose dirty-bucket set is checkpointed and
-    * registered in the session ledger — after consuming `changes` and
-    * committing, call [[graft.functions.CheckpointUtil.releaseRegistered]]
-    * (the self-contained entries below do) so a long-lived capture loop
-    * never accumulates per-round bucket tables. */
+    * Storage note: `changes` is a lazy frame over this round's snapshot
+    * parquet and the previous round's; the next [[capture]] call on the
+    * same `stateDir` deletes the previous round, so consume `changes`
+    * before then. Nothing is cached or checkpointed, so there is nothing
+    * to release. */
   final case class CaptureRound(round: Long, changes: DataFrame, commit: () => Unit)
 
   /** Run one round against `source` (evaluated exactly once, into this
@@ -51,28 +60,44 @@ object SnapshotCapture {
     * live table, so mutations during the round cannot tear the image).
     * Bootstrap (no committed round yet): every row returns as an insert —
     * the initial-sync convention of the reference's snapshot-then-stream
-    * modes. */
+    * modes.
+    *
+    * Scheduled work of an incremental round: the snapshot write, ONE
+    * digest aggregation of it (collected — `buckets` rows — then written
+    * as the digest artifact and diffed on the driver against the
+    * previous round's), and the dirty-bucket diff itself. Both parquet
+    * reads name their schema (the previous round's `schema` sidecar, the
+    * digest schema), so no read runs a schema-inference job; a round
+    * without the sidecar falls back to inference. */
   def capture(spark: SparkSession, source: DataFrame, pk: Seq[String],
               stateDir: String, buckets: Int = 4096): CaptureRound = {
     val dir = new Path(stateDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val committed = listRounds(fs, dir)
-    sweepUncommitted(fs, dir, committed)
-    val round = committed.lastOption.map(_ + 1L).getOrElse(0L)
+    val latest = listRounds(fs, dir).lastOption
+    sweep(fs, dir, latest)
+    val round = latest.map(_ + 1L).getOrElse(0L)
     val roundDir = new Path(dir, s"round_$round")
     // ONE scan of the live source; everything downstream reads the image
-    source.write.mode("overwrite").parquet(new Path(roundDir, "snapshot").toString)
-    val cur = spark.read.parquet(new Path(roundDir, "snapshot").toString)
-    SnapshotDiff.bucketDigests(cur, pk, buckets)
+    val snapshot = new Path(roundDir, "snapshot").toString
+    source.write.mode("overwrite").parquet(snapshot)
+    val schema = StructType(source.schema.map(_.copy(nullable = true)))
+    writeSmallFile(fs, new Path(roundDir, "schema"), schema.json)
+    val cur = spark.read.schema(schema).parquet(snapshot)
+    val digests = SnapshotDiff.bucketDigests(cur, pk, buckets)
+    val digestRows = digests.collect().toSeq
+    spark.createDataFrame(digestRows.asJava, digests.schema).coalesce(1)
       .write.mode("overwrite").parquet(new Path(roundDir, "digests").toString)
-    val changes = committed.lastOption match {
+    val changes = latest match {
       case Some(prev) =>
         val prevDir = new Path(dir, s"round_$prev")
-        SnapshotDiff.diffPrunedIncremental(
-          spark.read.parquet(new Path(prevDir, "snapshot").toString),
-          spark.read.parquet(new Path(prevDir, "digests").toString),
-          cur, pk, buckets)
-      case None => SnapshotDiff.diff(cur.limit(0), cur, pk)
+        // a round written before the sidecar existed: infer both schemas
+        val prevSchema = readSmallFile(fs, new Path(prevDir, "schema"))
+          .map(DataType.fromJson(_).asInstanceOf[StructType])
+        def read(name: String, known: Option[StructType]): DataFrame =
+          known.fold(spark.read)(spark.read.schema).parquet(new Path(prevDir, name).toString)
+        SnapshotDiff.diffPrunedIncremental(read("snapshot", prevSchema),
+          read("digests", prevSchema.map(_ => digests.schema)), cur, digestRows, pk, buckets)
+      case None => SnapshotDiff.inserts(cur, pk)
     }
     CaptureRound(round, changes,
       () => { fs.create(new Path(roundDir, "_COMMIT"), true).close(); () })
@@ -81,28 +106,17 @@ object SnapshotCapture {
   /** One-call capture → apply → commit: runs [[capture]], pushes the
     * change set into `targetTable` through [[JdbcApply]]'s batched
     * prepared statements, commits the round, returns the number of
-    * changes applied. The full no-binlog replication loop as a single
-    * call — schedule it (cron, Airflow) and the target converges on the
-    * source every round. */
+    * changes applied — counted by the apply pass itself, so the change
+    * set is computed once. The full no-binlog replication loop as a
+    * single call — schedule it (cron, Airflow) and the target converges
+    * on the source every round. */
   def captureAndApply(spark: SparkSession, source: DataFrame, pk: Seq[String],
                       stateDir: String, target: Jdbc.ConnectionSpec,
                       targetTable: String, buckets: Int = 4096): Long = {
     val r = capture(spark, source, pk, stateDir, buckets)
-    // the change set is consumed twice (count + apply): pin it so the
-    // pruned diff's join does not run twice; released before returning
-    r.changes.persist()
-    try {
-      val n = r.changes.count()
-      JdbcApply(target, targetTable, pk)(r.changes, r.round)
-      r.commit()
-      n
-    } finally {
-      r.changes.unpersist(blocking = false)
-      // per-round epilogue: the change set is consumed, so the pruned
-      // diff's registered dirty-bucket blocks can be freed — a scheduled
-      // loop otherwise retains one bucket table per round
-      graft.functions.CheckpointUtil.releaseRegistered()
-    }
+    val n = JdbcApply.applyCounted(target, targetTable, pk, r.changes)
+    r.commit()
+    n
   }
 
   /** One capture round that also MAINTAINS an aggregation ladder
@@ -153,16 +167,18 @@ object SnapshotCapture {
         IncrementalAgg.advanceChanges(spark.read.parquet(prevLadder.toString),
           r.changes, keyCol, tsCol, valueCol, granularities.take(1)).head._2
     finest.write.mode("overwrite").parquet(new Path(roundDir, "ladder").toString)
-    val out = fs.create(new Path(roundDir, "ladder_meta"), true)
-    try out.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeSmallFile(fs, new Path(roundDir, "ladder_meta"), meta)
     r.commit()
-    // per-round epilogue: the change set has been folded and the ladder
-    // persisted — free the pruned diff's registered dirty-bucket blocks
-    graft.functions.CheckpointUtil.releaseRegistered()
     (r.round, IncrementalAgg.ladder(
       spark.read.parquet(new Path(roundDir, "ladder").toString),
       keyCol, granularities))
+  }
+
+  private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem, p: Path,
+                             text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
@@ -181,17 +197,17 @@ object SnapshotCapture {
       .filter(p => fs.exists(new Path(p, "_COMMIT")))
       .map(_.getName.stripPrefix("round_").toLong).sorted
 
-  /** Crash garbage: a round directory without its `_COMMIT` marker is a
-    * capture that died before (or during) apply — its change set was
-    * never acknowledged, so the files are dead and the round number will
-    * be reused by the re-capture. */
-  private def sweepUncommitted(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
-                               committed: Seq[Long]): Unit =
-    if (fs.exists(dir)) {
-      val keep = committed.toSet
+  /** Every round directory but the latest committed one is dead. A round
+    * without its `_COMMIT` marker is crash garbage: a capture that died
+    * before (or during) apply, whose change set was never acknowledged —
+    * its round number is reused by the re-capture. An older committed
+    * round is superseded: the crash-replay contract only ever diffs
+    * against the latest one. */
+  private def sweep(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
+                    latest: Option[Long]): Unit =
+    if (fs.exists(dir))
       fs.listStatus(dir).toSeq.map(_.getPath)
         .filter(_.getName.matches("round_\\d+"))
-        .filterNot(p => keep.contains(p.getName.stripPrefix("round_").toLong))
+        .filterNot(p => latest.contains(p.getName.stripPrefix("round_").toLong))
         .foreach(p => fs.delete(p, true))
-    }
 }

@@ -161,9 +161,9 @@ class IncrementalAggSpec extends SparkSpec {
   }
 
   test("capture-loop epilogue: a committed round retains no registered checkpoint blocks") {
-    // the digest-pruned diff checkpoints its dirty-bucket set and
-    // registers the blocks; the self-contained capture entries release
-    // them per round, so a scheduled loop never accumulates bucket tables
+    // the digest-pruned diff prunes by dirty bucket ids collected on the
+    // driver and registers no blocks, so a scheduled loop never
+    // accumulates bucket tables
     import graft.streaming.SnapshotCapture
     graft.functions.Dedup.releaseCcLabels() // baseline: drain prior tests
     val grans = Seq("b" -> 100L)

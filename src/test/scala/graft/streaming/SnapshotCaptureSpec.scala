@@ -1,0 +1,202 @@
+package graft.streaming
+
+import java.nio.file.Files
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+
+import graft.{Cdc, SparkSpec}
+import graft.functions.CheckpointUtil
+import graft.operators.SnapshotDiff
+
+/** The snapshot capture loop's per-round work, pinned by deterministic
+  * counts (jobs, call sites, plan nodes, registered blocks, round
+  * directories) rather than wall time, plus its state-layout
+  * compatibility and schema-drift failure modes. Round-trip and crash
+  * replay are pinned in CdcSpec. */
+class SnapshotCaptureSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def stateDir(tag: String): String = Files.createTempDirectory(tag).toString
+
+  private def rounds(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("round_")).sorted.toSeq
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
+
+  /** A Derby source table CSRC and target CTGT, recreated for one case. */
+  private def withDerby(db: String)(body: (java.sql.Connection, Map[String, String],
+      graft.sources.Jdbc.ConnectionSpec) => Unit): Unit = {
+    System.setProperty("derby.system.home", "/tmp/graft-derby")
+    Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
+    val plain = s"jdbc:derby:/tmp/graft-derby/$db"
+    val conn = java.sql.DriverManager.getConnection(plain + ";create=true")
+    try {
+      for (t <- Seq("CSRC", "CTGT")) {
+        try conn.createStatement().execute(s"DROP TABLE $t") catch { case _: Exception => }
+        conn.createStatement().execute(s"CREATE TABLE $t (ID INT, NAME VARCHAR(32), V DOUBLE)")
+      }
+      conn.createStatement().execute(
+        "INSERT INTO CSRC VALUES " + (1 to 40).map(i => s"($i,'n$i',$i.5)").mkString(", "))
+      body(conn, Map("url" -> plain, "table.name" -> "CSRC", "polling.column" -> "id",
+        "numpartitions" -> "2"), graft.sources.Jdbc.ConnectionSpec(plain, Map.empty))
+    } finally conn.close()
+  }
+
+  private def table(conn: java.sql.Connection, t: String): Seq[(Int, String, Double)] = {
+    val rs = conn.createStatement().executeQuery(s"SELECT ID, NAME, V FROM $t ORDER BY ID")
+    Iterator.continually(rs).takeWhile(_.next())
+      .map(r => (r.getInt(1), r.getString(2), r.getDouble(3))).toSeq
+  }
+
+  /** Long call sites of the jobs `body` starts (the listener bus is
+    * drained before reading). */
+  private def jobSites(body: => Unit): Seq[String] = {
+    val sites = ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = sites.synchronized {
+        sites += j.stageInfos.sortBy(_.stageId).lastOption.map(_.details).getOrElse("")
+      }
+    }
+    // LiveListenerBus.waitUntilEmpty is private[spark] (public bytecode)
+    def drain(): Unit = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+        .invoke(bus, java.lang.Long.valueOf(30000L))
+    }
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    try { body; drain() } finally spark.sparkContext.removeSparkListener(listener)
+    sites.synchronized(sites.toList)
+  }
+
+  test("bootstrap projection equals the diff against an empty snapshot: names, order, types, rows") {
+    val dir = stateDir("cap_boot")
+    // pk listed out of column order, nulls in key and non-key columns
+    Seq((Option("x"), 1L, Option(2.5), "a"), (None, 2L, None, "b"), (Option("z"), 3L, Option(0.0), "c"))
+      .toDF("s", "id", "v", "k").write.parquet(dir + "/snap")
+    val snap = spark.read.parquet(dir + "/snap")
+    val pk = Seq("k", "id")
+    val old = SnapshotDiff.diff(snap.limit(0), snap, pk)
+    val now = SnapshotDiff.inserts(snap, pk)
+    assert(now.schema === old.schema)
+    assert(now.columns.toSeq === Seq("k", "id", "s", "v", "before_s", "before_v", "_op"))
+    assert(rows(now.orderBy("id")) === rows(old.orderBy("id")))
+    intercept[IllegalArgumentException](SnapshotDiff.inserts(snap, Seq("nope")))
+  }
+
+  test("an incremental round: <= 9 jobs, no parquet schema inference, 0 changes when quiet") {
+    withDerby("cap_jobs") { (conn, opts, spec) =>
+      val state = stateDir("cap_jobs_state")
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 40L)
+      conn.createStatement().execute("UPDATE CSRC SET V = 9.0 WHERE ID = 2")
+      conn.createStatement().execute("DELETE FROM CSRC WHERE ID = 3")
+      conn.createStatement().execute("INSERT INTO CSRC VALUES (41,'d',4.0)")
+      var applied = -1L
+      val sites = jobSites {
+        applied = Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT")
+      }
+      assert(applied === 3L && table(conn, "CTGT") === table(conn, "CSRC"))
+      assert(sites.size <= 9, s"${sites.size} jobs in one incremental round:\n" +
+        sites.map(_.linesIterator.take(2).mkString(" | ")).mkString("\n"))
+      // every parquet read names its schema: no read starts a job
+      val reads = sites.filter(_.contains("DataFrameReader.parquet"))
+      assert(reads.isEmpty, s"schema-inference jobs:\n${reads.mkString("\n\n")}")
+      // quiet round: nothing dirty, nothing applied
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 0L)
+      assert(table(conn, "CTGT") === table(conn, "CSRC"))
+    }
+  }
+
+  test("pruned diffs plan no broadcast exchange and register no checkpoint blocks") {
+    val before = (1L to 500L).map(i => (i, s"s$i")).toDF("id", "s")
+    val after = (2L to 501L).map(i => (i, if (i == 7) "CHANGED" else s"s$i")).toDF("id", "s")
+    val registered = CheckpointUtil.registeredCount
+    val pruned = SnapshotDiff.diffPruned(before, after, Seq("id"), 64)
+    val incr = SnapshotDiff.diffPrunedIncremental(before,
+      SnapshotDiff.bucketDigests(before, Seq("id"), 64), after, Seq("id"), 64)
+    for (d <- Seq(pruned, incr)) {
+      val p = d.queryExecution.executedPlan.toString
+      assert(!p.contains("BroadcastExchange"), s"the dirty set must not broadcast:\n$p")
+      assert(rows(d.select("id", "_op").orderBy("id")) ===
+        Seq(Seq(1L, "delete"), Seq(7L, "update"), Seq(501L, "insert")))
+    }
+    assert(CheckpointUtil.registeredCount === registered)
+  }
+
+  test("a capture round leaves other code's registered checkpoint blocks alone") {
+    withDerby("cap_ledger") { (conn, opts, spec) =>
+      val state = stateDir("cap_ledger_state")
+      Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT")
+      // a returned frame backed by registered blocks, as activityCosineTopK leaves one
+      val (held, blocks) = CheckpointUtil.trackedLocalCheckpoint(
+        spark.range(0, 100).toDF("x").where($"x" % 3 === 0))
+      CheckpointUtil.register(blocks)
+      try {
+        val before = CheckpointUtil.registeredCount
+        conn.createStatement().execute("UPDATE CSRC SET NAME = 'u' WHERE ID = 5")
+        assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 1L)
+        assert(CheckpointUtil.registeredCount === before)
+        assert(held.count() === 34L)
+      } finally CheckpointUtil.releaseRegistered()
+    }
+  }
+
+  test("superseded rounds retire: after three committed rounds only the last one stays live") {
+    val dir = stateDir("cap_retire")
+    def src(n: Int) = (1 to 20).map(i => (i.toLong, s"v$i-${if (i <= n) "x" else ""}")).toDF("id", "s")
+    for (n <- 0 until 3) {
+      val r = SnapshotCapture.capture(spark, src(n), Seq("id"), dir, 16)
+      assert(r.round === n.toLong)
+      // the round in flight and the baseline it diffs against, nothing older
+      assert(rounds(dir) === (math.max(0, n - 1) to n).map(i => s"round_$i"))
+      assert(r.changes.count() === (if (n == 0) 20L else 1L))
+      r.commit()
+    }
+    // three committed rounds: the next capture deletes every round but the
+    // last committed one, its baseline, which stays readable until then
+    val r3 = SnapshotCapture.capture(spark, src(3), Seq("id"), dir, 16)
+    assert(rounds(dir) === Seq("round_2", "round_3"))
+    assert(r3.changes.count() === 1L)
+  }
+
+  test("state without the schema sidecar (earlier layout) captures and converges") {
+    withDerby("cap_compat") { (conn, opts, spec) =>
+      val state = stateDir("cap_compat_state")
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 40L)
+      val fs = new Path(state).getFileSystem(spark.sessionState.newHadoopConf())
+      assert(fs.delete(new Path(state, "round_0/schema"), false))
+      conn.createStatement().execute("UPDATE CSRC SET V = 0.25 WHERE ID < 4")
+      conn.createStatement().execute("DELETE FROM CSRC WHERE ID = 30")
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 4L)
+      assert(table(conn, "CTGT") === table(conn, "CSRC"))
+      // the new round writes the sidecar again
+      assert(fs.exists(new Path(state, "round_1/schema")))
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 0L)
+    }
+  }
+
+  test("a source column added between rounds fails loudly, with or without the sidecar") {
+    for (sidecar <- Seq(true, false)) {
+      val dir = stateDir("cap_drift")
+      val r0 = SnapshotCapture.capture(spark,
+        (1 to 10).map(i => (i.toLong, s"s$i")).toDF("id", "s"), Seq("id"), dir, 16)
+      r0.commit()
+      if (!sidecar) new java.io.File(dir, "round_0/schema").delete()
+      val e = intercept[Exception] {
+        SnapshotCapture.capture(spark,
+          (1 to 10).map(i => (i.toLong, s"s$i", i)).toDF("id", "s", "extra"), Seq("id"), dir, 16)
+          .changes.collect()
+      }
+      def chain(t: Throwable): String =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).mkString(" | ")
+      val msg = chain(e)
+      assert(msg.contains("not be comparable") || msg.contains("snapshots must share a schema"),
+        s"sidecar=$sidecar: $msg")
+    }
+  }
+}
