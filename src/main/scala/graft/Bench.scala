@@ -49,8 +49,10 @@ import org.apache.spark.sql.SparkSession
   *     committed previous BENCH_r*.json (or SPARK_GRAFT_BENCH_PRIOR) are
   *     listed in `"deviant_vs_prior"` — on unchanged code that flag
   *     means "re-run before committing".
-  *   - [[graft.functions.Dedup.releaseCcLabels]] between queries, so CC
-  *     checkpoint blocks never occupy executor storage across queries. */
+  *   - [[graft.functions.CheckpointUtil.releaseRegistered]] between
+  *     queries, so the checkpoint blocks behind returned frames (CC
+  *     labels, the q36/q37 activity cells and index) never occupy
+  *     executor storage across queries. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
@@ -161,7 +163,7 @@ object Bench {
     sentinel() // JIT the probe itself before any timed use
     names.foreach(execOnce(_, "/root/testdata/sf0.001")) // warm-up
     spark.catalog.clearCache() // drop warm-up caches: measure steady state
-    graft.functions.Dedup.releaseCcLabels()
+    graft.functions.CheckpointUtil.releaseRegistered()
     val sentinels = new scala.collection.mutable.ArrayBuffer[Double]
     val ioSentinels = new scala.collection.mutable.ArrayBuffer[Double]
     val samples = scala.collection.mutable.Map.empty[String, List[(Double, Double)]]
@@ -184,7 +186,7 @@ object Bench {
         val t = execOnce(n, sfDir)
         println(f"[benchsample] $n $t%.4f $seg%.4f")
         spark.catalog.clearCache() // operator caches must not leak across runs
-        graft.functions.Dedup.releaseCcLabels()
+        graft.functions.CheckpointUtil.releaseRegistered()
         samples(n) = (t, seg) :: samples.getOrElse(n, Nil)
       }
     }

@@ -48,28 +48,26 @@ object CheckpointUtil {
     (cp, out.toSeq)
   }
 
-  /** Session-wide ledger for checkpoint blocks that back a RETURNED
-    * frame (freeing them inside the producing call would make the
-    * result unrecomputable — lineage is truncated). Registered blocks
-    * are drained by [[releaseRegistered]]. The CC label ledger in
-    * [[Dedup]] predates this one and keeps its own buffer; both drain
-    * through [[Dedup.releaseCcLabels]], which delegates here. */
+  /** The one session-wide ledger for checkpoint blocks that back a
+    * RETURNED frame: the [[Dedup.connectedComponents]] label table on
+    * its distributed route, the q36 activity cells and the q37
+    * activity-LSH index. Freeing them inside the producing call would
+    * make the result unrecomputable (lineage is truncated), so the
+    * producer registers them and [[releaseRegistered]] drains them. */
   private val ledger = scala.collection.mutable.Buffer[RDD[_]]()
 
   private[graft] def register(blocks: Seq[RDD[_]]): Unit =
     ledger.synchronized { ledger ++= blocks }
 
-  /** Free every checkpoint block registered by a returned frame —
-    * the neutral release hook for callers of ANY module that uses the
-    * ledger (activityCosineTopKLsh / activityCosineTopK indexes;
-    * [[Dedup.releaseCcLabels]] remains the historical alias and
-    * additionally drains the CC label ledger). SESSION-GLOBAL and
-    * ordering-sensitive: call it only once every previously returned
-    * registered frame has been fully consumed (written / aggregated /
-    * collected) — their lineage is truncated, so executing a still-held
-    * result frame after release fails unrecoverably. Harnesses call this
-    * between queries. A loop must not call it from a per-round epilogue:
-    * it would free blocks of frames other code still holds. */
+  /** Free every registered checkpoint block — the one drain, returning
+    * executor storage to baseline. SESSION-GLOBAL: call it only once
+    * every previously returned registered frame (and every frame derived
+    * from one) has been fully consumed (written / aggregated /
+    * collected); executing such a frame after the release fails
+    * unrecoverably. Only harness epilogues between queries (Bench,
+    * ScaleSmoke) and specs call it. A loop must not call it from a
+    * per-round epilogue: it would free blocks of frames other code
+    * still holds. */
   def releaseRegistered(): Unit = ledger.synchronized {
     ledger.foreach(_.unpersist(blocking = false))
     ledger.clear()

@@ -611,12 +611,13 @@ object Dedup {
     * materializes, and the edge table on every exit path, so a call
     * leaves behind only the blocks backing the RETURNED label table (its
     * lineage is truncated; freeing it would make the result
-    * unrecomputable). Those final blocks are registered in a
-    * session-wide ledger: call [[releaseCcLabels]] after the result has
-    * been fully consumed (written / aggregated / joined away) to return
-    * executor storage to baseline — repeated dedup passes in a
-    * long-lived session (a bench session runs ~8 CC passes) otherwise
-    * accumulate one vertex-set table per call.
+    * unrecomputable). Those final blocks are registered in the one
+    * session-wide ledger, [[CheckpointUtil.register]]: the harness drains
+    * it with [[CheckpointUtil.releaseRegistered]] once the result has
+    * been fully consumed (written / aggregated / joined away) — repeated
+    * dedup passes in a long-lived session (a bench session runs ~8 CC
+    * passes) otherwise accumulate one vertex-set table per call. The
+    * driver fast path below leaves nothing registered.
     *
     * Durability: localCheckpoint truncates lineage and stores blocks on
     * executors, so on a cluster an executor loss mid-query fails the CC
@@ -629,9 +630,7 @@ object Dedup {
     // join, and without truncation each round would re-derive the whole
     // upstream pair pipeline (for LSH pairs that is the full shingle +
     // signature + verify dag — measured 3x the entire query cost)
-    val (edges, edgeBlocks) = trackedLocalCheckpoint(
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+    val (edges, edgeBlocks) = doubledEdges(pairs)
     // Size-gated driver fast path (r16): a BOUNDED Long-id edge list
     // union-finds on the driver in one collect instead of 4-6
     // driver-synchronous checkpoint/probe jobs — at sf0.1 the whole
@@ -695,7 +694,7 @@ object Dedup {
     * body; [[ccDistributed]] is the spec hook that forces this route). */
   private def ccLoop(edges: DataFrame, edgeBlocks: Seq[RDD[_]],
                      maxIters: Int): DataFrame = {
-    var (labels, labelBlocks) = trackedLocalCheckpoint(edges
+    var (labels, labelBlocks) = CheckpointUtil.trackedLocalCheckpoint(edges
       .select(col("src").as("doc_id"), least(col("src"), col("dst")).as("label"))
       .groupBy("doc_id").agg(min("label").as("label")))
     var iter = 0
@@ -721,7 +720,7 @@ object Dedup {
         // corrupting the carry) — so the convergence probe is a filter
         // over the checkpointed result, no extra join
         val nullOld = lit(null).cast(labels.schema("label").dataType)
-        val (next, nextBlocks) = trackedLocalCheckpoint(
+        val (next, nextBlocks) = CheckpointUtil.trackedLocalCheckpoint(
           labels.withColumn("_old", col("label"))
             .unionByName(prop.withColumn("_old", nullOld))
             .unionByName(jump.withColumn("_old", nullOld))
@@ -756,7 +755,7 @@ object Dedup {
         s"connectedComponents did not converge within $maxIters rounds; " +
           "raise maxIters (rounds needed grow only logarithmically with " +
           "component diameter)")
-    ccLedger.synchronized { ccLedger ++= labelBlocks }
+    CheckpointUtil.register(labelBlocks)
     labels.withColumnRenamed("label", "canonical_id")
   }
 
@@ -767,41 +766,17 @@ object Dedup {
     * graphs and is parity-pinned against it). */
   private[functions] def ccDistributed(pairs: DataFrame,
                                        maxIters: Int = 20): DataFrame = {
-    val (edges, edgeBlocks) = trackedLocalCheckpoint(
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+    val (edges, edgeBlocks) = doubledEdges(pairs)
     ccLoop(edges, edgeBlocks, maxIters)
   }
 
-  /** See [[CheckpointUtil.trackedLocalCheckpoint]] — the shared
-    * iterative-loop device (moved there when the BPE merge loop became
-    * its second user). */
-  private def trackedLocalCheckpoint(df: DataFrame): (DataFrame, Seq[RDD[_]]) =
-    CheckpointUtil.trackedLocalCheckpoint(df)
-
-  /** Final checkpointed label tables of every [[connectedComponents]]
-    * call in this JVM — everything else the algorithm pins is freed
-    * inside the call itself. */
-  private val ccLedger = scala.collection.mutable.Buffer[RDD[_]]()
-
-  /** Free the checkpoint blocks behind the label tables returned by ALL
-    * previous [[connectedComponents]] calls, returning executor storage
-    * to baseline. Only call once those results (and every frame derived
-    * from them — [[nearDupClusters]] output, keeper selections) have been
-    * fully consumed: their lineage is truncated, so a released result can
-    * never be recomputed. The bench/smoke harnesses call this between
-    * timed queries; a long-lived ingest session should call it at the end
-    * of each dedup pass. */
-  def releaseCcLabels(): Unit = {
-    ccLedger.synchronized {
-      ccLedger.foreach(_.unpersist(blocking = false))
-      ccLedger.clear()
-    }
-    // r16: other operators (the q37 activity-LSH index) register their
-    // returned-frame checkpoint blocks in the shared CheckpointUtil
-    // ledger; this call is the one release hook every harness invokes
-    CheckpointUtil.releaseRegistered()
-  }
+  /** The undirected edge list `(src, dst) ∪ (dst, src)` of a pair table,
+    * checkpointed, plus the blocks backing it (both CC routes free them
+    * on exit). */
+  private def doubledEdges(pairs: DataFrame): (DataFrame, Seq[RDD[_]]) =
+    CheckpointUtil.trackedLocalCheckpoint(
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
 
   /** Near-dup clusters end-to-end: [[minhashLsh]] pairs →
     * [[connectedComponents]] → one row per clustered doc with its

@@ -464,10 +464,9 @@ object Similarity {
     * aggregation and checkpoints the activity cells when the frame is
     * built, and registers those checkpoint blocks in the session-wide
     * ledger. The caller must free them with
-    * [[CheckpointUtil.releaseRegistered]] (or [[Dedup.releaseCcLabels]],
-    * which also drains it) once the returned frame is fully consumed;
-    * its lineage is truncated, so a frame executed after the release
-    * fails. */
+    * [[CheckpointUtil.releaseRegistered]] once the returned frame is
+    * fully consumed; its lineage is truncated, so a frame executed after
+    * the release fails. */
   def activityCosineTopK(events: DataFrame, keyCol: String, tsCol: String,
                          hourUs: Long, queryPred: Column, k: Int,
                          salts: Int = 1, bins: Int = 24): DataFrame = {
@@ -483,7 +482,7 @@ object Similarity {
     // 100 TB this replaces 4 full event-corpus scans per query with one;
     // locally it measures a wash-to-slight-win (min-of-8, OPTIMIZATION_r17.md §2:
     // 0.61 → 0.59 s — the corpus aggregation is cheap at sf0.1). Blocks
-    // register in the shared ledger drained by [[Dedup.releaseCcLabels]]
+    // register in the ledger drained by [[CheckpointUtil.releaseRegistered]]
     // — consume the returned frame before releasing (lineage is
     // truncated; a released result cannot be recomputed). Construction
     // is eager from here on (the checkpoint runs the events aggregation
@@ -659,7 +658,7 @@ object Similarity {
     // persists to parquet via activityLshIndexMerge), so materializing
     // it is the CC-labels storage class, and at 100 TB it replaces
     // repeated full event-corpus scans with one. Blocks are registered
-    // in the shared ledger drained by [[Dedup.releaseCcLabels]].
+    // in the ledger drained by [[CheckpointUtil.releaseRegistered]].
     // Measured (sf0.1 min-of-5, OPTIMIZATION_r16.md §5): 1.08 → 0.50 s, output
     // row-identical. Durability: executor-loss makes the truncated-
     // lineage index unrecomputable → query-level retry; the bounded-

@@ -50,46 +50,19 @@ object JdbcApply {
   def apply(spec: Jdbc.ConnectionSpec, table: String, keyCols: Seq[String],
             orderCols: Seq[String] = Nil, numPartitions: Int = 8)
   : (DataFrame, Long) => Unit = { (batch: DataFrame, _: Long) =>
-    val Prepared(ordered, cols, nonKeys, hasBefore) = prepare(batch, keyCols, orderCols, numPartitions)
-    ordered.foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) {
-        val conn = Jdbc.connect(spec)
-        try applyPartition(conn, table, keyCols.toSeq, nonKeys.toSeq, cols.toSeq, rows, hasBefore)
-        finally conn.close()
-      }
-    }
+    write(spec, table, keyCols, batch, orderCols, numPartitions); ()
   }
 
-  /** [[apply]] with default ordering and partitioning as one call that
-    * returns the number of change rows it wrote, counted by the write
-    * pass itself: a caller that needs the count (the snapshot capture
-    * loop) computes its change set once, with no separate count job and
-    * no cache. Accumulator updates inside an action apply once per
-    * partition, so task retries do not double-count. */
-  private[graft] def applyCounted(spec: Jdbc.ConnectionSpec, table: String,
-                                  keyCols: Seq[String], batch: DataFrame): Long = {
-    val Prepared(ordered, cols, nonKeys, hasBefore) = prepare(batch, keyCols, Nil, 8)
-    val written = batch.sparkSession.sparkContext.longAccumulator("JdbcApply rows")
-    ordered.foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) {
-        var n = 0L
-        val conn = Jdbc.connect(spec)
-        try applyPartition(conn, table, keyCols, nonKeys, cols, rows.map { r => n += 1; r }, hasBefore)
-        finally conn.close()
-        written.add(n)
-      }
-    }
-    written.sum
-  }
-
-  /** The batch keyed, partitioned and ordered for the per-partition
-    * writes, plus the column roles those writes need. */
-  private final case class Prepared(ordered: DataFrame, cols: Seq[String],
-                                    nonKeys: Seq[String], hasBefore: Boolean)
-
-  private def prepare(batch: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
-                      numPartitions: Int): Prepared = {
-    val cols = batch.columns.filter(c => !c.startsWith("_") && !c.startsWith(ChangeEnvelope.BeforePrefix))
+  /** The write behind [[apply]], as one call that returns the number of
+    * change rows it applied, counted by the write pass itself: a caller
+    * that needs the count (the snapshot capture loop) computes its change
+    * set once, with no separate count job and no cache. Accumulator
+    * updates inside an action apply once per partition, so task retries
+    * do not double-count. */
+  private[graft] def write(spec: Jdbc.ConnectionSpec, table: String, keyCols: Seq[String],
+                           batch: DataFrame, orderCols: Seq[String] = Nil,
+                           numPartitions: Int = 8): Long = {
+    val cols = batch.columns.toSeq.filter(c => !c.startsWith("_") && !c.startsWith(ChangeEnvelope.BeforePrefix))
     val nonKeys = cols.filterNot(keyCols.contains)
     val hasBefore = keyCols.forall(k => batch.columns.contains(ChangeEnvelope.BeforePrefix + k))
     val hasAfter = keyCols.forall(batch.columns.contains)
@@ -110,7 +83,15 @@ object JdbcApply {
       .select((batch.columns.map(col) :+ col("_seq") :+ struct(effKeys: _*).as("_gk")).toIndexedSeq: _*)
       .repartition(numPartitions, col("_gk"))
       .sortWithinPartitions(order.map(col): _*)
-    Prepared(ordered, cols.toSeq, nonKeys.toSeq, hasBefore)
+    val written = batch.sparkSession.sparkContext.longAccumulator("JdbcApply rows")
+    ordered.foreachPartition { rows: Iterator[Row] =>
+      if (rows.nonEmpty) {
+        val conn = Jdbc.connect(spec)
+        try written.add(applyPartition(conn, table, keyCols, nonKeys, cols, rows, hasBefore))
+        finally conn.close()
+      }
+    }
+    written.sum
   }
 
   /** Rows apply in the resolved order: consecutive same-op rows batch into
@@ -118,10 +99,11 @@ object JdbcApply {
     * a delete(k) followed by insert(k) re-creation lands in that order
     * (per-op regrouping would silently corrupt such interleavings).
     * Statements are prepared lazily: an all-key table has no valid UPDATE
-    * statement, which must not break insert/delete-only batches. */
+    * statement, which must not break insert/delete-only batches. Returns
+    * the number of rows applied. */
   private def applyPartition(conn: Connection, table: String, keys: Seq[String],
                              nonKeys: Seq[String], cols: Seq[String], rows: Iterator[Row],
-                             deleteByBefore: Boolean): Unit = {
+                             deleteByBefore: Boolean): Long = {
     lazy val ins = conn.prepareStatement(
       s"INSERT INTO $table (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})")
     lazy val upd = {
@@ -135,10 +117,11 @@ object JdbcApply {
 
     var pending: PreparedStatement = null
     var pendingN = 0
+    var applied = 0L
     def flush(): Unit = if (pendingN > 0) { pending.executeBatch(); pendingN = 0 }
     def enqueue(ps: PreparedStatement): Unit = {
       if (!(ps eq pending)) { flush(); pending = ps }
-      ps.addBatch(); pendingN += 1
+      ps.addBatch(); pendingN += 1; applied += 1
     }
     rows.foreach { r =>
       r.getAs[String]("_op") match {
@@ -159,5 +142,6 @@ object JdbcApply {
       }
     }
     flush()
+    applied
   }
 }

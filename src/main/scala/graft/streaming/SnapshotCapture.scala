@@ -80,7 +80,7 @@ object SnapshotCapture {
     // ONE scan of the live source; everything downstream reads the image
     val snapshot = new Path(roundDir, "snapshot").toString
     source.write.mode("overwrite").parquet(snapshot)
-    val schema = StructType(source.schema.map(_.copy(nullable = true)))
+    val schema = nullable(source.schema)
     writeSmallFile(fs, new Path(roundDir, "schema"), schema.json)
     val cur = spark.read.schema(schema).parquet(snapshot)
     val digests = SnapshotDiff.bucketDigests(cur, pk, buckets)
@@ -91,12 +91,10 @@ object SnapshotCapture {
       case Some(prev) =>
         val prevDir = new Path(dir, s"round_$prev")
         // a round written before the sidecar existed: infer both schemas
-        val prevSchema = readSmallFile(fs, new Path(prevDir, "schema"))
-          .map(DataType.fromJson(_).asInstanceOf[StructType])
-        def read(name: String, known: Option[StructType]): DataFrame =
-          known.fold(spark.read)(spark.read.schema).parquet(new Path(prevDir, name).toString)
-        SnapshotDiff.diffPrunedIncremental(read("snapshot", prevSchema),
-          read("digests", prevSchema.map(_ => digests.schema)), cur, digestRows, pk, buckets)
+        val prevSchema = readSmallFile(fs, new Path(prevDir, "schema")).map(schemaOf)
+        SnapshotDiff.diffPrunedIncremental(read(spark, new Path(prevDir, "snapshot"), prevSchema),
+          read(spark, new Path(prevDir, "digests"), prevSchema.map(_ => digests.schema)),
+          cur, digestRows, pk, buckets)
       case None => SnapshotDiff.inserts(cur, pk)
     }
     CaptureRound(round, changes,
@@ -114,7 +112,7 @@ object SnapshotCapture {
                       stateDir: String, target: Jdbc.ConnectionSpec,
                       targetTable: String, buckets: Int = 4096): Long = {
     val r = capture(spark, source, pk, stateDir, buckets)
-    val n = JdbcApply.applyCounted(target, targetTable, pk, r.changes)
+    val n = JdbcApply.write(target, targetTable, pk, r.changes)
     r.commit()
     n
   }
@@ -136,7 +134,12 @@ object SnapshotCapture {
     *
     * 100 TB shape: round 0 pays the one full scan every capture mode
     * pays; every later round pays its change set plus a cell-sized
-    * merge — the aggregation ladder rides the capture loop for free. */
+    * merge — the aggregation ladder rides the capture loop for free.
+    *
+    * Every parquet read names its schema — the snapshot its round's
+    * `schema` sidecar, the ladder the schema stored on the second line
+    * of `ladder_meta` — so no read runs a schema-inference job; state
+    * written without them falls back to inference. */
   def captureIntoLadder(spark: SparkSession, source: DataFrame, pk: Seq[String],
                         stateDir: String, keyCol: String, tsCol: String,
                         valueCol: String, granularities: Seq[(String, Long)],
@@ -157,22 +160,38 @@ object SnapshotCapture {
     // snapshot instead.
     val meta = s"grain=${granularities.head._1}:${granularities.head._2};" +
       s"key=$keyCol;ts=$tsCol;value=$valueCol"
-    val prevMeta = readSmallFile(fs, new Path(prevRound, "ladder_meta"))
+    val prevLines = readSmallFile(fs, new Path(prevRound, "ladder_meta"))
+      .map(_.split("\n", 2))
+    val prevMeta = prevLines.map(_.head)
     val finest =
       if (r.round == 0L || !fs.exists(prevLadder) || !prevMeta.contains(meta))
         IncrementalAgg.rollup(
-          spark.read.parquet(new Path(roundDir, "snapshot").toString),
+          read(spark, new Path(roundDir, "snapshot"),
+            readSmallFile(fs, new Path(roundDir, "schema")).map(schemaOf)),
           keyCol, tsCol, valueCol, granularities.take(1)).head._2
       else
-        IncrementalAgg.advanceChanges(spark.read.parquet(prevLadder.toString),
+        IncrementalAgg.advanceChanges(
+          read(spark, prevLadder, prevLines.flatMap(_.lift(1)).map(schemaOf)),
           r.changes, keyCol, tsCol, valueCol, granularities.take(1)).head._2
-    finest.write.mode("overwrite").parquet(new Path(roundDir, "ladder").toString)
-    writeSmallFile(fs, new Path(roundDir, "ladder_meta"), meta)
+    val ladder = new Path(roundDir, "ladder")
+    val ladderSchema = nullable(finest.schema)
+    finest.write.mode("overwrite").parquet(ladder.toString)
+    writeSmallFile(fs, new Path(roundDir, "ladder_meta"), meta + "\n" + ladderSchema.json)
     r.commit()
-    (r.round, IncrementalAgg.ladder(
-      spark.read.parquet(new Path(roundDir, "ladder").toString),
-      keyCol, granularities))
+    (r.round, IncrementalAgg.ladder(read(spark, ladder, Some(ladderSchema)), keyCol, granularities))
   }
+
+  /** Parquet at `p`, read with `schema` when it is known (no
+    * schema-inference job) and by inference otherwise. */
+  private def read(spark: SparkSession, p: Path, schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(p.toString)
+
+  private def schemaOf(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
+
+  /** `s` as a parquet read reports it: every column nullable. */
+  private def nullable(s: StructType): StructType =
+    StructType(s.map(_.copy(nullable = true)))
 
   private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem, p: Path,
                              text: String): Unit = {

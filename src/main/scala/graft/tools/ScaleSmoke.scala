@@ -784,7 +784,7 @@ object ScaleSmoke {
       if (deep400Factors.nonEmpty && deepFactors.contains(100))
         semDedupTwoPair(100)
       deep400Factors.foreach(deep400Suite)
-      graft.functions.Dedup.releaseCcLabels()
+      graft.functions.CheckpointUtil.releaseRegistered()
     }
 
     spark.stop()

@@ -130,7 +130,7 @@ class DedupSpec extends SparkSpec {
     val fast = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
     val loop = Dedup.ccDistributed(pairs).as[(Long, Long)].collect().toMap
     assert(fast === loop)
-    graft.functions.Dedup.releaseCcLabels()
+    CheckpointUtil.releaseRegistered()
   }
 
   test("connectedComponents handles non-numeric ids (typed null carry, not a long sentinel)") {
@@ -304,16 +304,17 @@ class DedupSpec extends SparkSpec {
     assert(got.nonEmpty, "fixture must contain cross-split near-dups")
   }
 
-  test("repeated nearDupClusters + releaseCcLabels returns executor storage to baseline") {
+  test("repeated nearDupClusters + releaseRegistered returns executor storage to baseline") {
     // the round-7 finding: every connectedComponents call localCheckpoints
     // edges + one label table per round and never unpersisted any — ~8 CC
     // runs per bench session of permanently pinned blocks. The fix frees
-    // intermediates inside the call; the returned table's blocks go to a
-    // ledger drained by releaseCcLabels. Assert on getPersistentRDDs (the
-    // only view that sees checkpoint blocks — the CacheManager doesn't).
-    Dedup.releaseCcLabels()
+    // intermediates inside the call; the returned table's blocks go to the
+    // one CheckpointUtil ledger. Assert on getPersistentRDDs (the only
+    // view that sees checkpoint blocks — the CacheManager doesn't).
+    CheckpointUtil.releaseRegistered()
     def live(): Int = spark.sparkContext.getPersistentRDDs.size
     val baseline = live()
+    assert(CheckpointUtil.registeredCount === 0)
     // r16: the public entry resolves bounded Long-id graphs driver-side
     // and must leave NOTHING pinned (edges checkpoint freed on exit, no
     // label table exists)
@@ -322,21 +323,29 @@ class DedupSpec extends SparkSpec {
     }
     assert(live() === baseline,
       "the driver fast path must leave no checkpoint blocks pinned")
+    assert(CheckpointUtil.registeredCount === 0,
+      "the driver fast path must register nothing")
     // the distributed loop keeps its one returned label table per call
     // (lineage truncated — freeing it would make the result
     // unrecomputable) until the ledger is drained
     val pairs = Dedup.minhashLsh(docs, Bands, 800).select("doc_a", "doc_b")
     val perCall = new scala.collection.mutable.ArrayBuffer[Int]
+    val registered = new scala.collection.mutable.ArrayBuffer[Int]
     (1 to 3).foreach { _ =>
       Dedup.ccDistributed(pairs).count()
       perCall += live() - baseline
+      registered += CheckpointUtil.registeredCount
     }
     assert(perCall(0) >= 1, "expected the returned label table to stay pinned")
     assert(perCall.toSeq === Seq(perCall(0), 2 * perCall(0), 3 * perCall(0)),
       s"per-round intermediates leaked: persistent-RDD growth $perCall")
-    Dedup.releaseCcLabels()
+    // every block a call leaves pinned is a label block in the one ledger
+    assert(registered === perCall,
+      s"registered blocks $registered vs pinned blocks $perCall")
+    CheckpointUtil.releaseRegistered()
+    assert(CheckpointUtil.registeredCount === 0)
     assert(live() === baseline,
-      "releaseCcLabels must return executor storage to baseline")
+      "releaseRegistered must return executor storage to baseline")
   }
 
   test("lineDedup drops cross-doc boilerplate lines, keeps blanks, repeats-in-one-doc and order") {

@@ -165,7 +165,7 @@ class IncrementalAggSpec extends SparkSpec {
     // driver and registers no blocks, so a scheduled loop never
     // accumulates bucket tables
     import graft.streaming.SnapshotCapture
-    graft.functions.Dedup.releaseCcLabels() // baseline: drain prior tests
+    graft.functions.CheckpointUtil.releaseRegistered() // baseline: drain prior tests
     val grans = Seq("b" -> 100L)
     val state = java.nio.file.Files.createTempDirectory("graft_ledger").toString
     val s0 = (1 to 40).map(i => (i.toLong, (i % 3).toLong, i.toLong * 7 - 120, i / 4.0))

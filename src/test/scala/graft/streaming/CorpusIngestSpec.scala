@@ -62,7 +62,7 @@ class CorpusIngestSpec extends SparkSpec {
     // handler's operators (minhashLsh, crossCorpusPairs) register nothing
     // in the session ledger, and anything registered earlier in the
     // session is drained by the release hook the loop owner calls
-    graft.functions.Dedup.releaseCcLabels() // baseline: drain prior tests
+    graft.functions.CheckpointUtil.releaseRegistered() // baseline: drain prior tests
     val dir = java.nio.file.Files.createTempDirectory("corpus_ledger").toString
     val h = CorpusIngest.handler(dir, Bands, Thresh)
     CorpusIngest.seed(mkDocs(1L -> body("alpha")), dir, Bands)

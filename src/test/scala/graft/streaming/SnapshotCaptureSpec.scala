@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
 
 import graft.{Cdc, SparkSpec}
 import graft.functions.CheckpointUtil
-import graft.operators.SnapshotDiff
+import graft.operators.{IncrementalAgg, SnapshotDiff}
 
 /** The snapshot capture loop's per-round work, pinned by deterministic
   * counts (jobs, call sites, plan nodes, registered blocks, round
@@ -110,6 +110,41 @@ class SnapshotCaptureSpec extends SparkSpec {
       assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 0L)
       assert(table(conn, "CTGT") === table(conn, "CSRC"))
     }
+  }
+
+  test("captureIntoLadder rounds read parquet with known schemas; a ladder without one still folds") {
+    val dir = stateDir("cap_ladder")
+    def src(n: Int) = ((1 to 40).filterNot(_ == 10 + n) :+ (100 + n))
+      .map(i => (i.toLong, (i % 3).toLong, i.toLong * 7 - 120, i / 4.0 + n))
+      .toDF("event_id", "key", "ts", "value")
+    def levels(ls: Seq[(String, DataFrame)]): Seq[(String, Set[Seq[Any]])] =
+      ls.map { case (l, df) => l -> rows(df.select($"key", $"bucket_start", $"cnt",
+        $"sum_dec".cast("string"))).toSet }
+    /** Runs round `n`, checks its ladder, returns the round's parquet-read jobs. */
+    def round(n: Int, grans: Seq[(String, Long)]): Seq[String] = {
+      var ladder = Seq.empty[(String, DataFrame)]
+      val sites = jobSites {
+        ladder = SnapshotCapture.captureIntoLadder(spark, src(n), Seq("event_id"), dir,
+          "key", "ts", "value", grans)._2
+      }
+      assert(levels(ladder) === levels(IncrementalAgg.rollup(src(n), "key", "ts", "value", grans)),
+        s"round $n")
+      sites.filter(_.contains("DataFrameReader.parquet"))
+    }
+    // bootstrap, a fold, a grain change that re-bootstraps from the snapshot
+    for ((n, grans) <- Seq(0 -> Seq("b" -> 100L, "b4" -> 400L), 1 -> Seq("b" -> 100L, "b4" -> 400L),
+                           2 -> Seq("b" -> 50L, "b4" -> 400L))) {
+      val reads = round(n, grans)
+      assert(reads.isEmpty, s"round $n schema-inference jobs:\n${reads.mkString("\n\n")}")
+    }
+    // a ladder_meta of the earlier layout (grain line only) still folds,
+    // reading that ladder by inference
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val meta = new Path(dir, "round_2/ladder_meta")
+    val grain = scala.io.Source.fromInputStream(fs.open(meta)).getLines().next()
+    val out = fs.create(meta, true)
+    try out.write(grain.getBytes("UTF-8")) finally out.close()
+    assert(round(3, Seq("b" -> 50L, "b4" -> 400L)).nonEmpty)
   }
 
   test("pruned diffs plan no broadcast exchange and register no checkpoint blocks") {
