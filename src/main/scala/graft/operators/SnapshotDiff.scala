@@ -1,6 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.TimeoutException
+import java.util.zip.{Deflater, DeflaterOutputStream, InflaterInputStream}
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Snapshot differencing — the batch analog of CDC for sources the
@@ -105,31 +115,56 @@ object SnapshotDiff {
   }
 
   /** [[diffPruned]] with the BEFORE side's digests supplied instead of
-    * recomputed — the shape a capture LOOP actually runs: each round
-    * persists [[bucketDigests]] of its snapshot (a `buckets`-row
-    * artifact), and the next round pays ONE full scan (digesting the new
-    * snapshot) instead of the plain diff's two-scans-plus-full-join or
-    * the self-contained prune's four scans. Rows enter the PK join only
-    * from dirty buckets. Eager like [[diffPruned]]: the supplied digests
-    * are validated and collected, and the dirty bucket ids computed on
-    * the driver, at call time; nothing to release. */
+    * recomputed: a persisted [[bucketDigests]] artifact of `before` (a
+    * `buckets`-row table), so `before` is never scanned for digests.
+    * Rows enter the PK join only from dirty buckets. Eager like
+    * [[diffPruned]]: at call time `after` is digested, the supplied
+    * artifact is validated against its `_buckets`/`_cols` stamps and
+    * collected, and the dirty bucket ids are computed on the driver;
+    * nothing to release.
+    *
+    * [[graft.streaming.SnapshotCapture]] runs the same diff with both
+    * sides' digests already on the driver (see [[Digests]]): the new
+    * snapshot's observed during its write, the previous one's read from
+    * that round's digest file, so its rounds run no digest job. A
+    * previous round of the earlier layout, whose digests are a parquet
+    * `digests/` table, still goes through this validate-and-collect
+    * path. */
   def diffPrunedIncremental(before: DataFrame, beforeDigests: DataFrame,
                             after: DataFrame, pk: Seq[String],
-                            buckets: Int = 4096): DataFrame =
-    diffPrunedIncremental(before, beforeDigests, after,
-      bucketDigests(after, pk, buckets).collect().toSeq, pk, buckets)
+                            buckets: Int = 4096): DataFrame = {
+    val cols = after.columns.toSeq
+    diffPrunedIncremental(before, collectDigests(beforeDigests, cols, pk, buckets),
+      after, collectDigests(bucketDigests(after, pk, buckets), cols, pk, buckets), pk, buckets)
+  }
 
-  /** [[diffPrunedIncremental]] with the AFTER side's digests supplied too,
-    * as the collected rows of `bucketDigests(after, pk, buckets)` — for a
-    * caller that already holds them (the capture loop persists the same
-    * rows as its digest artifact), so `after` is digested once per round,
-    * not twice. */
-  private[graft] def diffPrunedIncremental(before: DataFrame, beforeDigests: DataFrame,
-                                           after: DataFrame, afterDigests: Seq[Row],
+  /** [[diffPrunedIncremental]] over digests already on the driver: both
+    * sides' stamps are checked against `after`'s columns and `buckets`
+    * (the [[validateDigests]] refusals, same wording), then the dirty
+    * bucket ids are computed with no job. */
+  private[graft] def diffPrunedIncremental(before: DataFrame, beforeDigests: Digests,
+                                           after: DataFrame, afterDigests: Digests,
                                            pk: Seq[String], buckets: Int): DataFrame = {
-    val prev = validateDigests(beforeDigests, colsTag(after.columns.toSeq, pk), buckets)
-      .select("_bkt", "_digest", "_n").collect().toSeq
-    prunedDiff(before, after, dirtyIds(prev, afterDigests), pk, buckets)
+    val tag = colsTag(after.columns.toSeq, pk)
+    beforeDigests.check(tag, buckets)
+    afterDigests.check(tag, buckets)
+    prunedDiff(before, after, beforeDigests.dirtyIds(afterDigests), pk, buckets)
+  }
+
+  /** A [[bucketDigests]] artifact, validated against `cols`/`pk`/`buckets`
+    * ([[validateDigests]]) and collected: one job over a `buckets`-row
+    * table. */
+  private[graft] def collectDigests(artifact: DataFrame, cols: Seq[String], pk: Seq[String],
+                                    buckets: Int): Digests = {
+    val tag = colsTag(cols, pk)
+    val cells = new Array[Long](2 * buckets)
+    validateDigests(artifact, tag, buckets).select("_bkt", "_digest", "_n").collect()
+      .foreach { r =>
+        val b = r.getLong(0).toInt
+        cells(2 * b) = r.getLong(1)
+        cells(2 * b + 1) = r.getLong(2)
+      }
+    new Digests(buckets, tag, cells)
   }
 
   /** Guard for persisted digest artifacts: a digest table built with a
@@ -143,19 +178,15 @@ object SnapshotDiff {
     * SMALLER original bucket count, hence the stamp. */
   private def validateDigests(digests: DataFrame, expectTag: String,
                               buckets: Int): DataFrame = {
+    def refuse(ok: Column, refusal: (String, String), found: Column) =
+      assert_true(ok, concat(lit(refusal._1), found, lit(refusal._2))).isNull
     val hasMeta = digests.columns.contains("_buckets")
     if (hasMeta) {
       val d = if (digests.columns.contains("_cols"))
-        digests.where(assert_true(col("_cols") === lit(expectTag),
-          concat(lit("digest artifact was built over ["), col("_cols"),
-            lit(s"] but this diff runs over [$expectTag]; signatures would " +
-              "not be comparable"))).isNull)
+        digests.where(refuse(col("_cols") === lit(expectTag), colsRefusal(expectTag), col("_cols")))
           .drop("_cols")
       else digests
-      d.where(assert_true(col("_buckets") === lit(buckets.toLong),
-          concat(lit("digest artifact was built with buckets="), col("_buckets"),
-            lit(s" but this diff uses buckets=$buckets; bucket ids would " +
-              "misalign and changed rows would be silently pruned"))).isNull)
+      d.where(refuse(col("_buckets") === lit(buckets.toLong), bucketsRefusal(buckets), col("_buckets")))
         .drop("_buckets")
     } else
       digests.where(assert_true(col("_bkt") >= 0 && col("_bkt") < lit(buckets.toLong),
@@ -163,6 +194,19 @@ object SnapshotDiff {
           lit(s" outside [0, $buckets) — built with a different bucket " +
             "count?"))).isNull)
   }
+
+  /** The refusal of a digest artifact whose column stamp is not
+    * `expectTag`, split around the found stamp. */
+  private def colsRefusal(expectTag: String): (String, String) =
+    ("digest artifact was built over [",
+      s"] but this diff runs over [$expectTag]; signatures would not be comparable")
+
+  /** The refusal of a digest artifact whose bucket stamp is not
+    * `buckets`, split around the found stamp. */
+  private def bucketsRefusal(buckets: Int): (String, String) =
+    ("digest artifact was built with buckets=",
+      s" but this diff uses buckets=$buckets; bucket ids would misalign and " +
+        "changed rows would be silently pruned")
 
   private def colsTag(cols: Seq[String], pk: Seq[String]): String =
     s"pk=${pk.mkString(",")};cols=${cols.mkString(",")}"
@@ -178,17 +222,123 @@ object SnapshotDiff {
     diff(prune(before), prune(after), pk)
   }
 
-  /** [[dirtyBuckets]] over collected digest rows whose leading columns are
-    * (`_bkt`, `_digest`, `_n`): the bucket ids whose digest or row count
-    * differs, or that exist on one side only. */
-  private def dirtyIds(before: Seq[Row], after: Seq[Row]): Seq[Long] = {
-    def cells(rows: Seq[Row]) = rows.map(r => r.getLong(0) -> ((r.get(1), r.get(2)))).toMap
-    val (b, a) = (cells(before), cells(after))
-    (b.keySet ++ a.keySet).filter(k => b.get(k) != a.get(k)).toSeq
+  /** A row's PK-hash bucket, in `[0, buckets)`. */
+  private[graft] def bucketOf(pk: Seq[String], buckets: Int): Column =
+    pmod(xxhash64(pk.map(col): _*), lit(buckets.toLong))
+
+  /** The row signature a bucket digest folds: xxhash64 over every
+    * column's value AND its null flag (see [[bucketDigests]]). */
+  private[graft] def rowSignature(cols: Seq[String]): Column =
+    xxhash64((cols.map(col) ++ cols.map(c => col(c).isNull)): _*)
+
+  /** [[bucketDigests]] held on the driver: `cells(2b)` is bucket b's xor
+    * of row signatures and `cells(2b + 1)` its row count (0 for an empty
+    * bucket, which [[bucketDigests]] omits), stamped with the bucket
+    * count and column tag they were built under. */
+  private[graft] final class Digests(val buckets: Int, val cols: String, val cells: Array[Long]) {
+    require(cells.length == 2 * buckets, s"${cells.length} digest cells for $buckets buckets")
+
+    /** The [[validateDigests]] refusals, for stamps read on the driver. */
+    def check(expectTag: String, expectBuckets: Int): Unit = {
+      def refuse(r: (String, String), found: Any) =
+        throw new IllegalStateException(r._1 + found + r._2)
+      if (cols != expectTag) refuse(colsRefusal(expectTag), cols)
+      if (buckets != expectBuckets) refuse(bucketsRefusal(expectBuckets), buckets)
+    }
+
+    /** The buckets whose digest or row count differs from `other`'s —
+      * [[dirtyBuckets]], including buckets non-empty on one side only. */
+    def dirtyIds(other: Digests): Seq[Long] =
+      (0 until buckets).filter(b => cells(2 * b) != other.cells(2 * b) ||
+        cells(2 * b + 1) != other.cells(2 * b + 1)).map(_.toLong)
+
+    /** (`_bkt`, `_digest`, `_n`) of every non-empty bucket, in bucket
+      * order: the rows of [[bucketDigests]]. */
+    def rows: Seq[(Long, Long, Long)] =
+      (0 until buckets).filter(b => cells(2 * b + 1) > 0)
+        .map(b => (b.toLong, cells(2 * b), cells(2 * b + 1)))
+
+    /** The digest file: the stamps, then the cells, deflated (an empty
+      * bucket's cells are zeros, and counts are small). */
+    def toBytes: Array[Byte] = {
+      val tag = cols.getBytes(UTF_8)
+      val bb = ByteBuffer.allocate(12 + tag.length + 8 * cells.length)
+      bb.putInt(DigestFormat).putInt(buckets).putInt(tag.length).put(tag)
+      cells.foreach(bb.putLong)
+      val out = new java.io.ByteArrayOutputStream()
+      val z = new DeflaterOutputStream(out, new Deflater(Deflater.BEST_SPEED))
+      try z.write(bb.array()) finally z.close()
+      out.toByteArray
+    }
   }
 
-  private def bucketOf(pk: Seq[String], buckets: Int) =
-    pmod(xxhash64(pk.map(col): _*), lit(buckets.toLong))
+  private val DigestFormat = 1
+
+  object Digests {
+    def fromBytes(bytes: Array[Byte]): Digests = {
+      val z = new InflaterInputStream(new java.io.ByteArrayInputStream(bytes))
+      val bb = ByteBuffer.wrap(try z.readAllBytes() finally z.close())
+      val format = bb.getInt()
+      require(format == DigestFormat, s"unknown digest file format $format")
+      val buckets = bb.getInt()
+      val tag = new Array[Byte](bb.getInt())
+      bb.get(tag)
+      val cells = new Array[Long](2 * buckets)
+      bb.asLongBuffer().get(cells)
+      new Digests(buckets, new String(tag, UTF_8), cells)
+    }
+  }
+
+  /** `df` with its bucket digests attached as an observed metric: the
+    * action that runs the returned frame (the capture loop's snapshot
+    * write) computes them in the same scan, and the returned handle
+    * yields them. Same buckets, signature and stamps as
+    * [[bucketDigests]] over `df` (parity pinned in SnapshotDiffSpec).
+    * Each task holds one `2 × buckets` long buffer. */
+  private[graft] def observeDigests(df: DataFrame, pk: Seq[String],
+                                    buckets: Int): (DataFrame, ObservedDigests) = {
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+    val cols = df.columns.toSeq
+    val obs = Observation()
+    val fold = udaf(new DigestAgg(buckets), Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+    (df.observe(obs, fold(bucketOf(pk, buckets), rowSignature(cols)).as("cells")),
+      new ObservedDigests(obs, buckets, colsTag(cols, pk)))
+  }
+
+  /** The digests of an [[observeDigests]] frame, once an action ran it. */
+  private[graft] final class ObservedDigests(obs: Observation, buckets: Int, tag: String) {
+    /** Waits at most `timeout` for the observation, which Spark delivers
+      * when the action's query execution completes; fails rather than
+      * blocking forever. */
+    def await(timeout: FiniteDuration = 2.minutes): Digests = {
+      val row = try Await.result(obs.future, timeout) catch {
+        case e: TimeoutException => throw new IllegalStateException(
+          s"the digest observation ${obs.name} did not arrive within $timeout; " +
+            "did an action run the observed frame?", e)
+      }
+      new Digests(buckets, tag, row.getSeq[Long](0).toArray)
+    }
+  }
+
+  /** Per-bucket (xor of signatures, count) over (bucket, signature) rows. */
+  private final class DigestAgg(buckets: Int)
+      extends Aggregator[(Long, Long), Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](2 * buckets)
+    def reduce(b: Array[Long], in: (Long, Long)): Array[Long] = {
+      val i = 2 * in._1.toInt
+      b(i) ^= in._2
+      b(i + 1) += 1
+      b
+    }
+    def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < b1.length) { b1(i) ^= b2(i); b1(i + 1) += b2(i + 1); i += 2 }
+      b1
+    }
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
 
   /** The persistable sync artifact: one (bucket, digest, row count) row
     * per PK-hash bucket — xxhash64 row signatures bit_xor-folded, so the
@@ -210,8 +360,7 @@ object SnapshotDiff {
   def bucketDigests(df: DataFrame, pk: Seq[String], buckets: Int): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val cols = df.columns.toSeq
-    df.select(bucketOf(pk, buckets).as("_bkt"),
-        xxhash64((cols.map(col) ++ cols.map(c => col(c).isNull)): _*).as("_sig"))
+    df.select(bucketOf(pk, buckets).as("_bkt"), rowSignature(cols).as("_sig"))
       .groupBy("_bkt").agg(bit_xor(col("_sig")).as("_digest"),
         count(lit(1)).as("_n"))
       .withColumn("_buckets", lit(buckets.toLong))

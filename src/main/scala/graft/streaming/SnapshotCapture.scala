@@ -1,6 +1,6 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
+import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,23 +14,30 @@ import graft.sources.Jdbc
   * capture at all (no binlog, no monotonic offset column; see
   * [[graft.operators.SnapshotDiff]] and ref `CDCSource.java` polling
   * contract). Where polling checkpoints an offset, this loop checkpoints
-  * the LAST SNAPSHOT — as parquet plus its `buckets`-row digest table —
-  * under `stateDir`, so each round pays ONE source scan (write the fresh
-  * snapshot) and a digest-pruned diff against the persisted state.
+  * the LAST SNAPSHOT — as parquet plus its per-bucket digests — under
+  * `stateDir`, so each round pays ONE source scan (write the fresh
+  * snapshot, digesting it on the way) and a digest-pruned diff against
+  * the persisted state.
   *
   * State layout (any Hadoop filesystem — local, HDFS, S3A):
   * {{{
   * stateDir/round_<n>/snapshot/   parquet image of the source at round n
   * stateDir/round_<n>/schema      its schema as JSON, so the next round
   *                                reads it without schema inference
-  * stateDir/round_<n>/digests/    SnapshotDiff.bucketDigests of it
+  * stateDir/round_<n>/digests.bin its per-bucket digests (the rows of
+  *                                SnapshotDiff.bucketDigests), stamped
+  *                                with the bucket count and column list;
+  *                                written and read on the driver
   * stateDir/round_<n>/_COMMIT     marker, written LAST by commit()
   * }}}
   * One committed round is live at a time: each capture starts by deleting
   * every other round directory (uncommitted crash garbage and superseded
   * committed rounds), so the state is one snapshot plus the round in
-  * flight, not one snapshot per round ever captured. State written before
-  * the `schema` sidecar existed still reads (by inference).
+  * flight, not one snapshot per round ever captured. State of earlier
+  * layouts still reads: a round without the `schema` sidecar by
+  * inference, a round whose digests are a parquet `digests/` table
+  * through [[SnapshotDiff.diffPrunedIncremental]]'s validate-and-collect
+  * path (one job).
   *
   * Delivery is AT-LEAST-ONCE with the same commit geometry as the
   * streaming engine's foreachBatch checkpoint (offsets commit AFTER the
@@ -42,6 +49,13 @@ import graft.sources.Jdbc
   * are pinned in CdcSpec.
   */
 object SnapshotCapture {
+
+  /** A round's digests, next to its `schema` sidecar. */
+  private val DigestFile = "digests.bin"
+
+  /** Spark's job-description local property (`SparkContext`'s constant
+    * is private to Spark). */
+  private val JobDescription = "spark.job.description"
 
   /** One capture round: the change set (envelope convention — feeds
     * [[JdbcApply]] unchanged) and the commit that publishes this round's
@@ -62,13 +76,20 @@ object SnapshotCapture {
     * the initial-sync convention of the reference's snapshot-then-stream
     * modes.
     *
-    * Scheduled work of an incremental round: the snapshot write, ONE
-    * digest aggregation of it (collected — `buckets` rows — then written
-    * as the digest artifact and diffed on the driver against the
-    * previous round's), and the dirty-bucket diff itself. Both parquet
-    * reads name their schema (the previous round's `schema` sidecar, the
-    * digest schema), so no read runs a schema-inference job; a round
-    * without the sidecar falls back to inference. */
+    * Scheduled work of an incremental round through [[captureAndApply]]:
+    * 5 jobs. The snapshot write is one job, and it also computes the new
+    * snapshot's bucket digests, as an observed metric of the same scan
+    * that reaches the driver when the write completes (waited for with a
+    * bound). The driver writes them as the round's digest file and
+    * compares them with the previous round's, read back from its file,
+    * so the dirty bucket ids cost no job. Consuming `changes` runs the
+    * dirty-bucket diff: its two PK exchanges, then the apply's
+    * repartition and the apply itself. The previous snapshot's read
+    * names its schema (the `schema` sidecar), so no read runs a
+    * schema-inference job; a round without the sidecar falls back to
+    * inference. Each job carries the description `capture round <n>:
+    * snapshot`, `...: diff` or `...: apply`; the diff phase runs jobs only
+    * for a previous round of an earlier layout. */
   def capture(spark: SparkSession, source: DataFrame, pk: Seq[String],
               stateDir: String, buckets: Int = 4096): CaptureRound = {
     val dir = new Path(stateDir)
@@ -77,24 +98,34 @@ object SnapshotCapture {
     sweep(fs, dir, latest)
     val round = latest.map(_ + 1L).getOrElse(0L)
     val roundDir = new Path(dir, s"round_$round")
-    // ONE scan of the live source; everything downstream reads the image
+    // ONE scan of the live source writes the image and digests it on the
+    // way; everything downstream reads the image
     val snapshot = new Path(roundDir, "snapshot").toString
-    source.write.mode("overwrite").parquet(snapshot)
+    val digests = phase(spark, round, "snapshot") {
+      val (observed, digest) = SnapshotDiff.observeDigests(source, pk, buckets)
+      observed.write.mode("overwrite").parquet(snapshot)
+      digest.await()
+    }
     val schema = nullable(source.schema)
-    writeSmallFile(fs, new Path(roundDir, "schema"), schema.json)
+    writeSmallFile(fs, new Path(roundDir, "schema"), schema.json.getBytes(UTF_8))
+    writeSmallFile(fs, new Path(roundDir, DigestFile), digests.toBytes)
     val cur = spark.read.schema(schema).parquet(snapshot)
-    val digests = SnapshotDiff.bucketDigests(cur, pk, buckets)
-    val digestRows = digests.collect().toSeq
-    spark.createDataFrame(digestRows.asJava, digests.schema).coalesce(1)
-      .write.mode("overwrite").parquet(new Path(roundDir, "digests").toString)
     val changes = latest match {
-      case Some(prev) =>
+      case Some(prev) => phase(spark, round, "diff") {
         val prevDir = new Path(dir, s"round_$prev")
         // a round written before the sidecar existed: infer both schemas
-        val prevSchema = readSmallFile(fs, new Path(prevDir, "schema")).map(schemaOf)
+        val prevSchema = readText(fs, new Path(prevDir, "schema")).map(schemaOf)
+        // a round written before the digest file existed keeps its
+        // digests as a parquet table: validate and collect it
+        val prevDigests = readSmallFile(fs, new Path(prevDir, DigestFile))
+          .map(SnapshotDiff.Digests.fromBytes)
+          .getOrElse(SnapshotDiff.collectDigests(
+            read(spark, new Path(prevDir, "digests"),
+              prevSchema.map(_ => SnapshotDiff.bucketDigests(cur, pk, buckets).schema)),
+            cur.columns.toSeq, pk, buckets))
         SnapshotDiff.diffPrunedIncremental(read(spark, new Path(prevDir, "snapshot"), prevSchema),
-          read(spark, new Path(prevDir, "digests"), prevSchema.map(_ => digests.schema)),
-          cur, digestRows, pk, buckets)
+          prevDigests, cur, digests, pk, buckets)
+      }
       case None => SnapshotDiff.inserts(cur, pk)
     }
     CaptureRound(round, changes,
@@ -112,7 +143,7 @@ object SnapshotCapture {
                       stateDir: String, target: Jdbc.ConnectionSpec,
                       targetTable: String, buckets: Int = 4096): Long = {
     val r = capture(spark, source, pk, stateDir, buckets)
-    val n = JdbcApply.write(target, targetTable, pk, r.changes)
+    val n = phase(spark, r.round, "apply")(JdbcApply.write(target, targetTable, pk, r.changes))
     r.commit()
     n
   }
@@ -160,14 +191,14 @@ object SnapshotCapture {
     // snapshot instead.
     val meta = s"grain=${granularities.head._1}:${granularities.head._2};" +
       s"key=$keyCol;ts=$tsCol;value=$valueCol"
-    val prevLines = readSmallFile(fs, new Path(prevRound, "ladder_meta"))
+    val prevLines = readText(fs, new Path(prevRound, "ladder_meta"))
       .map(_.split("\n", 2))
     val prevMeta = prevLines.map(_.head)
     val finest =
       if (r.round == 0L || !fs.exists(prevLadder) || !prevMeta.contains(meta))
         IncrementalAgg.rollup(
           read(spark, new Path(roundDir, "snapshot"),
-            readSmallFile(fs, new Path(roundDir, "schema")).map(schemaOf)),
+            readText(fs, new Path(roundDir, "schema")).map(schemaOf)),
           keyCol, tsCol, valueCol, granularities.take(1)).head._2
       else
         IncrementalAgg.advanceChanges(
@@ -176,7 +207,8 @@ object SnapshotCapture {
     val ladder = new Path(roundDir, "ladder")
     val ladderSchema = nullable(finest.schema)
     finest.write.mode("overwrite").parquet(ladder.toString)
-    writeSmallFile(fs, new Path(roundDir, "ladder_meta"), meta + "\n" + ladderSchema.json)
+    writeSmallFile(fs, new Path(roundDir, "ladder_meta"),
+      (meta + "\n" + ladderSchema.json).getBytes(UTF_8))
     r.commit()
     (r.round, IncrementalAgg.ladder(read(spark, ladder, Some(ladderSchema)), keyCol, granularities))
   }
@@ -193,21 +225,35 @@ object SnapshotCapture {
   private def nullable(s: StructType): StructType =
     StructType(s.map(_.copy(nullable = true)))
 
+  /** Runs `body` with Spark's job description set to `capture round
+    * <round>: <name>`, so every job it starts (AQE's query-stage jobs
+    * too: they inherit the caller's local properties) is named in Spark's
+    * job list; the previous description is restored after. */
+  private def phase[T](spark: SparkSession, round: Long, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val previous = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(s"capture round $round: $name")
+    try body finally sc.setLocalProperty(JobDescription, previous)
+  }
+
   private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-                             text: String): Unit = {
+                             bytes: Array[Byte]): Unit = {
     val out = fs.create(p, true)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(bytes)
     finally out.close()
   }
 
   private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                            p: Path): Option[String] =
+                            p: Path): Option[Array[Byte]] =
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+      try Some(in.readAllBytes())
       finally in.close()
     }
+
+  private def readText(fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[String] =
+    readSmallFile(fs, p).map(new String(_, UTF_8))
 
   private def listRounds(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[Long] =
     if (!fs.exists(dir)) Seq.empty

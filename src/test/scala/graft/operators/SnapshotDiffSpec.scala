@@ -120,6 +120,46 @@ class SnapshotDiffSpec extends SparkSpec {
     assert(incr === full)
   }
 
+  test("digests observed during a write equal bucketDigests of the written parquet, row for row") {
+    import java.sql.{Date, Timestamp}
+    // multi-column pk (listed out of column order), nulls in key and
+    // non-key columns, the null-position swap pair, timestamp/date/double
+    val rows = (1 to 300).map { i =>
+      (if (i % 7 == 0) None else Some(s"k${i % 11}"), i.toLong,
+        if (i % 5 == 0) None else Some(new Timestamp(1700000000000L + i * 3600000L)),
+        if (i % 6 == 0) None else Some(Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i))),
+        if (i % 4 == 0) None else Some(i / 3.0),
+        if (i == 1) Some("x") else if (i == 2) None else Some(s"a$i"),
+        if (i == 1) None else if (i == 2) Some("x") else None)
+    }
+    val src = rows.toDF("kc", "id", "ts", "d", "v", "a", "b")
+    val pk = Seq("id", "kc")
+    for (buckets <- Seq(1, 16, 4096)) {
+      val path = java.nio.file.Files.createTempDirectory("sdiff_obs").toString + "/snap"
+      val (observed, digests) = SnapshotDiff.observeDigests(src, pk, buckets)
+      observed.write.parquet(path)
+      val got = digests.await()
+      val want = SnapshotDiff.bucketDigests(spark.read.parquet(path), pk, buckets)
+      assert(got.rows === want.select("_bkt", "_digest", "_n").orderBy("_bkt")
+        .as[(Long, Long, Long)].collect().toSeq, s"buckets=$buckets")
+      assert(got.rows.map(_._3).sum === 300L)
+      assert(want.select("_buckets", "_cols").distinct().as[(Long, String)].collect().toSeq ===
+        Seq((buckets.toLong, got.cols)))
+    }
+    // the swapped rows sign differently, so their buckets can tell them apart
+    val sig = src.where($"id" <= 2L).select(SnapshotDiff.rowSignature(Seq("a", "b")))
+      .as[Long].collect()
+    assert(sig(0) !== sig(1))
+    // an empty frame's observation still arrives, with no bucket in it
+    val (empty, none) = SnapshotDiff.observeDigests(src.limit(0), pk, 16)
+    empty.write.parquet(java.nio.file.Files.createTempDirectory("sdiff_obs0").toString + "/snap")
+    assert(none.await().rows.isEmpty)
+    // an observation no action ever ran fails after its bound, never hangs
+    val (_, never) = SnapshotDiff.observeDigests(src, pk, 16)
+    val e = intercept[IllegalStateException](never.await(scala.concurrent.duration.Duration(200, "ms")))
+    assert(e.getMessage.contains("did not arrive"), e.getMessage)
+  }
+
   test("incremental diff refuses a digest artifact with a mismatched bucket count or column set") {
     val before = (1L to 500L).map(i => (i, s"s$i")).toDF("id", "s")
     val after = (1L to 500L).map(i => (i, if (i == 7) "CHANGED" else s"s$i")).toDF("id", "s")

@@ -19,6 +19,7 @@ import graft.operators.{IncrementalAgg, SnapshotDiff}
   * replay are pinned in CdcSpec. */
 class SnapshotCaptureSpec extends SparkSpec {
   import spark.implicits._
+  import SnapshotCaptureSpec.Job
 
   private def stateDir(tag: String): String = Files.createTempDirectory(tag).toString
 
@@ -52,13 +53,13 @@ class SnapshotCaptureSpec extends SparkSpec {
       .map(r => (r.getInt(1), r.getString(2), r.getDouble(3))).toSeq
   }
 
-  /** Long call sites of the jobs `body` starts (the listener bus is
-    * drained before reading). */
-  private def jobSites(body: => Unit): Seq[String] = {
-    val sites = ArrayBuffer.empty[String]
+  /** The jobs `body` starts (the listener bus is drained before reading). */
+  private def jobsOf(body: => Unit): Seq[Job] = {
+    val jobs = ArrayBuffer.empty[Job]
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = sites.synchronized {
-        sites += j.stageInfos.sortBy(_.stageId).lastOption.map(_.details).getOrElse("")
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.synchronized {
+        jobs += Job(j.stageInfos.sortBy(_.stageId).lastOption.map(_.details).getOrElse(""),
+          String.valueOf(j.properties.getProperty("spark.job.description")))
       }
     }
     // LiveListenerBus.waitUntilEmpty is private[spark] (public bytecode)
@@ -71,8 +72,14 @@ class SnapshotCaptureSpec extends SparkSpec {
     drain()
     spark.sparkContext.addSparkListener(listener)
     try { body; drain() } finally spark.sparkContext.removeSparkListener(listener)
-    sites.synchronized(sites.toList)
+    jobs.synchronized(jobs.toList)
   }
+
+  private def describe(jobs: Seq[Job]): String =
+    jobs.map(j => s"[${j.description}] " + j.site.linesIterator.take(2).mkString(" | ")).mkString("\n")
+
+  private def chain(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).mkString(" | ")
 
   test("bootstrap projection equals the diff against an empty snapshot: names, order, types, rows") {
     val dir = stateDir("cap_boot")
@@ -89,7 +96,7 @@ class SnapshotCaptureSpec extends SparkSpec {
     intercept[IllegalArgumentException](SnapshotDiff.inserts(snap, Seq("nope")))
   }
 
-  test("an incremental round: <= 9 jobs, no parquet schema inference, 0 changes when quiet") {
+  test("an incremental round: <= 5 jobs, each named for its phase, no parquet write but the snapshot's, no schema inference, 0 changes when quiet") {
     withDerby("cap_jobs") { (conn, opts, spec) =>
       val state = stateDir("cap_jobs_state")
       assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 40L)
@@ -97,18 +104,43 @@ class SnapshotCaptureSpec extends SparkSpec {
       conn.createStatement().execute("DELETE FROM CSRC WHERE ID = 3")
       conn.createStatement().execute("INSERT INTO CSRC VALUES (41,'d',4.0)")
       var applied = -1L
-      val sites = jobSites {
+      val jobs = jobsOf {
         applied = Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT")
       }
       assert(applied === 3L && table(conn, "CTGT") === table(conn, "CSRC"))
-      assert(sites.size <= 9, s"${sites.size} jobs in one incremental round:\n" +
-        sites.map(_.linesIterator.take(2).mkString(" | ")).mkString("\n"))
+      assert(jobs.size <= 5, s"${jobs.size} jobs in one incremental round:\n${describe(jobs)}")
+      // every job, AQE's query-stage jobs included, is named for its round
+      // and phase; the snapshot is the only parquet the round writes
+      assert(jobs.forall(_.description.startsWith("capture round 1: ")), describe(jobs))
+      val writes = jobs.filter(_.site.contains("DataFrameWriter.parquet"))
+      assert(writes.map(_.description) === Seq("capture round 1: snapshot"), describe(jobs))
+      assert(jobs.map(_.description).distinct.sorted ===
+        Seq("capture round 1: apply", "capture round 1: snapshot"), describe(jobs))
       // every parquet read names its schema: no read starts a job
-      val reads = sites.filter(_.contains("DataFrameReader.parquet"))
-      assert(reads.isEmpty, s"schema-inference jobs:\n${reads.mkString("\n\n")}")
+      val reads = jobs.filter(_.site.contains("DataFrameReader.parquet"))
+      assert(reads.isEmpty, s"schema-inference jobs:\n${describe(reads)}")
+      // the description set for the round is gone after it
+      assert(spark.sparkContext.getLocalProperty("spark.job.description") === null)
       // quiet round: nothing dirty, nothing applied
       assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 0L)
       assert(table(conn, "CTGT") === table(conn, "CSRC"))
+    }
+  }
+
+  test("an empty source bootstraps, then converges once rows arrive; its digests arrive empty") {
+    withDerby("cap_empty") { (conn, opts, spec) =>
+      conn.createStatement().execute("DELETE FROM CSRC")
+      val state = stateDir("cap_empty_state")
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 0L)
+      assert(table(conn, "CTGT").isEmpty)
+      val fs = new Path(state).getFileSystem(spark.sessionState.newHadoopConf())
+      val in = fs.open(new Path(state, "round_0/digests.bin"))
+      val boot = try SnapshotDiff.Digests.fromBytes(in.readAllBytes()) finally in.close()
+      assert(boot.buckets === 4096 && boot.rows.isEmpty)
+      conn.createStatement().execute("INSERT INTO CSRC VALUES (1,'a',1.0), (2,NULL,2.0)")
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 2L)
+      assert(table(conn, "CTGT") === table(conn, "CSRC"))
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 0L)
     }
   }
 
@@ -123,13 +155,13 @@ class SnapshotCaptureSpec extends SparkSpec {
     /** Runs round `n`, checks its ladder, returns the round's parquet-read jobs. */
     def round(n: Int, grans: Seq[(String, Long)]): Seq[String] = {
       var ladder = Seq.empty[(String, DataFrame)]
-      val sites = jobSites {
+      val jobs = jobsOf {
         ladder = SnapshotCapture.captureIntoLadder(spark, src(n), Seq("event_id"), dir,
           "key", "ts", "value", grans)._2
       }
       assert(levels(ladder) === levels(IncrementalAgg.rollup(src(n), "key", "ts", "value", grans)),
         s"round $n")
-      sites.filter(_.contains("DataFrameReader.parquet"))
+      jobs.map(_.site).filter(_.contains("DataFrameReader.parquet"))
     }
     // bootstrap, a fold, a grain change that re-bootstraps from the snapshot
     for ((n, grans) <- Seq(0 -> Seq("b" -> 100L, "b4" -> 400L), 1 -> Seq("b" -> 100L, "b4" -> 400L),
@@ -215,6 +247,52 @@ class SnapshotCaptureSpec extends SparkSpec {
     }
   }
 
+  test("a committed round with a parquet digest table (earlier layout) converges and writes the digest file") {
+    for (sidecar <- Seq(true, false)) withDerby(s"cap_pqdig_$sidecar") { (conn, opts, spec) =>
+      val state = stateDir("cap_pqdig_state")
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 40L)
+      // rewrite round 0 as the earlier layout stored it: the digests as a
+      // parquet table of bucketDigests over the snapshot
+      val fs = new Path(state).getFileSystem(spark.sessionState.newHadoopConf())
+      val r0 = new Path(state, "round_0")
+      SnapshotDiff.bucketDigests(spark.read.parquet(new Path(r0, "snapshot").toString), Seq("id"), 4096)
+        .coalesce(1).write.parquet(new Path(r0, "digests").toString)
+      assert(fs.delete(new Path(r0, "digests.bin"), false))
+      if (!sidecar) assert(fs.delete(new Path(r0, "schema"), false))
+      conn.createStatement().execute("UPDATE CSRC SET NAME = NULL WHERE ID = 7")
+      conn.createStatement().execute("DELETE FROM CSRC WHERE ID = 8")
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 2L, s"sidecar=$sidecar")
+      assert(table(conn, "CTGT") === table(conn, "CSRC"))
+      assert(fs.exists(new Path(state, "round_1/digests.bin")))
+      assert(!fs.exists(new Path(state, "round_1/digests")))
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 0L)
+    }
+  }
+
+  test("a digest file stamped with another bucket count or column list is refused, in validateDigests' words") {
+    val src = (1 to 30).map(i => (i.toLong, s"s$i")).toDF("id", "s")
+    def refusal(after: DataFrame, buckets: Int): String = {
+      val dir = stateDir("cap_refuse")
+      SnapshotCapture.capture(spark, src, Seq("id"), dir, 16).commit()
+      chain(intercept[IllegalStateException](SnapshotCapture.capture(spark, after, Seq("id"), dir, buckets)))
+    }
+    // the same mismatch through the persisted-table path: a stamped
+    // bucketDigests artifact checked by validateDigests
+    def tableRefusal(after: DataFrame, buckets: Int): String =
+      chain(intercept[Exception](SnapshotDiff.diffPrunedIncremental(src,
+        SnapshotDiff.bucketDigests(src, Seq("id"), 16), after, Seq("id"), buckets).count()))
+    val changed = src.where($"id" =!= 5L)
+    val wrongBuckets = refusal(changed, 32)
+    assert(wrongBuckets.contains("digest artifact was built with buckets=16 but this diff uses " +
+      "buckets=32; bucket ids would misalign and changed rows would be silently pruned"), wrongBuckets)
+    assert(tableRefusal(changed, 32).contains(wrongBuckets.split(" \\| ").head))
+    val reordered = changed.select("s", "id")
+    val wrongCols = refusal(reordered, 16)
+    assert(wrongCols.contains("digest artifact was built over [pk=id;cols=id,s] but this diff runs " +
+      "over [pk=id;cols=s,id]; signatures would not be comparable"), wrongCols)
+    assert(tableRefusal(reordered, 16).contains(wrongCols.split(" \\| ").head))
+  }
+
   test("a source column added between rounds fails loudly, with or without the sidecar") {
     for (sidecar <- Seq(true, false)) {
       val dir = stateDir("cap_drift")
@@ -227,11 +305,14 @@ class SnapshotCaptureSpec extends SparkSpec {
           (1 to 10).map(i => (i.toLong, s"s$i", i)).toDF("id", "s", "extra"), Seq("id"), dir, 16)
           .changes.collect()
       }
-      def chain(t: Throwable): String =
-        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).mkString(" | ")
       val msg = chain(e)
       assert(msg.contains("not be comparable") || msg.contains("snapshots must share a schema"),
         s"sidecar=$sidecar: $msg")
     }
   }
+}
+
+object SnapshotCaptureSpec {
+  /** A job a spec body started: its long call site and its description. */
+  private final case class Job(site: String, description: String)
 }
