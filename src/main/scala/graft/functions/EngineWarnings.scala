@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
 
 /** Once-per-session stderr advisories for conf states that silently
@@ -10,9 +11,11 @@ import org.apache.spark.sql.SparkSession
 object EngineWarnings {
   private val InferRule =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-  private val warned =
+  private def perSession() =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+  private val warned = perSession()
+  private val warnedLocalFs = perSession()
 
   /** True when the session EXPLICITLY opted out via the escape hatch
     * (`spark.graft.excludeInferFiltersFromGenerate=false`) — a deliberate,
@@ -42,4 +45,29 @@ object EngineWarnings {
         "(correct, ~1.7x slower on LSH shapes). Create the session via " +
         "graft.GraftSession, or exclude the rule: " +
         s"spark.conf.set(\"spark.sql.optimizer.excludedRules\", \"$InferRule\")")
+
+  /** Hadoop caches one `file:` filesystem per JVM. When anything called
+    * `FileSystem.get(file:)` before [[graft.GraftSession]] built the
+    * session, that call fixed another class (stock Hadoop's, or Hive's
+    * `ProxyLocalFileSystem`), and every local file the engine creates
+    * starts a `chmod` process (see GraftSession). Results
+    * stay correct; streaming triggers are slower. Warns once per session;
+    * true when it warned. */
+  def warnIfLocalFsForks(spark: SparkSession): Boolean =
+    warnIfLocalFsForks(spark,
+      FileSystem.get(java.net.URI.create("file:///"), spark.sessionState.newHadoopConf()))
+
+  /** [[warnIfLocalFsForks]] on a given `file:` filesystem. */
+  def warnIfLocalFsForks(spark: SparkSession, local: FileSystem): Boolean = {
+    val forks = !local.isInstanceOf[graft.io.NioLocalFileSystem]
+    forks && warnedLocalFs.put(spark, java.lang.Boolean.TRUE) == null && {
+      System.err.println(s"[graft] the file: filesystem is ${local.getClass.getName}, " +
+        "not graft.io.NioLocalFileSystem: something called FileSystem.get(file:) " +
+        "before the session was built, and Hadoop keeps that class for the JVM. " +
+        "Without native Hadoop it starts a chmod process for every local file " +
+        "(correct, each streaming trigger slower). Build the session with " +
+        "graft.GraftSession before touching the local filesystem.")
+      true
+    }
+  }
 }

@@ -437,7 +437,7 @@ class CdcMicroBatchStream(fullSchema: StructType, readSchema: StructType,
   @volatile private var gapFirstSeenMs: Long = -1L
   private def gapReset(): Unit = { gapHole = -1L; gapFirstSeenMs = -1L }
 
-  private def queryMax(): CdcOffset = Jdbc.withConnection(opts) { conn =>
+  private def queryMax(conn: Connection): CdcOffset = {
     val rs = conn.createStatement().executeQuery(
       s"SELECT MAX($pollingCol) FROM ${opts.table}")
     rs.next()
@@ -446,7 +446,7 @@ class CdcMicroBatchStream(fullSchema: StructType, readSchema: StructType,
   }
 
   /** Smallest present value strictly above `v` (None if none). */
-  private def queryMinAbove(v: Long): Option[Long] = Jdbc.withConnection(opts) { conn =>
+  private def queryMinAbove(conn: Connection, v: Long): Option[Long] = {
     val ps = conn.prepareStatement(
       s"SELECT MIN($pollingCol) FROM ${opts.table} WHERE $pollingCol > ?")
     ps.setLong(1, v)
@@ -459,7 +459,7 @@ class CdcMicroBatchStream(fullSchema: StructType, readSchema: StructType,
   /** End of the contiguous run beginning at present value `start`:
     * smallest present value >= start whose successor is absent (the DB
     * executes the self-join — no data leaves the source). */
-  private def runEnd(start: Long): Long = Jdbc.withConnection(opts) { conn =>
+  private def runEnd(conn: Connection, start: Long): Long = {
     val sql =
       s"""SELECT MIN(a.$pollingCol) FROM ${opts.table} a
          |LEFT OUTER JOIN ${opts.table} b ON b.$pollingCol = a.$pollingCol + 1
@@ -472,7 +472,7 @@ class CdcMicroBatchStream(fullSchema: StructType, readSchema: StructType,
   }
 
   override def initialOffset(): Offset = {
-    val o = queryMax()
+    val o = Jdbc.withConnection(opts)(queryMax)
     lastPlanned.set(o)
     o
   }
@@ -483,24 +483,28 @@ class CdcMicroBatchStream(fullSchema: StructType, readSchema: StructType,
     o
   }
 
-  override def latestOffset(): Offset = {
-    val max = queryMax()
-    if (!opts.waitOnMissedRecord || !numericCol || max.value.isEmpty) return max
-    val last = Option(lastPlanned.get()).map(_.asLong).getOrElse(-1L)
-    val maxV = max.asLong
-    if (maxV <= last) { gapReset(); return CdcOffset(Some(last.toString), numericCol) }
-    queryMinAbove(last) match {
-      // queryMax saw a larger value on a SEPARATE connection; a concurrent
-      // delete in between can make the min query come back empty — degrade
-      // to a no-op poll (hold the offset) instead of failing the query
-      case None => CdcOffset(Some(last.toString), numericCol)
-      case Some(minNew) if last >= 0 && minNew > last + 1 =>
-        // hole immediately after last (reference: current - last > 1)
-        holdOrRelease(holdAt = last, hole = last + 1)
-      case Some(minNew) =>
-        val end = runEnd(minNew)
-        if (end >= maxV) { gapReset(); max } // unbroken run to max
-        else holdOrRelease(holdAt = end, hole = end + 1)
+  /** One connection (and one retry scope) for all of a poll's offset
+    * queries: the max, and with a gap hold also the min-above and
+    * run-end probes. */
+  override def latestOffset(): Offset = Jdbc.withConnection(opts) { conn =>
+    val max = queryMax(conn)
+    if (!opts.waitOnMissedRecord || !numericCol || max.value.isEmpty) max
+    else {
+      val last = Option(lastPlanned.get()).map(_.asLong).getOrElse(-1L)
+      if (max.asLong <= last) { gapReset(); CdcOffset(Some(last.toString), numericCol) }
+      else queryMinAbove(conn, last) match {
+        // each query is its own auto-committed statement; a concurrent
+        // delete after queryMax can make the min query come back empty —
+        // degrade to a no-op poll (hold the offset) instead of failing
+        case None => CdcOffset(Some(last.toString), numericCol)
+        case Some(minNew) if last >= 0 && minNew > last + 1 =>
+          // hole immediately after last (reference: current - last > 1)
+          holdOrRelease(conn, holdAt = last, hole = last + 1)
+        case Some(minNew) =>
+          val end = runEnd(conn, minNew)
+          if (end >= max.asLong) { gapReset(); max } // unbroken run to max
+          else holdOrRelease(conn, holdAt = end, hole = end + 1)
+      }
     }
   }
 
@@ -508,19 +512,19 @@ class CdcMicroBatchStream(fullSchema: StructType, readSchema: StructType,
     * resume past this ONE hole to the end of the next contiguous run
     * (reference resumes at the next scanned row and re-waits per hole:
     * `WaitOnMissingRecordPollingStrategy.java:124-143`). */
-  private def holdOrRelease(holdAt: Long, hole: Long): CdcOffset = {
+  private def holdOrRelease(conn: Connection, holdAt: Long, hole: Long): CdcOffset = {
     val now = System.currentTimeMillis()
     if (gapHole != hole) { gapHole = hole; gapFirstSeenMs = now }
     val timedOut = opts.missedRecordTimeoutSec >= 0 &&
       now - gapFirstSeenMs >= opts.missedRecordTimeoutSec * 1000
     if (!timedOut) CdcOffset(Some(holdAt.toString), numericCol)
-    else queryMinAbove(holdAt) match {
+    else queryMinAbove(conn, holdAt) match {
       // concurrent delete between queryMax and here: keep holding; the
       // next poll re-evaluates from a fresh max
       case None => CdcOffset(Some(holdAt.toString), numericCol)
       case Some(resume) =>
         gapReset()
-        CdcOffset(Some(runEnd(resume).toString), numericCol)
+        CdcOffset(Some(runEnd(conn, resume).toString), numericCol)
     }
   }
 

@@ -6,7 +6,10 @@ import java.sql.DriverManager
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Polling-source round-trips over embedded Derby — the Spark analog of
   * the reference's H2/MySQL polling tests (TestCaseOfCDCPollingMode):
@@ -149,6 +152,32 @@ class PollingSourceSpec extends SparkSpec {
         conn.createStatement().execute("INSERT INTO STUDT VALUES (1,'a'), (2,'b'), (4,'d')")
       })
       assert(got.toSet === Set((1L, "a"), (2L, "b"), (4L, "d"))) // 3 skipped after timeout
+    }
+  }
+
+  test("a gap-hold poll runs all its offset queries on one connection") {
+    withDb("db_gapconn") { (url, conn) =>
+      conn.createStatement().execute("CREATE TABLE GAPC (ID INT, NAME VARCHAR(32))")
+      conn.createStatement().execute("INSERT INTO GAPC VALUES (1,'a'), (2,'b'), (4,'d'), (5,'e')")
+      val counting = PollingSourceSpec.CountingDriver
+      val schema = StructType(Seq(StructField("id", IntegerType), StructField("name", StringType)))
+      def polled(timeoutSec: Int, last: String): (String, Int) = {
+        val opts = CdcOptions(new CaseInsensitiveStringMap(Map(
+          "mode" -> "polling", "url" -> counting.wrap(url), "table.name" -> "GAPC",
+          "polling.column" -> "id", "wait.on.missed.record" -> "true",
+          "missed.record.waiting.timeout" -> timeoutSec.toString).asJava))
+        val stream = new CdcMicroBatchStream(schema, schema, opts, Array.empty)
+        stream.deserializeOffset(last)
+        val before = counting.opened.get()
+        val o = stream.latestOffset().json()
+        (o, counting.opened.get() - before)
+      }
+      // max, min-above: held at the hole after 2
+      assert(polled(-1, "num:2") === ("num:2" -> 1))
+      // max, min-above, then on timeout min-above and run-end: past the hole
+      assert(polled(0, "num:2") === ("num:5" -> 1))
+      // max, min-above, run-end: an unbroken run to the max
+      assert(polled(-1, "num:3") === ("num:5" -> 1))
     }
   }
 
@@ -668,5 +697,31 @@ class PollingSourceSpec extends SparkSpec {
       assert(upd.getDouble(upd.fieldIndex("v")) === 9.0)
       assert(upd.getDouble(upd.fieldIndex("before_v")) === 2.0)
     }
+  }
+}
+
+object PollingSourceSpec {
+  /** A JDBC driver for `jdbc:graftcount:<rest>` URLs that opens
+    * `jdbc:<rest>` and counts the connections it opened. */
+  object CountingDriver extends java.sql.Driver {
+    private val Prefix = "jdbc:graftcount:"
+    val opened = new java.util.concurrent.atomic.AtomicInteger()
+    DriverManager.registerDriver(this)
+
+    def wrap(url: String): String = Prefix + url.stripPrefix("jdbc:")
+    override def acceptsURL(url: String): Boolean = url.startsWith(Prefix)
+    override def connect(url: String, info: java.util.Properties): java.sql.Connection =
+      if (!acceptsURL(url)) null
+      else {
+        opened.incrementAndGet()
+        DriverManager.getConnection("jdbc:" + url.stripPrefix(Prefix), info)
+      }
+    override def getPropertyInfo(url: String, info: java.util.Properties) =
+      Array.empty[java.sql.DriverPropertyInfo]
+    override def getMajorVersion: Int = 1
+    override def getMinorVersion: Int = 0
+    override def jdbcCompliant(): Boolean = false
+    override def getParentLogger: java.util.logging.Logger =
+      throw new java.sql.SQLFeatureNotSupportedException()
   }
 }
