@@ -49,10 +49,13 @@ import org.apache.spark.sql.SparkSession
   *     committed previous BENCH_r*.json (or SPARK_GRAFT_BENCH_PRIOR) are
   *     listed in `"deviant_vs_prior"` — on unchanged code that flag
   *     means "re-run before committing".
-  *   - [[graft.functions.CheckpointUtil.releaseRegistered]] between
-  *     queries, so the checkpoint blocks behind returned frames (CC
-  *     labels, the q36/q37 activity cells and index) never occupy
-  *     executor storage across queries. */
+  *   - [[graft.functions.CheckpointUtil.awaitUnreferenced]] between
+  *     queries: each query's frame is dropped once written, so Spark's
+  *     `ContextCleaner` frees the checkpoint blocks behind it (CC
+  *     labels, the q36/q37 activity cells and index) before the next
+  *     query runs. A query that leaves RDDs persisted above the
+  *     session's baseline prints `[benchstorage] <query> <left>` on
+  *     stderr (stdout stays the one JSON line). */
 object Bench {
   def main(args: Array[String]): Unit = {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
@@ -119,6 +122,12 @@ object Bench {
     val passOffset = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASS", "0").toInt
     val nPass = sys.env.getOrElse("SPARK_GRAFT_BENCH_NPASS", runs.toString).toInt
     val spark = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val storageBaseline = spark.sparkContext.getPersistentRDDs.size
+    def awaitStorage(after: String): Unit = {
+      val left = graft.functions.CheckpointUtil.awaitUnreferenced(
+        spark.sparkContext, storageBaseline, 10000L)
+      if (left > storageBaseline) System.err.println(s"[benchstorage] $after $left")
+    }
     def execOnce(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, dir)
@@ -163,7 +172,7 @@ object Bench {
     sentinel() // JIT the probe itself before any timed use
     names.foreach(execOnce(_, "/root/testdata/sf0.001")) // warm-up
     spark.catalog.clearCache() // drop warm-up caches: measure steady state
-    graft.functions.CheckpointUtil.releaseRegistered()
+    awaitStorage("warmup")
     val sentinels = new scala.collection.mutable.ArrayBuffer[Double]
     val ioSentinels = new scala.collection.mutable.ArrayBuffer[Double]
     val samples = scala.collection.mutable.Map.empty[String, List[(Double, Double)]]
@@ -186,7 +195,7 @@ object Bench {
         val t = execOnce(n, sfDir)
         println(f"[benchsample] $n $t%.4f $seg%.4f")
         spark.catalog.clearCache() // operator caches must not leak across runs
-        graft.functions.CheckpointUtil.releaseRegistered()
+        awaitStorage(n)
         samples(n) = (t, seg) :: samples.getOrElse(n, Nil)
       }
     }

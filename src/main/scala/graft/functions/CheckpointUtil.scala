@@ -1,24 +1,34 @@
 package graft.functions
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Shared lineage-truncation device for ITERATIVE DataFrame loops
   * (connected components in [[Dedup]], the BPE merge loop in
-  * [[TextFunctions.bpeTrain]]) and for RETURNED frames whose plan
-  * references one bounded intermediate several ways (the q37
-  * activity-LSH index, the q36 activity cells): `localCheckpoint` a
-  * frame eagerly and hand back
-  * the persisted RDDs that now back it, so the caller can free each
-  * round's blocks DETERMINISTICALLY once the next round has
+  * [[TextFunctions.bpeTrain]]): `localCheckpoint` a frame eagerly and
+  * hand back the persisted RDDs that now back it, so the loop can free
+  * each round's blocks DETERMINISTICALLY once the next round has
   * materialized — `Dataset.unpersist` only talks to the CacheManager,
-  * which knows nothing about checkpoint blocks, so without the handle
-  * every iteration would leak one state table for the life of the
-  * session. Truncating lineage each round is what keeps round i from
-  * recomputing rounds 1..i−1 (the quadratic-recompute trap of naive
-  * iterative DataFrames) and keeps the analyzer's per-round plan cost
-  * O(1) instead of O(i).
+  * which knows nothing about checkpoint blocks. Truncating lineage each
+  * round is what keeps round i from recomputing rounds 1..i−1 (the
+  * quadratic-recompute trap of naive iterative DataFrames) and keeps the
+  * analyzer's per-round plan cost O(1) instead of O(i).
+  *
+  * Blocks behind a RETURNED frame (the [[Dedup.connectedComponents]]
+  * label table on its distributed route, the q36 activity cells, the q37
+  * activity-LSH index) are released by reachability: `localCheckpoint`
+  * persists its RDD, `persist` registers that RDD with Spark's
+  * `ContextCleaner`, and the cleaner unpersists it once the driver holds
+  * no reference to it — no frame, and no frame derived from one. So
+  * releasing one caller's blocks can never break a frame another caller
+  * still holds, and nothing here keeps a ledger. This depends on
+  * `spark.cleaner.referenceTracking` (default true); a caller that wants
+  * its blocks freed drops its references, and [[awaitUnreferenced]]
+  * waits for the cleaner to catch up. Hidden references keep blocks
+  * alive: a `val (a, b) = …` pattern in a class body keeps its tuple in a
+  * synthetic field.
   *
   * Durability trade (deliberate, documented rather than hidden in a
   * conf): `localCheckpoint` stores blocks on executors and TRUNCATES
@@ -48,32 +58,18 @@ object CheckpointUtil {
     (cp, out.toSeq)
   }
 
-  /** The one session-wide ledger for checkpoint blocks that back a
-    * RETURNED frame: the [[Dedup.connectedComponents]] label table on
-    * its distributed route, the q36 activity cells and the q37
-    * activity-LSH index. Freeing them inside the producing call would
-    * make the result unrecomputable (lineage is truncated), so the
-    * producer registers them and [[releaseRegistered]] drains them. */
-  private val ledger = scala.collection.mutable.Buffer[RDD[_]]()
-
-  private[graft] def register(blocks: Seq[RDD[_]]): Unit =
-    ledger.synchronized { ledger ++= blocks }
-
-  /** Free every registered checkpoint block — the one drain, returning
-    * executor storage to baseline. SESSION-GLOBAL: call it only once
-    * every previously returned registered frame (and every frame derived
-    * from one) has been fully consumed (written / aggregated /
-    * collected); executing such a frame after the release fails
-    * unrecoverably. Only harness epilogues between queries (Bench,
-    * ScaleSmoke) and specs call it. A loop must not call it from a
-    * per-round epilogue: it would free blocks of frames other code
-    * still holds. */
-  def releaseRegistered(): Unit = ledger.synchronized {
-    ledger.foreach(_.unpersist(blocking = false))
-    ledger.clear()
+  /** Wait until the `ContextCleaner` has freed every persisted RDD the
+    * driver no longer references: while more than `baseline` RDDs are
+    * persisted, runs `System.gc()` and polls again, for at most
+    * `timeoutMs`. Returns the number still persisted. Harness epilogues
+    * (Bench, ScaleSmoke) and specs call it after dropping their frames. */
+  def awaitUnreferenced(sc: SparkContext, baseline: Int, timeoutMs: Long): Int = {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    def left = sc.getPersistentRDDs.size
+    while (left > baseline && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(100)
+    }
+    left
   }
-
-  /** Number of currently registered (un-released) block RDDs — spec
-    * observability for the zero-retained-blocks-after-a-batch pins. */
-  private[graft] def registeredCount: Int = ledger.synchronized(ledger.size)
 }

@@ -611,13 +611,11 @@ object Dedup {
     * materializes, and the edge table on every exit path, so a call
     * leaves behind only the blocks backing the RETURNED label table (its
     * lineage is truncated; freeing it would make the result
-    * unrecomputable). Those final blocks are registered in the one
-    * session-wide ledger, [[CheckpointUtil.register]]: the harness drains
-    * it with [[CheckpointUtil.releaseRegistered]] once the result has
-    * been fully consumed (written / aggregated / joined away) — repeated
-    * dedup passes in a long-lived session (a bench session runs ~8 CC
-    * passes) otherwise accumulate one vertex-set table per call. The
-    * driver fast path below leaves nothing registered.
+    * unrecomputable). Spark's `ContextCleaner` frees those once the
+    * driver drops the returned frame and every frame derived from it
+    * (release by reachability, see [[CheckpointUtil]]), so repeated
+    * dedup passes in a long-lived session do not accumulate vertex-set
+    * tables. The driver fast path below leaves no blocks at all.
     *
     * Durability: localCheckpoint truncates lineage and stores blocks on
     * executors, so on a cluster an executor loss mid-query fails the CC
@@ -755,7 +753,6 @@ object Dedup {
         s"connectedComponents did not converge within $maxIters rounds; " +
           "raise maxIters (rounds needed grow only logarithmically with " +
           "component diameter)")
-    CheckpointUtil.register(labelBlocks)
     labels.withColumnRenamed("label", "canonical_id")
   }
 

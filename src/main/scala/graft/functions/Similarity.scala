@@ -460,13 +460,11 @@ object Similarity {
     * candidate-pruned scale route; this knob keeps the exact anchor
     * itself cluster-parallelizable.
     *
-    * Release obligation: the call is EAGER — it runs the events
-    * aggregation and checkpoints the activity cells when the frame is
-    * built, and registers those checkpoint blocks in the session-wide
-    * ledger. The caller must free them with
-    * [[CheckpointUtil.releaseRegistered]] once the returned frame is
-    * fully consumed; its lineage is truncated, so a frame executed after
-    * the release fails. */
+    * Storage: the call is EAGER — it runs the events aggregation and
+    * checkpoints the activity cells when the frame is built. Those
+    * blocks live as long as the driver references the returned frame
+    * (or one derived from it); Spark's `ContextCleaner` frees them once
+    * it is dropped (see [[CheckpointUtil]]). */
   def activityCosineTopK(events: DataFrame, keyCol: String, tsCol: String,
                          hourUs: Long, queryPred: Column, k: Int,
                          salts: Int = 1, bins: Int = 24): DataFrame = {
@@ -481,15 +479,11 @@ object Similarity {
     // key×bins-bounded (the persistable-index storage class), so at
     // 100 TB this replaces 4 full event-corpus scans per query with one;
     // locally it measures a wash-to-slight-win (min-of-8, OPTIMIZATION_r17.md §2:
-    // 0.61 → 0.59 s — the corpus aggregation is cheap at sf0.1). Blocks
-    // register in the ledger drained by [[CheckpointUtil.releaseRegistered]]
-    // — consume the returned frame before releasing (lineage is
-    // truncated; a released result cannot be recomputed). Construction
-    // is eager from here on (the checkpoint runs the events aggregation
-    // at call time), the activityCosineTopKLsh convention.
-    val (cells, cellBlocks) = CheckpointUtil.trackedLocalCheckpoint(
-      activityCells(events, keyCol, tsCol, hourUs, bins))
-    CheckpointUtil.register(cellBlocks)
+    // 0.61 → 0.59 s — the corpus aggregation is cheap at sf0.1). The
+    // blocks are freed when the returned frame becomes unreachable.
+    // Construction is eager from here on (the checkpoint runs the events
+    // aggregation at call time), the activityCosineTopKLsh convention.
+    val cells = activityCells(events, keyCol, tsCol, hourUs, bins).localCheckpoint()
     val norms = cells.groupBy(col(keyCol))
       .agg(sqrt(sum(col("_c") * col("_c")).cast("double")).as("_nrm"))
     val a0 = cells.where(queryPred)
@@ -657,15 +651,14 @@ object Similarity {
     // key-bounded (one row per key — the same artifact the ingest loop
     // persists to parquet via activityLshIndexMerge), so materializing
     // it is the CC-labels storage class, and at 100 TB it replaces
-    // repeated full event-corpus scans with one. Blocks are registered
-    // in the ledger drained by [[CheckpointUtil.releaseRegistered]].
+    // repeated full event-corpus scans with one. Its blocks are freed
+    // when the returned frame becomes unreachable.
     // Measured (sf0.1 min-of-5, OPTIMIZATION_r16.md §5): 1.08 → 0.50 s, output
     // row-identical. Durability: executor-loss makes the truncated-
     // lineage index unrecomputable → query-level retry; the bounded-
     // state trade is documented on [[CheckpointUtil]].
-    val (idx, blocks) = CheckpointUtil.trackedLocalCheckpoint(
-      activityLshIndex(events, keyCol, tsCol, hourUs, tables, bits, bins))
-    CheckpointUtil.register(blocks)
+    val idx = activityLshIndex(events, keyCol, tsCol, hourUs, tables, bits, bins)
+      .localCheckpoint()
     activityCosineTopKLshProbe(idx, keyCol, queryPred, k, broadcastQueries)
   }
 

@@ -127,12 +127,6 @@ object SketchMaintain {
         s"$what column name must not contain '|', ';' or '=' " +
           s"(got $c): sketch_meta uses them as delimiters")
     }
-    def dbg[A](name: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val r = body
-      if (sys.env.contains("SPARK_GRAFT_SKETCH_DEBUG"))
-        println(f"[sketchdbg] $name%-10s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
     val dir = new Path(stateDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val committed = listRounds(fs, dir)
@@ -178,7 +172,7 @@ object SketchMaintain {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the count both yields the round total AND settles the cache, so the
     // three concurrent writes below never race to materialize it
-    val nInc = dbg("count")(inc.count())
+    val nInc = inc.count()
     val total = prev.map(_._2).getOrElse(0L) + nInc
     val cellsInc = Sketches.cmsPartial(inc, col("_v"), depth, width)
     val kmvInc = Sketches.kmvPartial(inc, "_g", col("_v"), k)
@@ -221,12 +215,12 @@ object SketchMaintain {
       scala.concurrent.Future {
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "graft_sketch")
         val path = new Path(roundDir, name).toString
-        dbg(s"${name}_write")(write(path))
+        write(path)
         // eagerFrames=false (the streaming handler): the caller never
         // reads the frames, so skip the cache+count read-back entirely —
         // the returned frame is a plain lazy scan of what was just
         // written and release() is a no-op on it
-        if (eagerFrames) dbg(s"${name}_load")(eager(spark.read.parquet(path)))
+        if (eagerFrames) eager(spark.read.parquet(path))
         else spark.read.parquet(path)
       }
     val frames =

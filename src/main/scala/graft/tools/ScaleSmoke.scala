@@ -285,6 +285,7 @@ object ScaleSmoke {
                         deepFactors: Seq[Int], deep400Factors: Seq[Int],
                         runs: Int): Unit = {
     val spark = DevTool.session()
+    val storageBaseline = spark.sparkContext.getPersistentRDDs.size
     val docs0 = Tables.documents(spark, dir).select("doc_id", "text")
     val embs0 = Tables.embeddings(spark, dir)
     // (family, factor, sec, rows, io-segment sentinel) across passes
@@ -784,7 +785,10 @@ object ScaleSmoke {
       if (deep400Factors.nonEmpty && deepFactors.contains(100))
         semDedupTwoPair(100)
       deep400Factors.foreach(deep400Suite)
-      graft.functions.CheckpointUtil.releaseRegistered()
+      // every pass's frames are dropped by now: wait for Spark's
+      // ContextCleaner to free their checkpoint blocks before the next
+      graft.functions.CheckpointUtil.awaitUnreferenced(
+        spark.sparkContext, storageBaseline, 10000L)
     }
 
     spark.stop()

@@ -8,6 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Persistent RDDs once Spark's `ContextCleaner` has freed what earlier
+    * cases dropped: the storage baseline a case measures against. */
+  def storageBaseline(): Int =
+    graft.functions.CheckpointUtil.awaitUnreferenced(spark.sparkContext, 0, 1000L)
+
+  /** Persistent RDDs after waiting for the cleaner to bring them back to
+    * `baseline`: equal to it once everything a case dropped is freed. */
+  def storageAfterDrop(baseline: Int): Int =
+    graft.functions.CheckpointUtil.awaitUnreferenced(spark.sparkContext, baseline, 30000L)
 }
 
 object SparkSpec {

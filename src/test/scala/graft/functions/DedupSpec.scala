@@ -130,7 +130,6 @@ class DedupSpec extends SparkSpec {
     val fast = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
     val loop = Dedup.ccDistributed(pairs).as[(Long, Long)].collect().toMap
     assert(fast === loop)
-    CheckpointUtil.releaseRegistered()
   }
 
   test("connectedComponents handles non-numeric ids (typed null carry, not a long sentinel)") {
@@ -304,17 +303,16 @@ class DedupSpec extends SparkSpec {
     assert(got.nonEmpty, "fixture must contain cross-split near-dups")
   }
 
-  test("repeated nearDupClusters + releaseRegistered returns executor storage to baseline") {
+  test("held ccDistributed frames pin one label table each and free it once dropped") {
     // the round-7 finding: every connectedComponents call localCheckpoints
     // edges + one label table per round and never unpersisted any — ~8 CC
     // runs per bench session of permanently pinned blocks. The fix frees
-    // intermediates inside the call; the returned table's blocks go to the
-    // one CheckpointUtil ledger. Assert on getPersistentRDDs (the only
+    // intermediates inside the call; the returned table's blocks live as
+    // long as the driver references the frame, and Spark's ContextCleaner
+    // frees them once it does not. Assert on getPersistentRDDs (the only
     // view that sees checkpoint blocks — the CacheManager doesn't).
-    CheckpointUtil.releaseRegistered()
     def live(): Int = spark.sparkContext.getPersistentRDDs.size
-    val baseline = live()
-    assert(CheckpointUtil.registeredCount === 0)
+    val baseline = storageBaseline()
     // r16: the public entry resolves bounded Long-id graphs driver-side
     // and must leave NOTHING pinned (edges checkpoint freed on exit, no
     // label table exists)
@@ -323,29 +321,23 @@ class DedupSpec extends SparkSpec {
     }
     assert(live() === baseline,
       "the driver fast path must leave no checkpoint blocks pinned")
-    assert(CheckpointUtil.registeredCount === 0,
-      "the driver fast path must register nothing")
-    // the distributed loop keeps its one returned label table per call
+    // the distributed loop keeps one returned label table per held frame
     // (lineage truncated — freeing it would make the result
-    // unrecomputable) until the ledger is drained
+    // unrecomputable)
     val pairs = Dedup.minhashLsh(docs, Bands, 800).select("doc_a", "doc_b")
+    var held = Seq.empty[org.apache.spark.sql.DataFrame]
     val perCall = new scala.collection.mutable.ArrayBuffer[Int]
-    val registered = new scala.collection.mutable.ArrayBuffer[Int]
     (1 to 3).foreach { _ =>
-      Dedup.ccDistributed(pairs).count()
+      held :+= Dedup.ccDistributed(pairs)
+      held.last.count()
       perCall += live() - baseline
-      registered += CheckpointUtil.registeredCount
     }
     assert(perCall(0) >= 1, "expected the returned label table to stay pinned")
     assert(perCall.toSeq === Seq(perCall(0), 2 * perCall(0), 3 * perCall(0)),
       s"per-round intermediates leaked: persistent-RDD growth $perCall")
-    // every block a call leaves pinned is a label block in the one ledger
-    assert(registered === perCall,
-      s"registered blocks $registered vs pinned blocks $perCall")
-    CheckpointUtil.releaseRegistered()
-    assert(CheckpointUtil.registeredCount === 0)
-    assert(live() === baseline,
-      "releaseRegistered must return executor storage to baseline")
+    held = Nil
+    assert(storageAfterDrop(baseline) === baseline,
+      "dropping the frames must return executor storage to baseline")
   }
 
   test("lineDedup drops cross-doc boilerplate lines, keeps blanks, repeats-in-one-doc and order") {

@@ -162,10 +162,10 @@ class IncrementalAggSpec extends SparkSpec {
 
   test("capture-loop epilogue: a committed round retains no registered checkpoint blocks") {
     // the digest-pruned diff prunes by dirty bucket ids collected on the
-    // driver and registers no blocks, so a scheduled loop never
+    // driver and persists nothing, so a scheduled loop never
     // accumulates bucket tables
     import graft.streaming.SnapshotCapture
-    graft.functions.CheckpointUtil.releaseRegistered() // baseline: drain prior tests
+    val baseline = storageBaseline()
     val grans = Seq("b" -> 100L)
     val state = java.nio.file.Files.createTempDirectory("graft_ledger").toString
     val s0 = (1 to 40).map(i => (i.toLong, (i % 3).toLong, i.toLong * 7 - 120, i / 4.0))
@@ -177,8 +177,8 @@ class IncrementalAggSpec extends SparkSpec {
     SnapshotCapture.captureIntoLadder(spark,
       s1.toDF("event_id", "key", "ts", "value"), Seq("event_id"), state,
       "key", "ts", "value", grans)
-    assert(graft.functions.CheckpointUtil.registeredCount === 0,
-      "a committed capture round must leave zero registered checkpoint blocks")
+    assert(storageAfterDrop(baseline) === baseline,
+      "a committed capture round must leave no persisted RDDs behind")
   }
 
   test("captureIntoLadder: changing the finest grain between rounds re-bootstraps, not mixed-grain-merges") {

@@ -57,18 +57,17 @@ class CorpusIngestSpec extends SparkSpec {
   }
 
   test("ingest batch epilogue: a handler round retains no registered checkpoint blocks") {
-    // the r16 verdict's ledger-hygiene pin: a long-lived ingest session
+    // the r16 verdict's storage-hygiene pin: a long-lived ingest session
     // must return executor storage to baseline after every batch — the
-    // handler's operators (minhashLsh, crossCorpusPairs) register nothing
-    // in the session ledger, and anything registered earlier in the
-    // session is drained by the release hook the loop owner calls
-    graft.functions.CheckpointUtil.releaseRegistered() // baseline: drain prior tests
+    // handler unpersists its own batch caches, and nothing it persists
+    // stays referenced once the batch is done
+    val baseline = storageBaseline()
     val dir = java.nio.file.Files.createTempDirectory("corpus_ledger").toString
     val h = CorpusIngest.handler(dir, Bands, Thresh)
     CorpusIngest.seed(mkDocs(1L -> body("alpha")), dir, Bands)
     h(mkDocs(10L -> body("gamma"), 11L -> edited("gamma")), 0L)
-    assert(graft.functions.CheckpointUtil.registeredCount === 0,
-      "an ingest batch must leave zero registered checkpoint blocks")
+    assert(storageAfterDrop(baseline) === baseline,
+      "an ingest batch must leave no persisted RDDs behind")
   }
 
   test("compact folds batch dirs into seed: same corpus, same admission decisions after") {

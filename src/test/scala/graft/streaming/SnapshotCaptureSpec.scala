@@ -9,11 +9,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.{Cdc, SparkSpec}
-import graft.functions.CheckpointUtil
 import graft.operators.{IncrementalAgg, SnapshotDiff}
 
 /** The snapshot capture loop's per-round work, pinned by deterministic
-  * counts (jobs, call sites, plan nodes, registered blocks, round
+  * counts (jobs, call sites, plan nodes, persisted RDDs, round
   * directories) rather than wall time, plus its state-layout
   * compatibility and schema-drift failure modes. Round-trip and crash
   * replay are pinned in CdcSpec. */
@@ -182,7 +181,7 @@ class SnapshotCaptureSpec extends SparkSpec {
   test("pruned diffs plan no broadcast exchange and register no checkpoint blocks") {
     val before = (1L to 500L).map(i => (i, s"s$i")).toDF("id", "s")
     val after = (2L to 501L).map(i => (i, if (i == 7) "CHANGED" else s"s$i")).toDF("id", "s")
-    val registered = CheckpointUtil.registeredCount
+    val baseline = storageBaseline()
     val pruned = SnapshotDiff.diffPruned(before, after, Seq("id"), 64)
     val incr = SnapshotDiff.diffPrunedIncremental(before,
       SnapshotDiff.bucketDigests(before, Seq("id"), 64), after, Seq("id"), 64)
@@ -192,24 +191,25 @@ class SnapshotCaptureSpec extends SparkSpec {
       assert(rows(d.select("id", "_op").orderBy("id")) ===
         Seq(Seq(1L, "delete"), Seq(7L, "update"), Seq(501L, "insert")))
     }
-    assert(CheckpointUtil.registeredCount === registered)
+    // both frames are still held here: a checkpoint behind either would
+    // keep storage above the baseline
+    assert(storageAfterDrop(baseline) === baseline)
   }
 
   test("a capture round leaves other code's registered checkpoint blocks alone") {
     withDerby("cap_ledger") { (conn, opts, spec) =>
       val state = stateDir("cap_ledger_state")
       Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT")
-      // a returned frame backed by registered blocks, as activityCosineTopK leaves one
-      val (held, blocks) = CheckpointUtil.trackedLocalCheckpoint(
-        spark.range(0, 100).toDF("x").where($"x" % 3 === 0))
-      CheckpointUtil.register(blocks)
-      try {
-        val before = CheckpointUtil.registeredCount
-        conn.createStatement().execute("UPDATE CSRC SET NAME = 'u' WHERE ID = 5")
-        assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 1L)
-        assert(CheckpointUtil.registeredCount === before)
-        assert(held.count() === 34L)
-      } finally CheckpointUtil.releaseRegistered()
+      // a returned frame backed by checkpoint blocks, as activityCosineTopK leaves one
+      val baseline = storageBaseline()
+      val held = spark.range(0, 100).toDF("x").where($"x" % 3 === 0).localCheckpoint()
+      val withHeld = spark.sparkContext.getPersistentRDDs.size
+      assert(withHeld > baseline)
+      conn.createStatement().execute("UPDATE CSRC SET NAME = 'u' WHERE ID = 5")
+      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 1L)
+      // the round neither frees the held frame's blocks nor leaves its own
+      assert(storageAfterDrop(withHeld) === withHeld)
+      assert(held.count() === 34L)
     }
   }
 
