@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -8,9 +8,16 @@ import org.apache.spark.sql.AnalysisException
 import graft.functions.expr.{AnchorWindowHashes, AnchorWindowPosHashes, BinCountAgg, BpeMergePair, CharHist16, MinhashBands, NearestCell, NearestCellTwoLevel, NearestCells, NearestCellsTwoLevel, PqAdcScore, PqAdcTable, Simhash16, TrigramShingles, VecDot, VecSumFixed, WordRepStats, WordStats, WordTermCounts}
 import graft.functions.TextFunctions
 
-/** Engine extensions: custom Catalyst expressions registered through the
-  * supported `SparkSessionExtensions` hook
-  * (`spark.sql.extensions=graft.GraftExtensions`).
+/** Engine extensions: custom Catalyst expressions ("kernels"), reachable
+  * two ways from ONE registration table:
+  *   - the supported `SparkSessionExtensions` hook
+  *     (`spark.sql.extensions=graft.GraftExtensions`, set by
+  *     [[GraftSession]]), which SQL text needs;
+  *   - [[GraftExtensions.ensure]], which registers the same entries into
+  *     any session on use. Every DataFrame-level call site goes through
+  *     [[GraftExtensions.kernel]], so a frame built on a session without
+  *     the extensions conf plans the same kernels, not a slower or
+  *     failing substitute.
   *
   * Registrations live as DATA in the companion object so the plan-audit
   * sweep ([[graft.tools.KernelAudit.Kernels]]) derives its kernel list
@@ -110,7 +117,7 @@ object GraftExtensions {
     ("word_stats", classOf[WordStats], (children: Seq[Expression]) => {
       arity("word_stats", children, 1)
       // constants owned by TextFunctions — one source of truth with the
-      // composable twins and the DuckDB oracle generators
+      // DuckDB oracle generators
       WordStats(children.head, TextFunctions.Stopwords, TextFunctions.LangMarkers)
     }),
     ("char_hist16", classOf[CharHist16], (children: Seq[Expression]) => {
@@ -170,4 +177,41 @@ object GraftExtensions {
 
   /** The registered function names, in registration order. */
   val FunctionNames: Seq[String] = registrations.map(_._1)
+
+  /** Register every [[registrations]] entry that `session`'s function
+    * registry lacks (the check-then-inject form of a session extension).
+    * Idempotent: a session built with the extensions conf, or one that
+    * was already ensured, registers nothing. Registration is per
+    * session, so a parent or sibling session is left as it is.
+    *
+    * A name already bound to another class (for example a user's
+    * `spark.udf.register("word_stats", ...)`) is refused before anything
+    * is registered: calling it would run the user's function in place of
+    * the kernel. */
+  def ensure(session: SparkSession): Unit = {
+    val registry = session.sessionState.functionRegistry
+    registry.synchronized {
+      val missing = registrations.filter { case (name, cls, _) =>
+        registry.lookupFunction(FunctionIdentifier(name)) match {
+          case None => true
+          case Some(info) if info.getClassName == cls.getName => false
+          case Some(info) => throw new IllegalStateException(
+            s"function $name is already registered as ${info.getClassName}, " +
+              s"not the engine kernel ${cls.getName}")
+        }
+      }
+      missing.foreach { case (name, cls, builder) =>
+        registry.registerFunction(FunctionIdentifier(name),
+          new ExpressionInfo(cls.getName, name), builder)
+      }
+    }
+  }
+
+  /** A kernel call: [[ensure]] on the session that owns the frame the
+    * column is used in, then `call_function`. The one route every
+    * DataFrame-level caller takes to a registered kernel. */
+  def kernel(session: SparkSession, name: String, args: Column*): Column = {
+    ensure(session)
+    org.apache.spark.sql.functions.call_function(name, args: _*)
+  }
 }

@@ -19,71 +19,39 @@ object PipelineQueries {
 
   // ---- text analysis ----
 
+  /** The `word_stats` kernel over `text`, registered into `s`. */
+  private def wordStats(s: SparkSession) =
+    GraftExtensions.kernel(s, "word_stats", col("text"))
+
   /** p1 — token counting + basic stats (whitespace + BPE-ish regex).
     * All four counts come from the single-pass codegen'd
-    * [[graft.functions.expr.WordStats]] when registered; the composable
-    * twins [[p1Composable]]/[[p2Composable]]/[[p3Composable]] are
-    * parity-tested in PipelineSpec + TextPropertySpec and mirror the
-    * DuckDB oracle. */
+    * [[graft.functions.expr.WordStats]]; PipelineSpec and
+    * TextPropertySpec pin it against composable built-in references
+    * that mirror the DuckDB oracle. */
   private def p1(s: SparkSession, dir: String): DataFrame =
-    if (s.catalog.functionExists("word_stats"))
-      docs(s, dir).withColumn("_st", call_function("word_stats", col("text")))
-        .select(col("doc_id"),
-          col("_st.word_cnt").as("word_cnt"),
-          col("_st.alpha_chars").as("alpha_chars"),
-          col("_st.ws_tokens").as("ws_tokens"),
-          col("_st.bpe_tokens").as("bpe_tokens"),
-          TF.centi(col("_st.alpha_chars"), col("_st.word_cnt")).as("avg_wlen_centi"))
-        .orderBy("doc_id")
-    else p1Composable(s, dir)
-
-  private[graft] def p1Composable(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).withColumn("norm", TF.normText(col("text")))
-      .withColumn("ws", TF.words(col("norm")))
-    d.select(col("doc_id"),
-      TF.wordCount(col("ws")).as("word_cnt"),
-      TF.alphaChars(col("norm")).as("alpha_chars"),
-      TF.wsTokenCount(col("text")).as("ws_tokens"),
-      TF.bpeTokenCount(col("text")).as("bpe_tokens"),
-      TF.centi(TF.alphaChars(col("norm")), TF.wordCount(col("ws"))).as("avg_wlen_centi"))
+    docs(s, dir).withColumn("_st", wordStats(s))
+      .select(col("doc_id"),
+        col("_st.word_cnt").as("word_cnt"),
+        col("_st.alpha_chars").as("alpha_chars"),
+        col("_st.ws_tokens").as("ws_tokens"),
+        col("_st.bpe_tokens").as("bpe_tokens"),
+        TF.centi(col("_st.alpha_chars"), col("_st.word_cnt")).as("avg_wlen_centi"))
       .orderBy("doc_id")
-  }
 
   /** p2 — quality scoring (length / stopword-ratio / word-shape rules). */
   private def p2(s: SparkSession, dir: String): DataFrame =
-    if (s.catalog.functionExists("word_stats"))
-      docs(s, dir).withColumn("_st", call_function("word_stats", col("text")))
-        .withColumn("word_cnt", col("_st.word_cnt"))
-        .withColumn("stop_milli", TF.milli(col("_st.stop_hits"), col("word_cnt")))
-        .withColumn("avg_wlen_centi", TF.centi(col("_st.alpha_chars"), col("word_cnt")))
-        .select(col("doc_id"), col("word_cnt"), col("stop_milli"),
-          TF.qualityScore(col("word_cnt"), col("stop_milli"), col("avg_wlen_centi")).as("quality"))
-        .orderBy("doc_id")
-    else p2Composable(s, dir)
-
-  private[graft] def p2Composable(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).withColumn("norm", TF.normText(col("text")))
-      .withColumn("ws", TF.words(col("norm")))
-      .withColumn("word_cnt", TF.wordCount(col("ws")))
-      .withColumn("stop_milli", TF.milli(TF.setHits(col("ws"), TF.Stopwords), col("word_cnt")))
-      .withColumn("avg_wlen_centi", TF.centi(TF.alphaChars(col("norm")), col("word_cnt")))
-    d.select(col("doc_id"), col("word_cnt"), col("stop_milli"),
-      TF.qualityScore(col("word_cnt"), col("stop_milli"), col("avg_wlen_centi")).as("quality"))
+    docs(s, dir).withColumn("_st", wordStats(s))
+      .withColumn("word_cnt", col("_st.word_cnt"))
+      .withColumn("stop_milli", TF.milli(col("_st.stop_hits"), col("word_cnt")))
+      .withColumn("avg_wlen_centi", TF.centi(col("_st.alpha_chars"), col("word_cnt")))
+      .select(col("doc_id"), col("word_cnt"), col("stop_milli"),
+        TF.qualityScore(col("word_cnt"), col("stop_milli"), col("avg_wlen_centi")).as("quality"))
       .orderBy("doc_id")
-  }
 
   /** p3 — language-ID heuristic (marker-word argmax). */
   private def p3(s: SparkSession, dir: String): DataFrame =
-    if (s.catalog.functionExists("word_stats"))
-      docs(s, dir)
-        .select(col("doc_id"),
-          call_function("word_stats", col("text")).getField("lang_guess").as("lang_guess"))
-        .orderBy("doc_id")
-    else p3Composable(s, dir)
-
-  private[graft] def p3Composable(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).withColumn("ws", TF.words(TF.normText(col("text"))))
-      .select(col("doc_id"), TF.langGuess(col("ws")).as("lang_guess"))
+    docs(s, dir)
+      .select(col("doc_id"), wordStats(s).getField("lang_guess").as("lang_guess"))
       .orderBy("doc_id")
 
   /** p4 — document fingerprinting: md5 content hash, 16-bit SimHash,
@@ -225,50 +193,21 @@ object PipelineQueries {
     * a per-row property, so counting runs inside the scan stage via the
     * single-pass codegen'd [[graft.functions.expr.WordRepStats]] — zero
     * shuffles at any corpus size (the previous explode → two-level
-    * aggregation formulation paid four exchanges plus two joins; the
-    * composable twin [[p15Composable]] is parity-tested in
-    * PipelineSpec and TextPropertySpec and mirrors the DuckDB oracle). */
-  private def p15(s: SparkSession, dir: String): DataFrame =
-    if (s.catalog.functionExists("word_rep_stats")) {
-      val st = call_function("word_rep_stats", col("text"))
-      // coalesce each count: a null text yields a null struct here, while
-      // the composable twin's left join + COALESCE (and the DuckDB
-      // oracle) emit all-zero stats for that doc
-      def cnt(field: String) = coalesce(col(s"_st.$field"), lit(0L))
-      docs(s, dir)
-        .withColumn("_st", st)
-        .select(col("doc_id"),
-          cnt("total").as("word_cnt"),
-          TF.milli(cnt("dst"), cnt("total")).as("distinct_milli"),
-          TF.milli(cnt("top"), cnt("total")).as("top_word_milli"),
-          TF.milli(cnt("btop"), cnt("btotal")).as("top_bigram_milli"))
-        .orderBy("doc_id")
-    } else p15Composable(s, dir)
-
-  /** Composable twin of [[graft.functions.expr.WordRepStats]] — built-in
-    * functions only, identical values (parity-asserted in
-    * PipelineSpec and TextPropertySpec). */
-  private[graft] def p15Composable(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir)
-      .withColumn("ws", TF.words(TF.normText(col("text"))))
-    val wordStats = base.select(col("doc_id"), explode(col("ws")).as("w"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id")
-      .agg(sum("c").as("total"), max("c").as("top"), count(lit(1)).as("dst"))
-    val biStats = base.select(col("doc_id"), explode(TF.bigrams(col("ws"))).as("b"))
-      .groupBy("doc_id", "b").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id").agg(sum("c").as("btotal"), max("c").as("btop"))
-    base.select("doc_id")
-      .join(wordStats, Seq("doc_id"), "left")
-      .join(biStats, Seq("doc_id"), "left")
+    * aggregation formulation paid four exchanges plus two joins; that
+    * formulation stays in PipelineSpec and TextPropertySpec as the
+    * parity reference and mirrors the DuckDB oracle). */
+  private def p15(s: SparkSession, dir: String): DataFrame = {
+    // coalesce each count: a null text yields a null struct here, while
+    // the explode + left join + COALESCE formulation (and the DuckDB
+    // oracle) emit all-zero stats for that doc
+    def cnt(field: String) = coalesce(col(s"_st.$field"), lit(0L))
+    docs(s, dir)
+      .withColumn("_st", GraftExtensions.kernel(s, "word_rep_stats", col("text")))
       .select(col("doc_id"),
-        coalesce(col("total"), lit(0L)).as("word_cnt"),
-        TF.milli(coalesce(col("dst"), lit(0L)), coalesce(col("total"), lit(0L)))
-          .as("distinct_milli"),
-        TF.milli(coalesce(col("top"), lit(0L)), coalesce(col("total"), lit(0L)))
-          .as("top_word_milli"),
-        TF.milli(coalesce(col("btop"), lit(0L)), coalesce(col("btotal"), lit(0L)))
-          .as("top_bigram_milli"))
+        cnt("total").as("word_cnt"),
+        TF.milli(cnt("dst"), cnt("total")).as("distinct_milli"),
+        TF.milli(cnt("top"), cnt("total")).as("top_word_milli"),
+        TF.milli(cnt("btop"), cnt("btotal")).as("top_bigram_milli"))
       .orderBy("doc_id")
   }
 
@@ -363,25 +302,17 @@ object PipelineQueries {
     *
     * The histogram is computed PER ROW by the one-pass codegen'd
     * [[graft.functions.expr.CharHist16]] and then posexploded, so the
-    * Generate is bounded at 16 rows/doc; the composable twin
-    * [[p21Composable]] (explode every character, partial-agg back) is
-    * parity-tested in PipelineSpec and mirrors the DuckDB oracle. Only
-    * present bins emit (cnt > 0), like the group-by formulation. */
+    * Generate is bounded at 16 rows/doc; the explode-every-character
+    * group-by formulation is the parity reference in PipelineSpec and
+    * mirrors the DuckDB oracle. Only present bins emit (cnt > 0), like
+    * the group-by formulation. */
   private def p21(s: SparkSession, dir: String): DataFrame =
-    if (s.catalog.functionExists("char_hist16"))
-      docs(s, dir)
-        .select(col("doc_id"),
-          posexplode(call_function("char_hist16", col("text"))).as(Seq("bin", "cnt")))
-        .where(col("cnt") > 0)
-        .select(col("doc_id"), col("bin"), col("cnt"))
-        .orderBy("doc_id", "bin")
-    else p21Composable(s, dir)
-
-  private[graft] def p21Composable(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"), explode(split(col("text"), "")).as("c"))
-      .where(col("c") =!= "")
-      .groupBy(col("doc_id"), (ascii(col("c")) % 16).as("bin"))
-      .agg(count(lit(1)).as("cnt"))
+    docs(s, dir)
+      .select(col("doc_id"),
+        posexplode(GraftExtensions.kernel(s, "char_hist16", col("text")))
+          .as(Seq("bin", "cnt")))
+      .where(col("cnt") > 0)
+      .select(col("doc_id"), col("bin"), col("cnt"))
       .orderBy("doc_id", "bin")
 
   /** p22 — near-dup cluster canonicalization: [[Dedup.nearDupClusters]]
@@ -401,13 +332,8 @@ object PipelineQueries {
     * (lang, word_cnt) cells, never documents (the 100 TB shape; a
     * sort-based percentile would shuffle every row). */
   private def p23(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val wc =
-      if (s.catalog.functionExists("word_stats"))
-        d.select(col("lang"),
-          call_function("word_stats", col("text")).getField("word_cnt").as("word_cnt"))
-      else d.select(col("lang"),
-        TF.wordCount(TF.words(TF.normText(col("text")))).as("word_cnt"))
+    val wc = docs(s, dir)
+      .select(col("lang"), wordStats(s).getField("word_cnt").as("word_cnt"))
     graft.operators.Distribution
       .groupedDiscreteQuantiles(wc, "lang", "word_cnt",
         Seq(("p50_tokens", 1, 2), ("p90_tokens", 9, 10)))
@@ -476,13 +402,8 @@ object PipelineQueries {
     * assigned by its START offset (chunked-packing semantics: readers
     * split straddling docs at bin edges). */
   private def p28(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val toks =
-      if (s.catalog.functionExists("word_stats"))
-        d.select(col("doc_id"),
-          call_function("word_stats", col("text")).getField("word_cnt").as("word_cnt"))
-      else d.select(col("doc_id"),
-        TF.wordCount(TF.words(TF.normText(col("text")))).as("word_cnt"))
+    val toks = docs(s, dir)
+      .select(col("doc_id"), wordStats(s).getField("word_cnt").as("word_cnt"))
     graft.operators.PrefixSum.runningBefore(toks, "doc_id", "word_cnt", "off")
       .select(col("doc_id"), col("word_cnt"),
         expr(s"off div ${PackBudget}L").as("bin"),
@@ -529,22 +450,12 @@ object PipelineQueries {
     * required. */
   private def p30(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val q =
-      if (s.catalog.functionExists("word_stats"))
-        d.withColumn("_st", call_function("word_stats", col("text")))
-          .withColumn("word_cnt", col("_st.word_cnt"))
-          .withColumn("stop_milli", TF.milli(col("_st.stop_hits"), col("word_cnt")))
-          .withColumn("awc", TF.centi(col("_st.alpha_chars"), col("word_cnt")))
-          .select(col("doc_id"),
-            TF.qualityScore(col("word_cnt"), col("stop_milli"), col("awc")).as("quality"))
-      else
-        d.withColumn("norm", TF.normText(col("text")))
-          .withColumn("ws", TF.words(col("norm")))
-          .withColumn("word_cnt", TF.wordCount(col("ws")))
-          .withColumn("stop_milli", TF.milli(TF.setHits(col("ws"), TF.Stopwords), col("word_cnt")))
-          .withColumn("awc", TF.centi(TF.alphaChars(col("norm")), col("word_cnt")))
-          .select(col("doc_id"),
-            TF.qualityScore(col("word_cnt"), col("stop_milli"), col("awc")).as("quality"))
+    val q = d.withColumn("_st", wordStats(s))
+      .withColumn("word_cnt", col("_st.word_cnt"))
+      .withColumn("stop_milli", TF.milli(col("_st.stop_hits"), col("word_cnt")))
+      .withColumn("awc", TF.centi(col("_st.alpha_chars"), col("word_cnt")))
+      .select(col("doc_id"),
+        TF.qualityScore(col("word_cnt"), col("stop_milli"), col("awc")).as("quality"))
     Dedup.keepBest(q, Dedup.nearDupClusters(d, Bands, JaccThreshold))
       .orderBy("kept_id")
   }

@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.GraftExtensions
 
 /** Deduplication operators for the training-data pipeline: exact
   * (hash-groupBy), n-gram Jaccard, MinHash+LSH (Broder 1997, "On the
@@ -50,29 +51,14 @@ object Dedup {
   /** (sid, shs) — per-doc distinct word-trigram shingle ARRAY (map-side;
     * the explode-free base every MinHash/Jaccard stage derives from).
     *
-    * Uses the single-pass codegen'd [[expr.TrigramShingles]] when the
-    * session has [[graft.GraftExtensions]] loaded (~7x the composable
-    * pipeline, which is the shared dominant cost of p6/p7/p19); the
-    * composable [[shingleArraysFallback]] produces identical bytes
-    * (parity-tested in DedupSpec). */
+    * Uses the single-pass codegen'd [[expr.TrigramShingles]]: ~7x the
+    * composable [[TextFunctions.trigramShingles]] pipeline (DedupSpec pins
+    * the two byte-identical), and the shared dominant cost of p6/p7/p19. */
   def shingleArrays(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     EngineWarnings.warnIfGenerateInferEnabled(docs.sparkSession, "shingleArrays")
-    if (docs.sparkSession.catalog.functionExists("trigram_shingles"))
-      docs.select(col(idCol).as("sid"),
-        call_function("trigram_shingles", col(textCol)).as("shs"))
-    else shingleArraysFallback(docs, idCol, textCol)
+    docs.select(col(idCol).as("sid"),
+      GraftExtensions.kernel(docs.sparkSession, "trigram_shingles", col(textCol)).as("shs"))
   }
-
-  /** Composable twin of [[expr.TrigramShingles]] — built-in functions only,
-    * identical bytes (parity-asserted in DedupSpec).
-    *
-    * `_ws` is materialized via withColumn BEFORE the trigram lambda touches
-    * it: `element_at(ws, i)` inside a higher-order function re-evaluates
-    * its argument expression per element, so an unmaterialized
-    * regexp+split would run 3x per trigram (measured 30x slowdown). */
-  def shingleArraysFallback(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.withColumn("_ws", TextFunctions.words(TextFunctions.normText(col(textCol))))
-      .select(col(idCol).as("sid"), TextFunctions.trigramShingles(col("_ws")).as("shs"))
 
   /** (sid, sh) exploded distinct word-trigram shingles. */
   def shingles(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
@@ -120,31 +106,14 @@ object Dedup {
   val RowsPerBand = 2
 
   /** Per-doc band-signature ARRAY: element b = concat over r of
-    * min(md5("b.r|" || shingle)). Uses the single-pass codegen'd
-    * [[expr.MinhashBands]] when the session has [[graft.GraftExtensions]]
-    * loaded; the composable fallback (one md5 transform + array_min per
-    * (band, row)) produces identical bytes (parity-tested in DedupSpec). */
+    * min(md5("b.r|" || shingle)), by the single-pass codegen'd
+    * [[expr.MinhashBands]] (DedupSpec pins it byte-identical to one md5
+    * transform + array_min per (band, row)). `session` is the one that
+    * owns the consuming DataFrame (threaded by [[minhashSignatureRows]]);
+    * the kernel is registered into it. */
   def minhashBandsCol(shs: Column, bands: Int,
-                      session: SparkSession = SparkSession.active): Column = {
-    // `session` must be the one that owns the consuming DataFrame (threaded
-    // by minhashSignatureRows): SparkSession.active can differ under
-    // newSession()/multi-session drivers, silently switching between the
-    // codegen expression and the fallback or failing analysis.
-    if (session.catalog.functionExists("minhash_bands"))
-      call_function("minhash_bands", shs, lit(bands), lit(RowsPerBand))
-    else minhashBandsFallback(shs, bands)
-  }
-
-  /** Composable twin of [[expr.MinhashBands]] — built-in functions only,
-    * identical bytes (parity-asserted in DedupSpec). */
-  def minhashBandsFallback(shs: Column, bands: Int): Column = {
-    val sigs = (0 until bands).map { b =>
-      concat((0 until RowsPerBand).map { r =>
-        array_min(transform(shs, s => md5(concat(lit(s"$b.$r|"), s))))
-      }: _*)
-    }
-    when(size(shs) > 0, array(sigs: _*)).otherwise(array().cast("array<string>"))
-  }
+                      session: SparkSession = SparkSession.active): Column =
+    GraftExtensions.kernel(session, "minhash_bands", shs, lit(bands), lit(RowsPerBand))
 
   /** (sid, band, sig) signature rows — posexplode of the map-side band
     * array; shingle-less docs emit no rows. */
@@ -443,16 +412,11 @@ object Dedup {
     * contract. */
   def substringOverlapPairs(docs: DataFrame, windowLen: Int,
                             minShared: Long): DataFrame = {
-    // one-pass codegen kernel when the session has GraftExtensions; the
-    // composable HOF chain (interpreted, text-length integer array per
-    // row) is the parity-pinned fallback — DedupSpec asserts equality
-    val hashes =
-      if (docs.sparkSession.catalog.functionExists("anchor_window_hashes"))
-        docs.select(col("doc_id").as("sid"),
-          explode(call_function("anchor_window_hashes",
-            col("text"), lit(windowLen))).as("wh"))
-      else substringWindowHashesFallback(docs, windowLen)
-    val wh = hashes
+    // one-pass codegen kernel; DedupSpec pins it against the composable
+    // HOF chain (interpreted, text-length integer array per row)
+    val wh = docs.select(col("doc_id").as("sid"),
+        explode(GraftExtensions.kernel(docs.sparkSession, "anchor_window_hashes",
+          col("text"), lit(windowLen))).as("wh"))
       .hint("merge") // same Generate-underestimate guard as the shingle joins
     val a = wh.select(col("sid").as("doc_a"), col("wh"))
     val b = wh.select(col("sid").as("doc_b"), col("wh"))
@@ -497,35 +461,22 @@ object Dedup {
     require(windowLen >= 1 && minDocs >= 2,
       s"need windowLen >= 1 and minDocs >= 2, got $windowLen/$minDocs")
     val normed = docs.withColumn("_norm", TextFunctions.normText(col(textCol)))
-    // positioned window hashes: one-pass codegen kernel when the session
-    // has GraftExtensions; interpreted HOF chain as the parity-pinned
-    // fallback (DedupSpec asserts equality)
-    val pw =
-      if (docs.sparkSession.catalog.functionExists("anchor_window_pos_hashes"))
-        docs.select(col(idCol),
-          explode(call_function("anchor_window_pos_hashes",
-            col(textCol), lit(windowLen))).as("_pw"))
-          .select(col(idCol), col("_pw.pos").as("_pos"), col("_pw.wh").as("_wh"))
-      else spanWindowPosFallback(normed, windowLen, idCol)
+    // positioned window hashes: one-pass codegen kernel (DedupSpec pins
+    // it against the interpreted HOF chain)
+    val pw = docs.select(col(idCol),
+        explode(GraftExtensions.kernel(docs.sparkSession, "anchor_window_pos_hashes",
+          col(textCol), lit(windowLen))).as("_pw"))
+      .select(col(idCol), col("_pw.pos").as("_pos"), col("_pw.wh").as("_wh"))
     // verdict build: per-doc DISTINCT window hashes dedup MAP-SIDE inside
     // the per-doc array (the non-positioned kernel already emits each
-    // doc's hashes distinct; the fallback array_distincts), so the
-    // distinct-doc count per hash is ONE shuffle with map-side partial
-    // counts — the previous distinct-(doc,wh)-then-groupBy(wh) pair
+    // doc's hashes distinct), so the distinct-doc count per hash is ONE
+    // shuffle with map-side partial counts — the previous distinct-(doc,wh)-then-groupBy(wh) pair
     // shuffled the full positioned window stream twice and was ~50% of
     // the operator at the 100x smoke point (span_scrub_verdict family);
     // re-hashing the text (one digest per word) is ~5% of it
-    val docWh =
-      if (docs.sparkSession.catalog.functionExists("anchor_window_hashes"))
-        docs.select(col(idCol),
-          explode(call_function("anchor_window_hashes",
-            col(textCol), lit(windowLen))).as("_wh"))
-      else
-        normed.where(length(col("_norm")) >= windowLen)
-          .select(col(idCol), explode(array_distinct(expr(
-            s"transform(filter(sequence(1, length(_norm) - $windowLen + 1), " +
-              s"i -> i = 1 OR substring(_norm, i - 1, 1) = ' '), " +
-              s"i -> md5(substring(_norm, i, $windowLen)))"))).as("_wh"))
+    val docWh = docs.select(col(idCol),
+      explode(GraftExtensions.kernel(docs.sparkSession, "anchor_window_hashes",
+        col(textCol), lit(windowLen))).as("_wh"))
     val bad0 = docWh.groupBy(col("_wh")).agg(count(lit(1)).as("_docs"))
       .where(col("_docs") >= minDocs)
       .select(col("_wh").as("_badwh"))
@@ -556,32 +507,6 @@ object Dedup {
         (length(col("_norm")) - col("_cov")).cast("long").as("kept_chars"),
         md5(col("_scrub")).as("scrubbed_md5"))
   }
-
-  /** Composable twin of the `anchor_window_pos_hashes` kernel
-    * (parity-pinned in DedupSpec; mirrors the DuckDB oracle's positioned
-    * window CTE). Expects `_norm` present. */
-  private[functions] def spanWindowPosFallback(normed: DataFrame, windowLen: Int,
-                                               idCol: String): DataFrame =
-    normed.where(length(col("_norm")) >= windowLen)
-      .select(col(idCol), explode(expr(
-        s"transform(filter(sequence(1, length(_norm) - $windowLen + 1), " +
-          s"i -> i = 1 OR substring(_norm, i - 1, 1) = ' '), " +
-          s"i -> struct(i AS pos, md5(substring(_norm, i, $windowLen)) AS wh))"))
-        .as("_pw"))
-      .select(col(idCol), col("_pw.pos").as("_pos"), col("_pw.wh").as("_wh"))
-
-  /** Composable twin of the `anchor_window_hashes` kernel (parity-pinned
-    * in DedupSpec; mirrors the DuckDB oracle's formulation). */
-  private[functions] def substringWindowHashesFallback(docs: DataFrame,
-                                                       windowLen: Int): DataFrame =
-    docs
-      .withColumn("_norm", TextFunctions.normText(col("text")))
-      .where(length(col("_norm")) >= windowLen)
-      .select(col("doc_id").as("sid"),
-        explode(array_distinct(expr(
-          s"transform(filter(sequence(1, length(_norm) - $windowLen + 1), " +
-            s"i -> i = 1 OR substring(_norm, i - 1, 1) = ' '), " +
-            s"i -> md5(substring(_norm, i, $windowLen)))"))).as("wh"))
 
   /** Connected components over an undirected pair set — the step that
     * turns near-dup PAIRS ([[minhashLsh]] output) into duplicate CLUSTERS
@@ -843,12 +768,12 @@ object Dedup {
                          bloomItems: Long = 1000000L,
                          bloomBits: Long = 8000000L,
                          broadcastTest: Boolean = true): DataFrame = {
-    val row = test.agg(
-      call_function("bloom_agg", col("sh"), lit(bloomItems), lit(bloomBits)).as("_bf")).head()
+    val row = test.agg(GraftExtensions.kernel(test.sparkSession, "bloom_agg",
+      col("sh"), lit(bloomItems), lit(bloomBits)).as("_bf")).head()
     val pruned =
       if (row.isNullAt(0)) train
-      else train.where(
-        call_function("bloom_contains", lit(row.getAs[Array[Byte]](0)), col("sh")))
+      else train.where(GraftExtensions.kernel(train.sparkSession, "bloom_contains",
+        lit(row.getAs[Array[Byte]](0)), col("sh")))
     pruned.join(if (broadcastTest) broadcast(test) else test, Seq("sh"))
       .groupBy("train_id", "test_id").agg(count(lit(1)).as("shared"))
       .where(col("shared") >= minShared)
@@ -906,7 +831,7 @@ object Dedup {
     * so band b's signature is exactly its RowsPerBand component minima
     * concatenated) rather than re-running the per-function min-md5
     * transforms: the hashing work — the dominant cost — is paid once,
-    * in the one-pass [[expr.MinhashBands]] kernel when registered. The
+    * in the one-pass [[expr.MinhashBands]] kernel. The
     * independent md5 formulation is pinned byte-identical in DedupSpec. */
   def mhComponentsCol(shs: Column, bands: Int,
                       session: SparkSession = SparkSession.active): Column =

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.GraftExtensions
+import graft.functions.expr.CodebookCodec
 
 /** IVF (inverted-file) approximate nearest neighbor — the coarse-quantizer
   * scale path for similarity search (complement to the sign-LSH variant in
@@ -53,20 +55,6 @@ object IvfIndex {
     require(rows.map(_._1).toSeq == rows.indices.toSeq,
       s"codebook cells at $path are not contiguous 0..${rows.length - 1}")
     Model(rows.map(_._2.toArray))
-  }
-
-  private def centroidCol(c: Array[Double]): Column =
-    array(c.map(lit(_)).toSeq: _*)
-
-  /** Distance rank: cell = argmin_j ||x - c_j||^2 = argmin_j (||c_j||^2 - 2 x·c_j). */
-  private def cellOf(vd: Column, model: Model,
-                     session: SparkSession = SparkSession.active): Column = {
-    val scored = model.centroids.zipWithIndex.map { case (c, j) =>
-      val c2 = c.map(x => x * x).sum
-      struct((lit(c2) - lit(2.0) * Similarity.dot(vd, centroidCol(c), session)).as("d"),
-        lit(j).as("j"))
-    }
-    array_min(array(scored.toSeq: _*)).getField("j")
   }
 
   /** Fixed-point scale for centroid accumulation: summing longs is
@@ -145,215 +133,100 @@ object IvfIndex {
       var centroids = p.orderBy(col(idCol)).limit(k).select(col("vd"))
         .collect().map(_.getSeq[Double](0).toArray)
       val dim = centroids.headOption.map(_.length).getOrElse(0)
-      val native = session.catalog.functionExists("vec_sum_fixed")
       (1 to iters).foreach { _ =>
         val model = Model(centroids)
         val assigned = p.withColumn("cell",
           assignCol(col("vd"), model, session))
         // per-cell per-dimension sums WITHOUT exploding the corpus by dim:
         // the one-buffer [[expr.VecSumFixed]] aggregate sums whole vectors
-        // per update call (k·(dim+1) longs across the exchange); the
-        // composable twin spells the identical fixed-point arithmetic as
-        // dim separate sum columns (parity-tested in PipelineSpec). Either
-        // way only k rows reach the driver — bounded by the codebook,
-        // never the corpus.
+        // per update call (k·(dim+1) longs across the exchange; PipelineSpec
+        // pins it against dim separate fixed-point sum columns). Only k
+        // rows reach the driver — bounded by the codebook, never the
+        // corpus.
         val next = centroids.map(_.clone())
         // count(vd), not count(*): the sums skip null vectors, so the
         // divisor must too (a cell of only-null vectors keeps its
         // centroid, like the pre-VecSumFixed explode formulation that
         // emitted no rows for it)
-        if (native) {
-          assigned.groupBy(col("cell"))
-            .agg(call_function("vec_sum_fixed", col("vd"), lit(FixedPointScale)).as("s"),
-              count(col("vd")).as("n"))
-            .collect()
-            .foreach { r =>
-              val cell = r.getAs[Int]("cell")
-              val n = r.getAs[Long]("n")
-              val s = r.getSeq[Long](1)
-              var i = 0
-              while (n > 0 && i < dim && i < s.length) {
-                next(cell)(i) = s(i).toDouble / FixedPointScale / n
-                i += 1
-              }
+        assigned.groupBy(col("cell"))
+          .agg(GraftExtensions.kernel(session, "vec_sum_fixed", col("vd"),
+            lit(FixedPointScale)).as("s"), count(col("vd")).as("n"))
+          .collect()
+          .foreach { r =>
+            val cell = r.getAs[Int]("cell")
+            val n = r.getAs[Long]("n")
+            val s = r.getSeq[Long](1)
+            var i = 0
+            while (n > 0 && i < dim && i < s.length) {
+              next(cell)(i) = s(i).toDouble / FixedPointScale / n
+              i += 1
             }
-        } else {
-          val aggCols = (0 until dim).map { i =>
-            sum((element_at(col("vd"), i + 1) * FixedPointScale).cast("long")).as(s"s$i")
-          } :+ count(col("vd")).as("n")
-          assigned.groupBy(col("cell"))
-            .agg(aggCols.head, aggCols.tail: _*).collect()
-            .foreach { r =>
-              val cell = r.getAs[Int]("cell")
-              val n = r.getAs[Long]("n")
-              var i = 0
-              while (n > 0 && i < dim) {
-                // a dimension absent from EVERY vector of the cell sums to
-                // NULL — keep the previous centroid value (the native
-                // VecSumFixed branch does, via its i < s.length guard);
-                // getAs would silently unbox NULL to 0L
-                val fi = r.fieldIndex(s"s$i")
-                if (!r.isNullAt(fi))
-                  next(cell)(i) = r.getLong(fi).toDouble / FixedPointScale / n
-                i += 1
-              }
-            }
-        }
+          }
         centroids = next
       }
       Model(centroids)
   }
 
-  /** KERNEL-LESS-session fallback boundary (since r15 the registered
-    * kernel handles every k — see [[assignCol]]): below it the unrolled
-    * [[cellOf]] projection, above it the interpreted HOF twin.
-    * [[cellOf]] expands to k (c², centroid-literal, vec_dot) triples
-    * inside ONE projection, which overflows the JVM's 64 KB method
-    * limit near k≈100 and drops the whole stage to interpreted mode
-    * (measured: k=160 spews `Code grows beyond 64 KB` and falls
-    * back). */
-  val InlineAssignMaxK = 64
-
-  /** Assignment dispatch (r15): the registered kernel at ANY k — the
-    * unrolled inline projection loses even at k=16 because each of its
-    * k branches carries a boxed per-centroid array literal, the same
-    * plumbing-tax class as the codebook literals (smoke semdedup_probe
-    * ×4 [k=64 inline] min 7.05 s vs ×10 [k=160 kernel] 0.95 on a
-    * SMALLER corpus; the since-deleted SemKnProbe's ×4 A/B, SURVEY.md
-    * round 15: flat-book increments 7.0-8.5 s
-    * inline vs 0.97 via the always-kernel two-level route, same
-    * artifacts, same sums). Kernel-less sessions keep the size
-    * dispatch: the inline form codegens fine to k≈100, the interpreted
-    * HOF twin takes over beyond. */
-  // Kernels resolve against the session that OWNS the input DataFrame —
-  // every DataFrame-level entry threads it (the [[Similarity.dot]]
-  // session-explicit contract: under `newSession()`/multi-session
-  // drivers the active session may lack the extension and would
-  // silently take the interpreted path or fail analysis). The
-  // active-session default exists only for column-level/spec use.
+  /** Assignment column: cell = argmin_j ||x - c_j||^2 = argmin_j
+    * (||c_j||^2 - 2 x·c_j), by the [[graft.functions.expr.NearestCell]]
+    * kernel — a tight k×dim primitive loop over the codebook passed as
+    * CodebookCodec-PACKED binary literals — at ANY k.
+    *
+    * The routes that look simpler were measured and rejected:
+    *   - the unrolled projection of k (c², centroid-literal, vec_dot)
+    *     triples loses even at k=16, because each of its k branches
+    *     carries a boxed per-centroid array literal (smoke
+    *     semdedup_probe ×4 [k=64 unrolled] min 7.05 s vs ×10 [k=160
+    *     kernel] 0.95 on a SMALLER corpus; the since-deleted SemKnProbe's
+    *     ×4 A/B, SURVEY.md round 15: flat-book increments 7.0-8.5 s
+    *     unrolled vs 0.97 via the kernel, same artifacts, same sums), and
+    *     near k≈100 it overflows the JVM's 64 KB generated-method limit
+    *     and drops the stage to interpreted mode;
+    *   - at the 40× smoke point (80k vectors, k=512) a broadcast-join +
+    *     min-agg form materializes n·k pair rows each dragging two
+    *     64-double arrays (48 s), and an `array_min(transform(...))`
+    *     loop keeps the plan narrow but higher-order functions evaluate
+    *     INTERPRETED inside a codegen'd stage (99 s). The kernel runs the
+    *     identical arithmetic (driver-side left-fold c², strict
+    *     left-to-right dot, lowest-cell ties) in 3.5 s at the same point;
+    *     SketchesSpec pins it row-identical to both composable forms.
+    *
+    * Packed literals, not typedlit arrays: a boxed array literal is
+    * ~k·dim heap objects that every stage serialization, task
+    * deserialization, and plan canonicalization walks; at k=1600 that
+    * plumbing exceeded all task work combined (the assign_literal_tax
+    * probe, r15: the SemDeDup increment 5.7 s wall vs ~4 s SUMMED task
+    * time across 32 cores; packed literals are one primitive byte[]
+    * each).
+    *
+    * `session` owns the frame the column is used in (the kernel is
+    * registered into it): every DataFrame-level entry threads its input's
+    * session; the active-session default exists only for column-level
+    * use. */
   private[graft] def assignCol(vd: Column, model: Model,
                                session: SparkSession = SparkSession.active): Column =
-    if (session.catalog.functionExists("nearest_cell")
-        || model.k > InlineAssignMaxK) cellOfFolded(vd, model, session)
-    else cellOf(vd, model, session)
+    GraftExtensions.kernel(session, "nearest_cell", vd,
+      lit(CodebookCodec.packMatrix(model.centroids)),
+      lit(CodebookCodec.packVector(model.centroids.map(c => c.map(x => x * x).sum))))
 
-  /** Corpus with cell assignment (the "inverted file"). Assignment via
-    * [[assignCol]] (kernel whenever registered; inline/HOF fallbacks) —
-    * all routes identical output (parity-pinned in SketchesSpec). */
+  /** Corpus with cell assignment (the "inverted file"), by [[assignCol]]. */
   def index(emb: DataFrame, model: Model,
             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     Similarity.prep(emb, vecCol)
       .withColumn("cell", assignCol(col("vd"), model, emb.sparkSession))
       .select(col(idCol), col("vd"), col("nrm"), col("cell"))
 
-  /** [[index]] forced down the small-codebook INLINE projection
-    * (spec hook for route parity). */
-  private[graft] def indexViaInlineAssign(emb: DataFrame, model: Model,
-                                          idCol: String = "vec_id",
-                                          vecCol: String = "embedding"): DataFrame =
-    Similarity.prep(emb, vecCol)
-      .withColumn("cell", cellOf(col("vd"), model, emb.sparkSession))
-      .select(col(idCol), col("vd"), col("nrm"), col("cell"))
-
-  /** [[index]] forced down the large-codebook path (spec hook). */
-  def indexViaFoldedAssign(emb: DataFrame, model: Model,
-                           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    Similarity.prep(emb, vecCol)
-      .withColumn("cell", cellOfFolded(col("vd"), model, emb.sparkSession))
-      .select(col(idCol), col("vd"), col("nrm"), col("cell"))
-
-  /** Large-codebook assignment: the same argmin as ONE constant-size
-    * expression — the [[graft.functions.expr.NearestCell]] kernel, a
-    * tight k×dim primitive loop over the codebook passed as foldable
-    * literal arrays. The routes that look simpler were measured and
-    * rejected at the 40× smoke point (80k vectors, k=512): the unrolled
-    * [[cellOf]] overflows the JVM's 64 KB generated-method limit near
-    * k≈100 and drops the stage to interpreted; a broadcast-join +
-    * min-agg form materializes n·k pair rows each dragging two
-    * 64-double arrays (48 s); an `array_min(transform(...))` loop keeps
-    * the plan narrow but higher-order functions evaluate INTERPRETED
-    * inside a codegen'd stage (99 s). The kernel runs the identical
-    * arithmetic (driver-side left-fold c², strict left-to-right dot,
-    * lowest-cell ties) in 3.5 s at the same point. The HOF form remains
-    * below as the composable twin (parity-pinned in SketchesSpec) for
-    * sessions without the extension. */
-  private def cellOfFolded(vd: Column, model: Model,
-                           session: SparkSession = SparkSession.active): Column = {
-    // typedlit, NOT array(lit...): CreateArray of k×dim lit nodes is a
-    // ~32k-node expression tree PER occurrence (one per union branch /
-    // join side), and the analyzer walks every node of every copy on
-    // every action before constant folding collapses them — measured
-    // ~30 s of pure driver time per self-join at k=512 over a 40-branch
-    // union. typedlit is born as ONE Literal node.
-    // kernel route: CodebookCodec-PACKED binary literals, not typedlit
-    // arrays — a boxed array literal is ~k·dim heap objects that every
-    // stage serialization, task deserialization, and plan
-    // canonicalization walks; at k=1600 that plumbing exceeded all task
-    // work combined (the assign_literal_tax probe, r15: the SemDeDup increment 5.7 s wall
-    // vs ~4 s SUMMED task time across 32 cores; packed literals are one
-    // primitive byte[] each)
-    if (session.catalog.functionExists("nearest_cell"))
-      call_function("nearest_cell", vd,
-        lit(graft.functions.expr.CodebookCodec.packMatrix(model.centroids)),
-        lit(graft.functions.expr.CodebookCodec.packVector(
-          model.centroids.map(c => c.map(x => x * x).sum))))
-    else {
-      val centsLit = typedlit(model.centroids.map(_.toSeq).toSeq)
-      val c2sLit = typedlit(model.centroids.map(c => c.map(x => x * x).sum).toSeq)
-      val cents = array(model.centroids.zipWithIndex.map { case (c, j) =>
-        val c2 = c.map(x => x * x).sum
-        struct(lit(c2).as("c2"), centroidCol(c).as("cvd"), lit(j).as("j"))
-      }.toSeq: _*)
-      array_min(transform(cents, ct =>
-        struct((ct.getField("c2") -
-          lit(2.0) * Similarity.dot(vd, ct.getField("cvd"), session))
-          .as("d"), ct.getField("j").as("j")))).getField("j")
-    }
-  }
-
-  /** The `nprobe` nearest cells of a query vector, as an array column.
-    * Same size dispatch as [[index]]: the unrolled
-    * `array_sort(array(<k score structs>))` hits the 64 KB codegen
-    * ceiling at the same k≈100 as the assignment projection, so large
-    * codebooks go through the [[graft.functions.expr.NearestCells]]
-    * kernel (parity-pinned in SketchesSpec). */
-  private def probeCells(vd: Column, model: Model, nprobe: Int,
-                         session: SparkSession = SparkSession.active): Column =
-    if (session.catalog.functionExists("nearest_cells")
-        || model.k > InlineAssignMaxK) probeCellsFolded(vd, model, nprobe, session)
-    else probeCellsInline(vd, model, nprobe, session)
-
-  private[functions] def probeCellsInline(vd: Column, model: Model, nprobe: Int,
-      session: SparkSession = SparkSession.active): Column = {
-    val scored = model.centroids.zipWithIndex.map { case (c, j) =>
-      val c2 = c.map(x => x * x).sum
-      struct((lit(c2) - lit(2.0) * Similarity.dot(vd, centroidCol(c), session)).as("d"),
-        lit(j).as("j"))
-    }
-    slice(transform(array_sort(array(scored.toSeq: _*)), _.getField("j")), 1, nprobe)
-  }
-
-  private[functions] def probeCellsFolded(vd: Column, model: Model, nprobe: Int,
-      session: SparkSession = SparkSession.active): Column = {
-    if (session.catalog.functionExists("nearest_cells"))
-      call_function("nearest_cells", vd,
-        lit(graft.functions.expr.CodebookCodec.packMatrix(model.centroids)),
-        lit(graft.functions.expr.CodebookCodec.packVector(
-          model.centroids.map(c => c.map(x => x * x).sum))),
-        lit(nprobe))
-    else {
-      val centsLit = typedlit(model.centroids.map(_.toSeq).toSeq)
-      val c2sLit = typedlit(model.centroids.map(c => c.map(x => x * x).sum).toSeq)
-      // composable twin (HOFs evaluate interpreted — parity anchor, not
-      // the hot path): score every centroid by position, full sort,
-      // prefix — the inline route's shape over the folded literal
-      val scored = transform(centsLit, (c, i) =>
-        struct((element_at(c2sLit, i + 1) -
-          lit(2.0) * Similarity.dot(vd, c, session)).as("d"),
-          i.cast("int").as("j")))
-      slice(transform(array_sort(scored), _.getField("j")), 1, nprobe)
-    }
-  }
+  /** The `nprobe` nearest cells of a query vector, as an array column, by
+    * the [[graft.functions.expr.NearestCells]] kernel (the [[assignCol]]
+    * trade: the unrolled `array_sort(array(<k score structs>))` hits the
+    * same 64 KB codegen ceiling; SketchesSpec pins the kernel
+    * row-identical to the composable forms). */
+  private[functions] def probeCells(vd: Column, model: Model, nprobe: Int,
+      session: SparkSession = SparkSession.active): Column =
+    GraftExtensions.kernel(session, "nearest_cells", vd,
+      lit(CodebookCodec.packMatrix(model.centroids)),
+      lit(CodebookCodec.packVector(model.centroids.map(c => c.map(x => x * x).sum))),
+      lit(nprobe))
 
   // ---- two-level coarse quantizer (r15) ----------------------------
 
@@ -379,51 +252,24 @@ object IvfIndex {
     def k: Int = fine.iterator.map(_.k).sum
   }
 
-  /** Two-level assignment column — global fine cell id. Hot path is the
+  /** Two-level assignment column — global fine cell id, by the
     * [[graft.functions.expr.NearestCellTwoLevel]] kernel (coarse argmin
-    * + routed fine argmin, one constant-size codegen'd expression); the
-    * composable twin below (element_at over nested literals + HOF
-    * argmin, interpreted) is the parity anchor for sessions without the
-    * extension, pinned row-identical in SketchesSpec. */
+    * + routed fine argmin, one constant-size codegen'd expression);
+    * SketchesSpec pins it row-identical to a composable element_at +
+    * HOF-argmin reference. */
   private[graft] def cell2Of(vd: Column, m: Model2,
-      session: SparkSession = SparkSession.active): Column = {
-    import graft.functions.expr.CodebookCodec
-    if (session.catalog.functionExists("nearest_cell_2"))
-      call_function("nearest_cell_2", vd,
-        lit(CodebookCodec.packMatrix(m.coarse.centroids)),
-        lit(CodebookCodec.packVector(
-          m.coarse.centroids.map(c => c.map(x => x * x).sum))),
-        lit(CodebookCodec.packNested(m.fine.map(_.centroids))),
-        lit(CodebookCodec.packMatrix(
-          m.fine.map(_.centroids.map(c => c.map(x => x * x).sum)))))
-    else cell2OfTwin(vd, m, session)
-  }
-
-  /** The composable two-level assignment (no extension required):
-    * coarse route via [[cellOfFolded]], then element_at into the nested
-    * fine literals and a HOF argmin — interpreted per element, the
-    * parity anchor, never the hot path (parity-pinned in SketchesSpec). */
-  private[graft] def cell2OfTwin(vd: Column, m: Model2,
-      session: SparkSession = SparkSession.active): Column = {
-    val fineLit = typedlit(m.fine.map(_.centroids.map(_.toSeq).toSeq).toSeq)
-    val fineC2 = typedlit(m.fine.map(_.centroids.map(c => c.map(x => x * x).sum).toSeq).toSeq)
-    val cc = cellOfFolded(vd, m.coarse, session)
-    val offLit = typedlit(m.offsets.toSeq)
-    val sub = element_at(fineLit, cc + 1)
-    val subC2 = element_at(fineC2, cc + 1)
-    val scored = transform(sub, (c, i) =>
-      struct((element_at(subC2, i + 1) -
-        lit(2.0) * Similarity.dot(vd, c, session)).as("d"),
-        i.cast("int").as("j")))
-    (element_at(offLit, cc + 1) +
-      when(size(sub) === 0, lit(0))
-        .otherwise(array_min(scored).getField("j"))).cast("int")
-  }
+      session: SparkSession = SparkSession.active): Column =
+    GraftExtensions.kernel(session, "nearest_cell_2", vd,
+      lit(CodebookCodec.packMatrix(m.coarse.centroids)),
+      lit(CodebookCodec.packVector(
+        m.coarse.centroids.map(c => c.map(x => x * x).sum))),
+      lit(CodebookCodec.packNested(m.fine.map(_.centroids))),
+      lit(CodebookCodec.packMatrix(
+        m.fine.map(_.centroids.map(c => c.map(x => x * x).sum)))))
 
   /** Default coarse codebook size: assignment cost is coarseK +
     * kTotal/coarseK, minimized at √kTotal, but a FIXED coarse book keeps
-    * stored-artifact compatibility simple and 64 keeps the coarse argmin
-    * inside [[InlineAssignMaxK]] everywhere. */
+    * stored-artifact compatibility simple. */
   val DefaultCoarseK = 64
 
   /** Train the hierarchical quantizer: the coarse book via [[train]]
@@ -459,7 +305,6 @@ object IvfIndex {
       s"maxTrainPerCell must be >= 1 (got $maxTrainPerCell)")
     val cK = math.min(coarseK, kTotal)
     val spark = emb.sparkSession
-    val native = spark.catalog.functionExists("vec_sum_fixed")
     // ONE cached prep + count serves both the coarse training and the
     // fine loop (r16: [[train]] used to prep/cache/count its own copy of
     // the same corpus — two scans, two counts, identical rows)
@@ -521,30 +366,15 @@ object IvfIndex {
               i += 1
             }
           }
-        if (native) {
-          assigned.groupBy(col("_g"))
-            .agg(call_function("vec_sum_fixed", col("vd"), lit(FixedPointScale)).as("s"),
-              count(col("vd")).as("n"))
-            .collect()
-            .foreach { r =>
-              val s = r.getSeq[Long](1)
-              fold(r.getAs[Int]("_g"), r.getAs[Long]("n"),
-                i => Some(s(i)), s.length)
-            }
-        } else {
-          val aggCols = (0 until dim).map { i =>
-            sum((element_at(col("vd"), i + 1) * FixedPointScale).cast("long")).as(s"s$i")
-          } :+ count(col("vd")).as("n")
-          assigned.groupBy(col("_g"))
-            .agg(aggCols.head, aggCols.tail: _*).collect()
-            .foreach { r =>
-              fold(r.getAs[Int]("_g"), r.getAs[Long]("n"),
-                i => {
-                  val fi = r.fieldIndex(s"s$i")
-                  if (r.isNullAt(fi)) None else Some(r.getLong(fi))
-                }, dim)
-            }
-        }
+        assigned.groupBy(col("_g"))
+          .agg(GraftExtensions.kernel(spark, "vec_sum_fixed", col("vd"),
+            lit(FixedPointScale)).as("s"), count(col("vd")).as("n"))
+          .collect()
+          .foreach { r =>
+            val s = r.getSeq[Long](1)
+            fold(r.getAs[Int]("_g"), r.getAs[Long]("n"),
+              i => Some(s(i)), s.length)
+          }
         fines = next.map(Model(_))
       }
       Model2(coarse, fines)
@@ -681,60 +511,37 @@ object IvfIndex {
     val sims = idx.join(broadcast(queries), Seq("cell"))
       .where(col("q_id") =!= col(idCol))
       .select(col("q_id"), col(idCol).as("n_id"),
-        Similarity.simMicroPre(col("qvd"), col("vd"), col("qnrm"), col("nrm")).as("sim_micro"))
+        Similarity.simMicroPre(col("qvd"), col("vd"), col("qnrm"), col("nrm"),
+          idx.sparkSession).as("sim_micro"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("sim_micro").desc, col("n_id"))
     sims.withColumn("rn", row_number().over(w)).where(col("rn") <= kNeighbors)
       .select(col("q_id"), col("n_id"), col("sim_micro"))
   }
 
   /** The `nprobe` nearest GLOBAL fine cells among the `coarseProbe`
-    * nearest coarse cells' sub-codebooks. Hot path is the
+    * nearest coarse cells' sub-codebooks, by the
     * [[graft.functions.expr.NearestCellsTwoLevel]] kernel with
-    * CodebookCodec-packed literals (r16, measured: the HOF twin below
-    * embeds the full nested fine codebook as a boxed typedlit — the
+    * CodebookCodec-packed literals (r16, measured: the composable HOF
+    * form embeds the full nested fine codebook as a boxed typedlit — the
     * r15 plan-tax class — and at knn_recall ×100 the two-level route
     * summed 33.9 s of task deserialization vs 20.9 s flat at the same
     * k, wall 14.9 vs 13.5 s despite ~20× fewer flops; with the kernel
     * the deser tax drops to flat parity — 19.6 s, wall 13.5 — and at
     * ×400/k=6400 the route matches flat wall, 99.9 vs 103.4 s, on
-    * ~3× less summed task work). The
-    * HOF twin stays as the kernel-less parity anchor (row-identical,
-    * pinned in SketchesSpec): coarse selection via [[probeCells]],
-    * fine ranking as (distance, global id) structs flattened across
-    * the selected sub-books, sorted (Spark's struct ordering: distance
-    * asc, NaN last, ties to the lower global id), prefix taken.
-    * Query-side only by construction. */
+    * ~3× less summed task work). SketchesSpec pins it row-identical to
+    * that HOF form: coarse selection via [[probeCells]], fine ranking as
+    * (distance, global id) structs flattened across the selected
+    * sub-books, sorted (Spark's struct ordering: distance asc, NaN last,
+    * ties to the lower global id), prefix taken. Query-side only by
+    * construction. */
   private[graft] def probeCells2(vd: Column, m: Model2, nprobe: Int,
-      coarseProbe: Int, session: SparkSession = SparkSession.active): Column = {
-    import graft.functions.expr.CodebookCodec
-    if (session.catalog.functionExists("nearest_cells_2"))
-      call_function("nearest_cells_2", vd,
-        lit(CodebookCodec.packMatrix(m.coarse.centroids)),
-        lit(CodebookCodec.packVector(
-          m.coarse.centroids.map(c => c.map(x => x * x).sum))),
-        lit(CodebookCodec.packNested(m.fine.map(_.centroids))),
-        lit(CodebookCodec.packMatrix(
-          m.fine.map(_.centroids.map(c => c.map(x => x * x).sum)))),
-        lit(nprobe), lit(coarseProbe))
-    else probeCells2Twin(vd, m, nprobe, coarseProbe, session)
-  }
-
-  /** The composable two-level probe selection (no extension required) —
-    * the parity anchor, never the hot path. */
-  private[graft] def probeCells2Twin(vd: Column, m: Model2, nprobe: Int,
-      coarseProbe: Int, session: SparkSession = SparkSession.active): Column = {
-    val cTop = probeCells(vd, m.coarse, coarseProbe, session)
-    val fineLit = typedlit(m.fine.map(_.centroids.map(_.toSeq).toSeq).toSeq)
-    val fineC2 = typedlit(m.fine.map(_.centroids.map(c => c.map(x => x * x).sum).toSeq).toSeq)
-    val offLit = typedlit(m.offsets.toSeq)
-    val scoredNested = transform(cTop, cc => {
-      val sub = element_at(fineLit, cc + 1)
-      val subC2 = element_at(fineC2, cc + 1)
-      transform(sub, (c, i) =>
-        struct((element_at(subC2, i + 1) -
-          lit(2.0) * Similarity.dot(vd, c, session)).as("d"),
-          (element_at(offLit, cc + 1) + i).cast("int").as("j")))
-    })
-    slice(transform(array_sort(flatten(scoredNested)), _.getField("j")), 1, nprobe)
-  }
+      coarseProbe: Int, session: SparkSession = SparkSession.active): Column =
+    GraftExtensions.kernel(session, "nearest_cells_2", vd,
+      lit(CodebookCodec.packMatrix(m.coarse.centroids)),
+      lit(CodebookCodec.packVector(
+        m.coarse.centroids.map(c => c.map(x => x * x).sum))),
+      lit(CodebookCodec.packNested(m.fine.map(_.centroids))),
+      lit(CodebookCodec.packMatrix(
+        m.fine.map(_.centroids.map(c => c.map(x => x * x).sum)))),
+      lit(nprobe), lit(coarseProbe))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.expr.CodebookCodec
+import graft.GraftExtensions
 
 /** Product quantization (Jégou, Douze, Schmid, TPAMI 2011) — the
   * STORAGE-scale half of the ANN stack ([[IvfIndex]] is the routing
@@ -97,21 +98,13 @@ object Pq {
       val starts = dims.scanLeft(0)(_ + _).init
       val sample = IvfIndex.trainSample(full, full.count(), ksub,
         maxTrainVectors, idCol)
-      // Hot path: ALL m merge loops fused — one seed collect and one
-      // aggregation job PER ITERATION cover every sub-book (r16: the
-      // per-book lloyd calls ran m·(1 seed + iters agg) = 32 tiny
-      // driver-synchronous jobs at contract m=8/iters=3, and the job
-      // scheduling — not the flops — was ~80% of p59's cost). The
-      // kernel-less fallback keeps the per-book lloyd as the parity
-      // anchor (PqSpec pins the fused/per-book routes bit-identical).
-      if (session.catalog.functionExists("vec_sum_fixed"))
-        trainPqFused(sample, m, ksub, iters, dims, starts, idCol, session)
-      else
-        PqModel(Array.tabulate(m) { s =>
-          val sliced = sample.select(col(idCol),
-            slice(col("vd"), starts(s) + 1, dims(s)).as("vd"))
-          IvfIndex.lloyd(sliced, ksub, iters, idCol, session)
-        })
+      // ALL m merge loops fused — one seed collect and one aggregation
+      // job PER ITERATION cover every sub-book (r16: per-book lloyd calls
+      // ran m·(1 seed + iters agg) = 32 tiny driver-synchronous jobs at
+      // contract m=8/iters=3, and the job scheduling — not the flops —
+      // was ~80% of p59's cost; PqSpec pins the fused books bit-identical
+      // to per-book [[IvfIndex.lloyd]] runs)
+      trainPqFused(sample, m, ksub, iters, dims, starts, idCol, session)
     } finally full.unpersist()
   }
 
@@ -143,7 +136,7 @@ object Pq {
         .select(col("e.sub").as("sub"), col("e.cell").as("cell"),
           col("e.svd").as("svd"))
         .groupBy(col("sub"), col("cell"))
-        .agg(call_function("vec_sum_fixed", col("svd"),
+        .agg(GraftExtensions.kernel(session, "vec_sum_fixed", col("svd"),
           lit(IvfIndex.FixedPointScale)).as("s"), count(col("svd")).as("n"))
         .collect().foreach { r =>
           val sub = r.getAs[Int]("sub")
@@ -193,9 +186,8 @@ object Pq {
 
   /** PQ codes column: `array(m sub-space nearest-cell ids)` — each
     * sub-space rides the EXISTING [[graft.functions.expr.NearestCell]]
-    * kernel over a slice of the double vector with its own packed
-    * sub-book literal (kernel-less sessions fall back through
-    * [[IvfIndex.assignCol]]'s inline/HOF dispatch, parity-pinned). */
+    * kernel ([[IvfIndex.assignCol]]) over a slice of the double vector
+    * with its own packed sub-book literal. */
   private[graft] def codesCol(vd: Column, model: PqModel,
                               session: SparkSession): Column =
     array(model.books.zipWithIndex.map { case (b, s) =>
@@ -225,44 +217,21 @@ object Pq {
         codesCol(col("vd"), model, s).as("codes"))
   }
 
-  /** Query-side ADC table column — kernel when registered, composable
-    * HOF twin otherwise (parity-pinned in PqSpec). */
+  /** Query-side ADC table column, by the [[graft.functions.expr.PqAdcTable]]
+    * kernel (PqSpec pins it bit-identical to per-sub-space `transform`s
+    * of sliced dots over the boxed sub-book literals). */
   private[graft] def adcTableCol(vd: Column, model: PqModel,
                                  session: SparkSession): Column =
-    if (session.catalog.functionExists("pq_adc_table"))
-      call_function("pq_adc_table", vd,
-        lit(CodebookCodec.packNested(model.books.map(_.centroids))))
-    else adcTableTwin(vd, model, session)
+    GraftExtensions.kernel(session, "pq_adc_table", vd,
+      lit(CodebookCodec.packNested(model.books.map(_.centroids))))
 
-  /** The composable table twin (no extension required): per sub-space,
-    * `transform` the boxed sub-book literal to sliced dots; flatten in
-    * sub-space order — bit-identical to the kernel's layout. Never the
-    * hot path (boxed literal + interpreted HOF: the r15 plan-tax
-    * class). */
-  private[graft] def adcTableTwin(vd: Column, model: PqModel,
-                                  session: SparkSession): Column =
-    flatten(array(model.books.zipWithIndex.map { case (b, s) =>
-      val sub = slice(vd, model.starts(s) + 1, model.subDims(s))
-      val bookLit = typedlit(b.centroids.map(_.toSeq).toSeq)
-      transform(bookLit, c => Similarity.dot(sub, c, session))
-    }.toIndexedSeq: _*))
-
-  /** Per-pair ADC score column — kernel or the zip_with/aggregate twin
-    * (parity-pinned in PqSpec). */
+  /** Per-pair ADC score column, by the [[graft.functions.expr.PqAdcScore]]
+    * kernel (PqSpec pins it against a zip_with/aggregate fold and a
+    * driver-side reconstruction oracle). */
   private[graft] def adcScoreCol(codes: Column, table: Column,
                                  model: PqModel, session: SparkSession): Column =
-    if (session.catalog.functionExists("pq_adc_score"))
-      call_function("pq_adc_score", codes, table,
-        lit(CodebookCodec.packInts(model.offsets)))
-    else
-      // coalesce matches the kernel's defensive rule: an out-of-range
-      // lookup (codes from a DIFFERENT model — the contract forbids it)
-      // contributes nothing, instead of element_at's NULL poisoning the
-      // whole fold and diverging the routes.
-      aggregate(
-        zip_with(codes, typedlit(model.offsets.toSeq),
-          (c, o) => coalesce(element_at(table, o + c + 1), lit(0.0))),
-        lit(0.0), (acc, x) => acc + x)
+    GraftExtensions.kernel(session, "pq_adc_score", codes, table,
+      lit(CodebookCodec.packInts(model.offsets)))
 
   /** ADC approximate top-k through the two-level inverted file — the
     * [[IvfIndex.knn2OnIndex]] geometry with the exact within-cell dot

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.GraftExtensions
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -31,35 +32,22 @@ object Similarity {
     * (including the codegen'd vec_dot) from whole-stage codegen. */
   def toDoubleVec(a: Column): Column = a.cast("array<double>")
 
-  /** Strict left-fold dot product of two double vectors. Uses the
-    * codegen'd [[graft.functions.expr.VecDot]] when the session has
-    * [[graft.GraftExtensions]] loaded (GraftSession always does); both
-    * paths accumulate left-to-right over the first `min(len(a), len(b))`
-    * elements — bit-identical results INCLUDING on length-mismatched
-    * inputs (a bare zip_with would null-pad the shorter vector and
-    * propagate NULL through the fold, diverging from the native path). */
-  def dot(a: Column, b: Column): Column =
-    dot(a, b, org.apache.spark.sql.SparkSession.active)
+  /** Strict left-fold dot product of two double vectors, by the codegen'd
+    * [[graft.functions.expr.VecDot]]: it accumulates left-to-right over
+    * the first `min(len(a), len(b))` elements, so a length-mismatched
+    * pair still folds (a bare zip_with would null-pad the shorter vector
+    * and propagate NULL through the fold; PipelineSpec pins the kernel
+    * against the sliced zip_with/aggregate fold).
+    *
+    * `session` is the one that OWNS the frame the column is used in: the
+    * kernel is registered into it. DataFrame-level operators pass their
+    * input's session; `SparkSession.active` can be another session under
+    * `newSession()` / multi-session drivers. */
+  def dot(a: Column, b: Column, session: SparkSession = SparkSession.active): Column =
+    GraftExtensions.kernel(session, "vec_dot", a, b)
 
-  /** Session-explicit twin: DataFrame-level operators resolve the native
-    * function against the session that OWNS their input DataFrame, not
-    * `SparkSession.active` — the two differ under `newSession()` /
-    * multi-session drivers, where active-session resolution would silently
-    * switch implementations or fail analysis. */
-  def dot(a: Column, b: Column, session: org.apache.spark.sql.SparkSession): Column = {
-    val hasNative = session.catalog.functionExists("vec_dot")
-    if (hasNative) call_function("vec_dot", a, b)
-    else {
-      val n = least(size(a), size(b))
-      aggregate(zip_with(slice(a, lit(1), n), slice(b, lit(1), n), _ * _),
-        lit(0.0), (acc, x) => acc + x)
-    }
-  }
-
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
-  private def l2norm(a: Column, s: org.apache.spark.sql.SparkSession): Column =
-    sqrt(dot(a, a, s))
+  def l2norm(a: Column, session: SparkSession = SparkSession.active): Column =
+    sqrt(dot(a, a, session))
 
   /** Cosine similarity of two double vectors. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
@@ -70,11 +58,8 @@ object Similarity {
   /** Same quantization with PRECOMPUTED norms — the single definition
     * every search path (brute/LSH/IVF/near-dup) must share, or a future
     * quantization change would silently diverge from the oracle. */
-  def simMicroPre(aVd: Column, bVd: Column, aNrm: Column, bNrm: Column): Column =
-    simMicroPre(aVd, bVd, aNrm, bNrm, org.apache.spark.sql.SparkSession.active)
-
   def simMicroPre(aVd: Column, bVd: Column, aNrm: Column, bNrm: Column,
-                  session: org.apache.spark.sql.SparkSession): Column =
+                  session: SparkSession = SparkSession.active): Column =
     floor(lit(1e6) * dot(aVd, bVd, session) / (aNrm * bNrm)).cast("long")
 
   /** Corpus with precomputed double vector + norm. */
@@ -533,27 +518,19 @@ object Similarity {
       .agg(count(lit(1)).as("_c"))
   }
 
-  /** Dense per-key activity histograms from [[activityCells]]:
-    * (key, hist array<long>[bins]) — `bins` longs per key, cell-sized.
-    * Built as `bins` conditional sums, NOT
+  /** Dense per-key activity histograms (key, hist array<long>[bins]),
+    * built in ONE key-keyed exchange: the `bins` conditional sums
+    * aggregate the raw event stream directly, so each mapper ships one
+    * `bins`-long partial row per key instead of up to `bins` (key, _h,
+    * cnt) [[activityCells]] rows (≈3x less exchange volume) and the
+    * cell-sized second exchange of summing the cells per key disappears.
+    * Identical output to that two-step composition (parity-pinned in
+    * PipelineSpec); the cells stay for the exact route, whose
+    * inverted-index join consumes them itself. Conditional sums, NOT
     * `map_from_entries(collect_list(...))`: the map route plans an
     * ObjectHashAggregate (no codegen, per-row object churn) while
     * conditional sums stay a plain codegen'd HashAggregate with map-side
-    * partials — measured 2x on the corpus pass at the 100x smoke point. */
-  def activityHistograms(cells: DataFrame, keyCol: String,
-                         bins: Int = 24): DataFrame =
-    cells.groupBy(col(keyCol))
-      .agg(array((0 until bins).map(h =>
-        coalesce(sum(when(col("_h") === h, col("_c"))), lit(0L))): _*).as("hist"))
-
-  /** [[activityHistograms]]∘[[activityCells]] fused into ONE key-keyed
-    * exchange: the `bins` conditional sums aggregate the raw event
-    * stream directly, so each mapper ships one `bins`-long partial row
-    * per key instead of up to `bins` (key, _h, cnt) cell rows (≈3x less
-    * exchange volume) and the cell-sized second exchange disappears.
-    * Identical output to the two-step composition (parity-pinned in
-    * PipelineSpec); the two-step form stays for the exact route, whose
-    * inverted-index join consumes the cells themselves.
+    * partials — measured 2x on the corpus pass at the 100x smoke point.
     *
     * WIDE-BINS ROUTING (regime-dependent — both composable forms lose
     * one): the fused aggregate does O(bins) conditional-sum work per
@@ -567,8 +544,8 @@ object Similarity {
     * and this corpus' ~67 events/key) that exchange EXCEEDS the corpus:
     * probed at ×100 replicated events, two-step 222 MB shuffle /
     * 19.5 s min vs fused 40 MB / 9.5 s. So past the codegen limit this
-    * routes to the [[graft.functions.expr.BinCountAgg]] kernel when the
-    * session has the extensions: `buf(bin) += 1` per row — O(1) per row
+    * routes to the [[graft.functions.expr.BinCountAgg]] kernel:
+    * `buf(bin) += 1` per row — O(1) per row
     * (two-step's winning half) AND one `bins`-long array partial per
     * key (fused's winning half), immune to the codegen width limit by
     * construction. Probed min-of-reps (kernel / fused / two-step):
@@ -582,10 +559,7 @@ object Similarity {
     * codegen'd conditional sums keep the default: probed at bins=24
     * ×100 they tie the kernel (min 4.91 vs 5.10 s, identical 11 MB
     * exchange), and codegen'd expressions compose into surrounding
-    * stages where the imperative aggregate cannot. Sessions without the
-    * extensions fall back to the two-step composition (wide-aggregate
-    * interpreted eval is the worse failure mode at 100 TB: it taxes
-    * every row of the corpus, the cell exchange only the key set). */
+    * stages where the imperative aggregate cannot. */
   def activityHistogramsFromEvents(events: DataFrame, keyCol: String,
                                    tsCol: String, hourUs: Long,
                                    bins: Int = 24): DataFrame = {
@@ -602,12 +576,9 @@ object Similarity {
       events.groupBy(col(keyCol))
         .agg(array((0 until bins).map(h =>
           coalesce(sum(when(bin === h, 1L)), lit(0L))): _*).as("hist"))
-    else if (events.sparkSession.catalog.functionExists("bin_count_agg"))
-      events.groupBy(col(keyCol))
-        .agg(call_function("bin_count_agg", bin, lit(bins)).as("hist"))
     else
-      activityHistograms(
-        activityCells(events, keyCol, tsCol, hourUs, bins), keyCol, bins)
+      events.groupBy(col(keyCol)).agg(GraftExtensions.kernel(events.sparkSession,
+        "bin_count_agg", bin, lit(bins)).as("hist"))
   }
 
   /** LSH stride for the 24-bin histograms: coprime to 24 so all table

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.GraftExtensions
 
 /** Text-analysis kernel for the training-data pipeline (driver-mandated
   * extension ops; SURVEY §7.1 step 8): normalization, token counting,
@@ -108,41 +109,16 @@ object TextFunctions {
     aggregate(split(norm, ""), lit(0L),
       (acc, c) => (acc * 31L + ascii(c)) % RollHashMod)
 
-  /** 16-bit SimHash over the word multiset. Bit j (1-based) uses the top
-    * bit of hex digit j of md5(word) (`substr(md5(w), j, 1) >= '8'`), so
-    * the same fingerprint is computable in any engine with md5. Weighted
-    * fold over the array — no explode, no shuffle.
-    *
-    * DataFrame-level on purpose: the per-word md5 array and the 16 bit
-    * sums are materialized as intermediate columns, because referencing an
-    * unmaterialized expression from 16 fold lambdas re-evaluates it 16x
-    * per row (higher-order functions don't share subexpressions). */
+  /** 16-bit SimHash over the word multiset, added to `df` as column
+    * `out`. Bit j (1-based) uses the top bit of hex digit j of md5(word)
+    * (`substr(md5(w), j, 1) >= '8'`), so the same fingerprint is
+    * computable in any engine with md5; a null word array yields a NULL
+    * fingerprint. The single-pass codegen'd [[expr.Simhash16]] computes
+    * it (no explode, no shuffle); PipelineSpec pins it against the
+    * built-in md5 fold. */
   def withSimhash16(df: org.apache.spark.sql.DataFrame, ws: Column, out: String)
-  : org.apache.spark.sql.DataFrame = {
-    // resolve against the session that owns `df`, not SparkSession.active —
-    // they differ under newSession()/multi-session drivers
-    val session = df.sparkSession
-    if (session.catalog.functionExists("simhash16"))
-      // single-pass codegen'd expression (GraftExtensions loaded)
-      df.withColumn(out, call_function("simhash16", ws))
-    else {
-      val sums = array((1 to 16).map { j =>
-        aggregate(col("_sh_md5s"), lit(0L),
-          (acc, m) => acc + when(substring(m, j, 1) >= "8", 1L).otherwise(-1L))
-      }: _*)
-      val fp = (1 to 16).map { j =>
-        when(element_at(col("_sh_sums"), j) > 0, lit(1L << (j - 1))).otherwise(lit(0L))
-      }.reduce(_ + _).cast("long")
-      df.withColumn("_sh_md5s", transform(ws, w => md5(w)))
-        .withColumn("_sh_sums", sums)
-        // null word array (null text) → NULL fingerprint, matching the
-        // native Simhash16's null-safety. Tested on _sh_md5s (transform
-        // propagates null); _sh_sums itself is array(null,…), not null,
-        // and the per-bit whens would collapse it to simhash = 0.
-        .withColumn(out, when(col("_sh_md5s").isNull, lit(null).cast("long")).otherwise(fp))
-        .drop("_sh_md5s", "_sh_sums")
-    }
-  }
+  : org.apache.spark.sql.DataFrame =
+    df.withColumn(out, GraftExtensions.kernel(df.sparkSession, "simhash16", ws))
 
   // ---- pattern redaction (PII scrubbing) ----
 
@@ -292,9 +268,8 @@ object TextFunctions {
     * degrades to sort-merge when it doesn't — no hard hint); the final
     * top-k is a per-doc window over k-bounded groups with
     * doc-cardinality parallelism. TWO keyed shuffles total (df cells +
-    * the per-doc window), neither row-count-sized. The composable
-    * explode → groupBy twin remains the parity-pinned fallback for
-    * sessions without [[graft.GraftExtensions]].
+    * the per-doc window), neither row-count-sized. PipelineSpec pins the
+    * kernel's term counts against the explode → groupBy formulation.
     *
     * Two deliberate trades: (a) df is a JOIN, not `count over
     * (partition by word)` — a window would colocate every row of a hot
@@ -312,12 +287,10 @@ object TextFunctions {
   def tfidfTopK(docs: org.apache.spark.sql.DataFrame, wsCol: Column, k: Int)
   : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tf =
-      if (docs.sparkSession.catalog.functionExists("word_term_counts"))
-        docs.select(col("doc_id"),
-            explode(call_function("word_term_counts", wsCol)).as("_wt"))
-          .select(col("doc_id"), col("_wt.word").as("word"), col("_wt.tf").as("tf"))
-      else tfidfTermCountsFallback(docs, wsCol)
+    val tf = docs.select(col("doc_id"),
+        explode(GraftExtensions.kernel(docs.sparkSession,
+          "word_term_counts", wsCol)).as("_wt"))
+      .select(col("doc_id"), col("_wt.word").as("word"), col("_wt.tf").as("tf"))
     val df = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("word"))
     tf.join(df, "word")
@@ -326,16 +299,6 @@ object TextFunctions {
       .where(col("rk") <= k)
       .select("doc_id", "word", "tf", "df", "score", "rk")
   }
-
-  /** Composable twin of the `word_term_counts` kernel (parity-pinned in
-    * PipelineSpec; mirrors the DuckDB oracle's unnest + GROUP BY): the
-    * exploded (doc, word) count, paying the corpus-sized exchange the
-    * kernel exists to remove. */
-  private[functions] def tfidfTermCountsFallback(
-      docs: org.apache.spark.sql.DataFrame, wsCol: Column)
-  : org.apache.spark.sql.DataFrame =
-    docs.select(col("doc_id"), explode(wsCol).as("word"))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
 
   /** Vocabulary drift between two corpus snapshots — the crawl-over-crawl
     * monitoring step run before retraining on a refreshed corpus: the
@@ -397,16 +360,11 @@ object TextFunctions {
     // word), with every count downstream a tf-weighted sum — integer-
     // identical, the p24 win class. explode_outer keeps empty docs (an
     // empty array yields a null struct row -> tf coalesces to 0).
-    val wt =
-      if (docs.sparkSession.catalog.functionExists("word_term_counts"))
-        base.select(col(idCol),
-            explode_outer(call_function("word_term_counts", col(ws))).as("_wt"))
-          .select(col(idCol), col("_wt.word").as(word),
-            coalesce(col("_wt.tf"), lit(0L)).as(tfc))
-      else base.select(col(idCol), explode_outer(col(ws)).as(word))
-        .groupBy(col(idCol), col(word))
-        // count(word) is 0 for the null-word row an empty doc keeps
-        .agg(count(col(word)).as(tfc))
+    val wt = base.select(col(idCol),
+        explode_outer(GraftExtensions.kernel(docs.sparkSession,
+          "word_term_counts", col(ws))).as("_wt"))
+      .select(col(idCol), col("_wt.word").as(word),
+        coalesce(col("_wt.tf"), lit(0L)).as(tfc))
     val ranked = wt.where(col(word).isNotNull)
       .groupBy(word).agg(sum(tfc).as("_cnt"))
       .orderBy(col("_cnt").desc, col(word)).limit(k)
@@ -600,20 +558,11 @@ object TextFunctions {
   def dsirScores(docs: org.apache.spark.sql.DataFrame, targetPred: Column,
                  idCol: String = "doc_id", textCol: String = "text")
   : org.apache.spark.sql.DataFrame = {
-    // occurrence-exploded fallback carries _tf = 1 so the tf-weighted
-    // sums below degenerate to the plain occurrence counts — one
-    // downstream shape, two parity-pinned input forms (the p24 pattern)
-    val tok =
-      if (docs.sparkSession.catalog.functionExists("word_term_counts"))
-        docs.select(col(idCol), targetPred.cast("long").as("_tgt"),
-            explode(call_function("word_term_counts",
-              words(normText(col(textCol))))).as("_wt"))
-          .select(col(idCol), col("_tgt"),
-            col("_wt.word").as("_w"), col("_wt.tf").as("_tf"))
-      else docs
-        .select(col(idCol), targetPred.cast("long").as("_tgt"),
-          explode(words(normText(col(textCol)))).as("_w"))
-        .withColumn("_tf", lit(1L))
+    val tok = docs.select(col(idCol), targetPred.cast("long").as("_tgt"),
+        explode(GraftExtensions.kernel(docs.sparkSession,
+          "word_term_counts", words(normText(col(textCol))))).as("_wt"))
+      .select(col(idCol), col("_tgt"),
+        col("_wt.word").as("_w"), col("_wt.tf").as("_tf"))
     val vocab = tok.groupBy(col("_w"))
       .agg(sum(col("_tf")).as("_cr"), sum(col("_tgt") * col("_tf")).as("_ct"))
     val totals = vocab
@@ -728,9 +677,7 @@ object TextFunctions {
         val (l, r, f) = (best.getString(0), best.getString(1), best.getLong(2))
         found += ((rank, l, r, f))
         val mergeCol =
-          if (spark.catalog.functionExists("bpe_merge"))
-            call_function("bpe_merge", col("syms"), lit(l), lit(r))
-          else bpeMergeTwin(col("syms"), l, r)
+          GraftExtensions.kernel(spark, "bpe_merge", col("syms"), lit(l), lit(r))
         val (next, nextBlocks) = CheckpointUtil.trackedLocalCheckpoint(
           seg.select(col("cnt"), mergeCol.as("syms")))
         segBlocks.foreach(_.unpersist(blocking = false))
@@ -767,10 +714,8 @@ object TextFunctions {
       .select(col("left").cast("string"), col("right").cast("string"))
       .collect().map(r => (r.getString(0), r.getString(1)))
     val chars = expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))")
-    val useKernel = spark.catalog.functionExists("bpe_merge")
     val segCol = merges.foldLeft(chars) { case (c, (l, r)) =>
-      if (useKernel) call_function("bpe_merge", c, lit(l), lit(r))
-      else bpeMergeTwin(c, l, r)
+      GraftExtensions.kernel(spark, "bpe_merge", c, lit(l), lit(r))
     }
     val vocab = docs
       .select(explode(words(normText(col(textCol)))).as("word")).distinct()
@@ -782,23 +727,6 @@ object TextFunctions {
       .select(col(idCol), col("word_idx"),
         posexplode(col("syms")).as(Seq("sym_idx", "token")))
   }
-
-  /** The composable [[expr.BpeMergePair]] twin for kernel-less sessions
-    * (parity-pinned in BpeTrainSpec): an `aggregate` fold that merges
-    * when the accumulated tail is `l` and the incoming symbol is `r`.
-    * Non-overlap needs no explicit guard: a just-merged tail is `l+r`,
-    * which can never equal `l` (r is nonempty), so a consumed position
-    * cannot seed the next match — the kernel's scan rule exactly.
-    * Interpreted per vocab row, never the hot path. */
-  private[graft] def bpeMergeTwin(syms: Column, l: String, r: String): Column =
-    aggregate(syms, expr("CAST(array() AS ARRAY<STRING>)"),
-      (acc, x) => {
-        val prevIsL = size(acc) > 0 && element_at(acc, -1) === lit(l)
-        when(prevIsL && (x === lit(r)),
-          concat(slice(acc, lit(1), size(acc) - 1),
-            array(concat(element_at(acc, -1), x))))
-          .otherwise(concat(acc, array(x)))
-      })
 
   /** PMI collocation mining (the word2vec/word2phrase phrase-induction
     * score, Mikolov et al. 2013): top-k word bigrams by

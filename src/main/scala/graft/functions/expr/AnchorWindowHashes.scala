@@ -83,7 +83,7 @@ object AnchorWindowHashes {
 
 /** The byte-pass machinery the anchor-window kernels share (ONE source
   * of truth: a drift between the pair/scrub kernels would silently break
-  * the duplicateSpanScrub fallback parity DedupSpec pins). */
+  * the parity with the composable window hashes that DedupSpec pins). */
 private[expr] object AnchorKernel {
 
   private val HexChars = "0123456789abcdef".getBytes

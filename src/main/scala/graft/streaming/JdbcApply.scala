@@ -46,7 +46,14 @@ object JdbcApply {
     * `numPartitions` caps the per-batch JDBC connection count (default 8;
     * an unbounded `repartition` would open `spark.sql.shuffle.partitions`
     * connections per micro-batch — a connection storm on modest
-    * databases). */
+    * databases).
+    *
+    * Delivery: at-least-once into the table. The source offsets ride the
+    * streaming checkpoint exactly once, but the handler ignores the
+    * `batchId` that `foreachBatch` passes and records nothing in the
+    * target database, so a restart after the write and before the
+    * checkpoint commit re-applies that batch. Updates and deletes replay
+    * to the same rows; a replayed insert is applied a second time. */
   def apply(spec: Jdbc.ConnectionSpec, table: String, keyCols: Seq[String],
             orderCols: Seq[String] = Nil, numPartitions: Int = 8)
   : (DataFrame, Long) => Unit = { (batch: DataFrame, _: Long) =>

@@ -451,7 +451,8 @@ object ScaleSmoke {
       // is the join-back + per-doc top-k window.
       if (n >= 40) {
         val pw = docs.select(col("doc_id"),
-            explode(call_function("anchor_window_pos_hashes", col("text"), lit(48)))
+            explode(GraftExtensions.kernel(docs.sparkSession, "anchor_window_pos_hashes",
+              col("text"), lit(48)))
               .as("_pw"))
           .select(col("doc_id"), col("_pw.pos").as("_pos"), col("_pw.wh").as("_wh"))
         time("span_scrub_hash", n)(pw.count())
@@ -460,7 +461,8 @@ object ScaleSmoke {
         // old distinct-(doc,wh)-then-groupBy pair shuffled the positioned
         // stream twice and was ~50% of the operator at 100x)
         time("span_scrub_verdict", n)(docs.select(col("doc_id"),
-            explode(call_function("anchor_window_hashes", col("text"), lit(48)))
+            explode(GraftExtensions.kernel(docs.sparkSession, "anchor_window_hashes",
+              col("text"), lit(48)))
               .as("_wh"))
           .groupBy(col("_wh")).agg(count(lit(1)).as("_docs"))
           .where(col("_docs") >= 2).count())
@@ -470,7 +472,7 @@ object ScaleSmoke {
         // (doc, word) groupBy this stage used to time no longer exists
         // in the operator
         val tfStage = docs.select(col("doc_id"),
-            explode(call_function("word_term_counts",
+            explode(GraftExtensions.kernel(docs.sparkSession, "word_term_counts",
               TF.words(TF.normText(col("text"))))).as("_wt"))
           .select(col("doc_id"), col("_wt.word").as("word"), col("_wt.tf").as("tf"))
         time("tfidf_tf", n)(tfStage.count())
@@ -629,7 +631,8 @@ object ScaleSmoke {
       time("exact_dedup", n)(Dedup.exact(docs).count())
       time("simhash_buckets", n)(Dedup.simhashBuckets(docs).count())
       time("repetition_p15", n) {
-        docs.select(col("doc_id"), call_function("word_rep_stats", col("text")).as("s"))
+        docs.select(col("doc_id"), GraftExtensions.kernel(docs.sparkSession, "word_rep_stats", col("text"))
+          .as("s"))
           .select(col("doc_id"), col("s.total")).where(col("total") >= 0).count()
       }
       time("lsh_knn", n)(

@@ -56,7 +56,7 @@ class BpeTrainSpec extends SparkSpec {
       .toDF("syms")
     val both = syms.select(
         call_function("bpe_merge", col("syms"), lit("a"), lit("a")).as("k"),
-        TextFunctions.bpeMergeTwin(col("syms"), "a", "a").as("t"))
+        KernelTwins.bpeMergeTwin(col("syms"), "a", "a").as("t"))
       .as[(Seq[String], Seq[String])].collect()
     val expect = Seq(Seq("aa", "a"), Seq("aa", "aa"), Seq("a", "b", "aa"),
       Seq("b", "aa", "b"), Seq("x"), Seq.empty[String])

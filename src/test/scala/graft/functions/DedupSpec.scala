@@ -30,18 +30,18 @@ class DedupSpec extends SparkSpec {
       (9008L, "点の between 漢字 words here also")).toDF("doc_id", "text")
     for (d <- Seq(docs, edge)) {
       val native = Dedup.shingleArrays(d).as[(Long, Seq[String])].collect().toMap
-      val fallback = Dedup.shingleArraysFallback(d).as[(Long, Seq[String])].collect().toMap
+      val fallback = KernelTwins.shingleArraysFallback(d).as[(Long, Seq[String])].collect().toMap
       assert(native.nonEmpty && native === fallback)
     }
   }
 
   test("minhash_bands codegen expression is byte-identical to the composable fallback") {
     val shArr = Dedup.shingleArrays(docs)
-    // session has GraftExtensions -> native branch
+    // the engine route: the minhash_bands kernel
     assert(spark.catalog.functionExists("minhash_bands"))
     val native = shArr.select(col("sid"), Dedup.minhashBandsCol(col("shs"), Bands).as("sigs"))
       .as[(Long, Seq[String])].collect().toMap
-    val fallback = shArr.select(col("sid"), Dedup.minhashBandsFallback(col("shs"), Bands).as("sigs"))
+    val fallback = shArr.select(col("sid"), KernelTwins.minhashBandsFallback(col("shs"), Bands).as("sigs"))
       .as[(Long, Seq[String])].collect().toMap
     assert(native.nonEmpty && native === fallback)
   }
@@ -197,7 +197,7 @@ class DedupSpec extends SparkSpec {
           call_function("anchor_window_hashes", col("text"), lit(w)).as("whs"))
         .select(col("sid"), explode(col("whs")).as("wh"))
         .as[(Long, String)].collect().toSet
-      val fallback = Dedup.substringWindowHashesFallback(src, w)
+      val fallback = KernelTwins.substringWindowHashesFallback(src, w)
         .as[(Long, String)].collect().toSet
       assert(native === fallback, s"window $w diverged")
       assert(src.limit(1).count() === 0 || native.nonEmpty || w > 40)
@@ -219,7 +219,7 @@ class DedupSpec extends SparkSpec {
           explode(call_function("anchor_window_pos_hashes", col("text"), lit(w))).as("_pw"))
         .select(col("doc_id"), col("_pw.pos"), col("_pw.wh"))
         .as[(Long, Int, String)].collect().toSet
-      val fallback = Dedup.spanWindowPosFallback(
+      val fallback = KernelTwins.spanWindowPosFallback(
           src.withColumn("_norm", TextFunctions.normText(col("text"))), w, "doc_id")
         .as[(Long, Int, String)].collect().toSet
       assert(native === fallback, s"window $w diverged")

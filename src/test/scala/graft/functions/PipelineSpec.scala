@@ -205,7 +205,7 @@ class PipelineSpec extends SparkSpec {
     assert(spark.catalog.functionExists("word_rep_stats"))
     val native = graft.SparkEntry.queries("p15_repetition")(spark, sf())
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    val composable = graft.PipelineQueries.p15Composable(spark, sf())
+    val composable = KernelTwins.p15Composable(spark, sf())
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     assert(native.nonEmpty && native === composable)
   }
@@ -214,17 +214,17 @@ class PipelineSpec extends SparkSpec {
     assert(spark.catalog.functionExists("word_stats"))
     val p1n = graft.SparkEntry.queries("p1_text_stats")(spark, sf())
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
-    val p1c = graft.PipelineQueries.p1Composable(spark, sf())
+    val p1c = KernelTwins.p1Composable(spark, sf())
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
     assert(p1n.nonEmpty && p1n === p1c)
     val p2n = graft.SparkEntry.queries("p2_quality_score")(spark, sf())
       .as[(Long, Long, Long, Int)].collect().toSeq
-    val p2c = graft.PipelineQueries.p2Composable(spark, sf())
+    val p2c = KernelTwins.p2Composable(spark, sf())
       .as[(Long, Long, Long, Int)].collect().toSeq
     assert(p2n.nonEmpty && p2n === p2c)
     val p3n = graft.SparkEntry.queries("p3_langid")(spark, sf())
       .as[(Long, String)].collect().toSeq
-    val p3c = graft.PipelineQueries.p3Composable(spark, sf())
+    val p3c = KernelTwins.p3Composable(spark, sf())
       .as[(Long, String)].collect().toSeq
     assert(p3n.nonEmpty && p3n === p3c)
   }
@@ -246,7 +246,7 @@ class PipelineSpec extends SparkSpec {
     assert(spark.catalog.functionExists("char_hist16"))
     val q = graft.SparkEntry.queries("p21_byte_histogram")(spark, sf())
     val native = q.as[(Long, Int, Long)].collect().toSeq
-    val composable = graft.PipelineQueries.p21Composable(spark, sf())
+    val composable = KernelTwins.p21Composable(spark, sf())
       .as[(Long, Int, Long)].collect().toSeq
     assert(native.nonEmpty && native === composable)
     // the Generate explodes the 16-element per-row histogram, not the text
@@ -288,7 +288,7 @@ class PipelineSpec extends SparkSpec {
       .withColumn("ws", TextFunctions.words(TextFunctions.normText(col("text"))))
     val native = TextFunctions.withSimhash16(withWs, col("ws"), "s")
       .select("doc_id", "s").as[(Long, Long)].collect().toMap
-    // composable reference form, built inline (bypasses the native branch)
+    // composable reference form, built inline
     val sums = array((1 to 16).map { j =>
       fold(col("_m"), lit(0L),
         (acc, m) => acc + when(substring(m, j, 1) >= "8", 1L).otherwise(-1L))
@@ -304,7 +304,7 @@ class PipelineSpec extends SparkSpec {
 
   test("vec_dot native and fallback agree on length-mismatched and null vectors") {
     import org.apache.spark.sql.functions.{aggregate => fold, _}
-    // fallback form as built by Similarity.dot when vec_dot is absent
+    // composable reference fold: zip_with over the common prefix
     def fb(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
       val n = least(size(a), size(b))
       fold(zip_with(slice(a, lit(1), n), slice(b, lit(1), n), _ * _),
@@ -336,7 +336,7 @@ class PipelineSpec extends SparkSpec {
         TextFunctions.words(TextFunctions.normText(col("text")))))
     val native = TextFunctions.withSimhash16(df, col("ws"), "s")
       .select("doc_id", "s").collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    // fallback form, built inline (bypasses the native branch)
+    // composable reference form, built inline
     val sums = array((1 to 16).map { j =>
       fold(col("_m"), lit(0L),
         (acc, m) => acc + when(substring(m, j, 1) >= "8", 1L).otherwise(-1L))
@@ -532,7 +532,7 @@ class PipelineSpec extends SparkSpec {
         explode(call_function("word_term_counts", col("_ws"))).as("_wt"))
       .select(col("doc_id"), col("_wt.word").as("word"), col("_wt.tf").as("tf"))
       .as[(Long, String, Long)].collect().toSet
-    val viaFallback = TextFunctions.tfidfTermCountsFallback(d, col("_ws"))
+    val viaFallback = KernelTwins.tfidfTermCountsFallback(d, col("_ws"))
       .as[(Long, String, Long)].collect().toSet
     assert(viaKernel === viaFallback && viaKernel.nonEmpty)
     // hand edge cases through both paths
@@ -545,7 +545,7 @@ class PipelineSpec extends SparkSpec {
         explode(call_function("word_term_counts", col("ws"))).as("_wt"))
       .select(col("doc_id"), col("_wt.word").as("word"), col("_wt.tf").as("tf"))
       .as[(Long, Option[String], Long)].collect().toSet
-    val ef = TextFunctions.tfidfTermCountsFallback(
+    val ef = KernelTwins.tfidfTermCountsFallback(
         edge.withColumnRenamed("ws", "_w2"), col("_w2"))
       .as[(Long, Option[String], Long)].collect().toSet
     assert(ek === ef)
@@ -555,7 +555,7 @@ class PipelineSpec extends SparkSpec {
     val viaOp = TextFunctions.tfidfTopK(d, col("_ws"), 3)
       .as[(Long, String, Long, Long, Long, Long)].collect().toSet
     import org.apache.spark.sql.expressions.Window
-    val tfF = TextFunctions.tfidfTermCountsFallback(d, col("_ws"))
+    val tfF = KernelTwins.tfidfTermCountsFallback(d, col("_ws"))
     val dfF = tfF.groupBy("word").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("word"))
     val expOp = tfF.join(dfF, "word")
@@ -743,7 +743,7 @@ class PipelineSpec extends SparkSpec {
           .activityHistogramsFromEvents(df, "k", "ts", unit, bins)
           .as[(Long, Seq[Long])]
         val fused = fusedDs.collect().toMap
-        val twoStep = Similarity.activityHistograms(
+        val twoStep = KernelTwins.activityHistograms(
             Similarity.activityCells(df, "k", "ts", unit, bins), "k", bins)
           .as[(Long, Seq[Long])].collect().toMap
         assert(fused.nonEmpty && fused === twoStep, s"bins=$bins diverged")

@@ -114,7 +114,7 @@ class PqSpec extends SparkSpec {
     val prep = Similarity.prep(embs.where(col("vec_id") < 10))
     val both = prep.select(
         Pq.adcTableCol(col("vd"), pq, spark).as("k"),
-        Pq.adcTableTwin(col("vd"), pq, spark).as("t"))
+        KernelTwins.adcTableTwin(col("vd"), pq, spark).as("t"))
       .as[(Seq[Double], Seq[Double])].collect()
     assert(both.nonEmpty)
     both.foreach { case (k, t) =>

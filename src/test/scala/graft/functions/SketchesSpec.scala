@@ -180,17 +180,17 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("IVF assignment: unrolled and folded-loop routes agree") {
-    // three routes, one answer: the KERNEL route is the default at any
-    // k when registered (r15 — the inline projection's per-centroid
-    // boxed array literals are a measured plumbing tax even at k=16);
-    // the unrolled inline and HOF-twin fallbacks must emit the
-    // identical inverted file (same distances, same lowest-cell ties)
+    // three forms, one answer: the engine assigns through the KERNEL at
+    // any k (r15 — the inline projection's per-centroid boxed array
+    // literals are a measured plumbing tax even at k=16); the unrolled
+    // inline and HOF composable references must emit the identical
+    // inverted file (same distances, same lowest-cell ties)
     val model = IvfIndex.train(embs, k = 8, iters = 3)
     val default = IvfIndex.index(embs, model)
       .select("vec_id", "cell").orderBy("vec_id").collect()
-    val inline = IvfIndex.indexViaInlineAssign(embs, model)
+    val inline = KernelTwins.indexViaInlineAssign(embs, model)
       .select("vec_id", "cell").orderBy("vec_id").collect()
-    val folded = IvfIndex.indexViaFoldedAssign(embs, model)
+    val folded = KernelTwins.indexViaFoldedAssign(embs, model)
       .select("vec_id", "cell").orderBy("vec_id").collect()
     assert(inline.toSeq === default.toSeq)
     assert(folded.toSeq === default.toSeq)
@@ -202,10 +202,10 @@ class SketchesSpec extends SparkSpec {
     def cellsOf(c: org.apache.spark.sql.Column) =
       p.select(col("vec_id"), c.as("pc")).orderBy("vec_id")
         .as[(Long, Seq[Int])].collect().toSeq
-    val inline = cellsOf(IvfIndex.probeCellsInline(col("vd"), model, 4))
-    val kernel = cellsOf(IvfIndex.probeCellsFolded(col("vd"), model, 4))
+    val inline = cellsOf(KernelTwins.probeCellsInline(col("vd"), model, 4))
+    val kernel = cellsOf(IvfIndex.probeCells(col("vd"), model, 4))
     assert(kernel === inline)
-    // the composable HOF twin (sessions without the extension)
+    // the composable HOF reference
     val hof = cellsOf {
       val centsLit = typedlit(model.centroids.map(_.toSeq).toSeq)
       val c2sLit = typedlit(model.centroids.map(c => c.map(x => x * x).sum).toSeq)
@@ -216,12 +216,12 @@ class SketchesSpec extends SparkSpec {
     }
     assert(hof === inline)
     // nprobe above k degrades to the full ranking, not an error
-    val all = cellsOf(IvfIndex.probeCellsFolded(col("vd"), model, 99))
+    val all = cellsOf(IvfIndex.probeCells(col("vd"), model, 99))
     assert(all.forall(_._2.sorted == (0 until 8)))
   }
 
   test("IVF knn through a large codebook matches brute force on its probed cells") {
-    val k = IvfIndex.InlineAssignMaxK + 1
+    val k = 65
     val model = IvfIndex.train(embs, k = k, iters = 2)
     val r = IvfIndex.knn(embs, model, col("vec_id") < 10, 3, nprobe = 8)
     assert(r.count() > 0)
@@ -234,10 +234,10 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("IVF training with a large codebook takes the kernel route and converges") {
-    // k > InlineAssignMaxK forces every Lloyd pass through the kernel;
-    // at sf0.001 (50 vectors) k=65 clusters means near-singleton cells,
+    // k = 65 is past the k≈64 the unrolled projection codegens to; at
+    // sf0.001 (50 vectors) k=65 clusters means near-singleton cells,
     // and a singleton cell's centroid must equal its member
-    val k = IvfIndex.InlineAssignMaxK + 1
+    val k = 65
     val model = IvfIndex.train(embs, k = k, iters = 2)
     assert(model.k === k)
     val idx = IvfIndex.index(embs, model)
@@ -272,7 +272,7 @@ class SketchesSpec extends SparkSpec {
     val kernel = IvfIndex.index2(embs, m2)
       .select("vec_id", "cell").orderBy("vec_id").collect()
     val twin = Similarity.prep(embs)
-      .withColumn("cell", IvfIndex.cell2OfTwin(col("vd"), m2))
+      .withColumn("cell", KernelTwins.cell2OfTwin(col("vd"), m2))
       .select("vec_id", "cell").orderBy("vec_id").collect()
     assert(twin.toSeq === kernel.toSeq)
     // every global cell id decomposes into (coarse, fine) within bounds,
@@ -346,7 +346,7 @@ class SketchesSpec extends SparkSpec {
     // the routed books, and full over-fan-out (every cell, both levels)
     Seq((1, 1), (4, 2), (3, 7), (99, 99)).foreach { case (np, cp) =>
       val kernel = cellsOf(IvfIndex.probeCells2(col("vd"), m2, np, cp))
-      val twin = cellsOf(IvfIndex.probeCells2Twin(col("vd"), m2, np, cp))
+      val twin = cellsOf(KernelTwins.probeCells2Twin(col("vd"), m2, np, cp))
       assert(kernel === twin, s"nprobe=$np coarseProbe=$cp")
     }
     // over-fan-out covers every global cell exactly once
