@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import graft.core.ChangeEnvelope
 
 /** Streaming analytics over change streams — the host-query surface the
   * reference delegates to Siddhi core (SURVEY §2.2), expressed with
@@ -36,27 +36,26 @@ object StreamOps {
   case class KeyedChange(key: String, seq: Long, op: String, payload: String)
   case class LatestImage(key: String, seq: Long, op: String, payload: String, deleted: Boolean)
 
-  implicit private val keyedEnc: Encoder[KeyedChange] = Encoders.product[KeyedChange]
   implicit private val imageEnc: Encoder[LatestImage] = Encoders.product[LatestImage]
-  implicit private val strEnc: Encoder[String] = Encoders.STRING
 
   /** Materialized latest image per key from a change stream — the
-    * streaming analog of Q6 (`update application`, O17 replay): custom
-    * per-key state via `mapGroupsWithState`. Deletes tombstone the key
-    * (deleted=true) but keep state so late replays below the seq are
-    * ignored (idempotent under at-least-once delivery). */
-  def latestImage(changes: Dataset[KeyedChange]): Dataset[LatestImage] = {
-    changes.groupByKey(_.key)
-      .mapGroupsWithState[LatestImage, LatestImage](GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[KeyedChange], state: GroupState[LatestImage]) =>
-          val newest = batch.maxBy(_.seq)
-          val best = state.getOption match {
-            case Some(prev) if prev.seq >= newest.seq => prev // late replay: ignore
-            case _ => LatestImage(key, newest.seq, newest.op, newest.payload,
-              deleted = newest.op == "delete")
-          }
-          state.update(best)
-          best
-      }
-  }
+    * streaming analog of Q6 (`update application`, O17 replay): a keyed
+    * streaming aggregation that keeps, per key, the greatest
+    * `(seq, op, payload)` ever seen. Deletes tombstone the key
+    * (deleted=true) but keep its state, so late replays below the stored
+    * seq lose to it (idempotent under at-least-once delivery); changes
+    * with equal seqs resolve by `op`, then `payload`, the struct order,
+    * so the result does not depend on arrival order. The output is
+    * hash-partitioned on `key`, which lets [[JdbcApply]] write each
+    * micro-batch in the stage that produced it.
+    *
+    * State layout: a checkpoint written by the earlier
+    * `mapGroupsWithState` form of this operator does not restart under
+    * this one; start such a query from a fresh checkpoint. */
+  def latestImage(changes: Dataset[KeyedChange]): Dataset[LatestImage] =
+    changes.groupBy(col("key"))
+      .agg(max(struct(col("seq"), col("op"), col("payload"))).as("newest"))
+      .select(col("key"), col("newest.seq").as("seq"), col("newest.op").as("op"),
+        col("newest.payload").as("payload"), (col("newest.op") <=> ChangeEnvelope.Delete).as("deleted"))
+      .as[LatestImage]
 }

@@ -18,6 +18,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * `baseline`: equal to it once everything a case dropped is freed. */
   def storageAfterDrop(baseline: Int): Int =
     graft.functions.CheckpointUtil.awaitUnreferenced(spark.sparkContext, baseline, 30000L)
+
+  /** Waits until every listener has seen the events posted so far
+    * (`LiveListenerBus.waitUntilEmpty` is private[spark], public in
+    * bytecode). */
+  def drainListeners(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE).invoke(bus, java.lang.Long.valueOf(30000L))
+  }
 }
 
 object SparkSpec {

@@ -4,13 +4,19 @@ import java.sql.DriverManager
 
 import graft.SparkSpec
 import graft.sources.Jdbc
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** JdbcApply ordering and mode edge cases (advice r2):
   *   - same-millisecond same-key operations across many source partitions
   *     apply in SOURCE-OFFSET order when `orderCols` names the offset;
   *   - delete-only flattened streams (before_* + metadata columns only)
-  *     apply without referencing absent after-image columns. */
+  *     apply without referencing absent after-image columns;
+  *   - a batch already clustered on the key is written without a shuffle
+  *     and still applies in offset order;
+  *   - timestamp, date, decimal, boolean, long, string and null values
+  *     reach the table as JDBC values under either datetime API. */
 class JdbcApplyOrderSpec extends SparkSpec {
   import spark.implicits._
 
@@ -62,6 +68,68 @@ class JdbcApplyOrderSpec extends SparkSpec {
       val rs = conn.createStatement().executeQuery("SELECT ID FROM T_DEL")
       val got = Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
       assert(got === List("b"))
+    }
+  }
+
+  /** A session planning like a micro-batch (streaming runs without AQE),
+    * with `confs` set. */
+  private def session(confs: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  test("a key-clustered batch written in place still applies same-key ops in offset order") {
+    withTable("db_inplace", "CREATE TABLE T_IP (ID VARCHAR(8), V VARCHAR(8), OFF BIGINT)", "T_IP") { (url, conn) =>
+      val s = session()
+      import s.implicits._
+      // insert, update, delete, re-insert, update per key, each key's rows
+      // in REVERSE offset order inside its partition: applied as they sit,
+      // k ends as (k, "v1"); in offset order, as (k, "v5")
+      val ops = Seq("insert", "update", "delete", "insert", "update")
+      val batch = (for (k <- Seq("a", "b", "c"); (op, i) <- ops.zipWithIndex)
+        yield (k, s"v${i + 1}", (i + 1).toLong, op)).toDF("id", "v", "off", "_op")
+        .repartition(2, col("id"))
+        .sortWithinPartitions(col("off").desc)
+      val stages = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+      }
+      drainListeners()
+      spark.sparkContext.addSparkListener(listener)
+      val n = try JdbcApply.write(Jdbc.ConnectionSpec(url, Map.empty), "T_IP", Seq("id"), batch,
+        orderCols = Seq("off"), numPartitions = 2)
+      finally { drainListeners(); spark.sparkContext.removeSparkListener(listener) }
+      assert(n === 15L)
+      assert(stages.get === 2, "the batch's own shuffle and the write: no second shuffle")
+      val rs = conn.createStatement().executeQuery("SELECT ID, V FROM T_IP ORDER BY ID")
+      val got = Iterator.continually(rs).takeWhile(_.next())
+        .map(r => (r.getString(1), r.getString(2))).toList
+      assert(got === List(("a", "v5"), ("b", "v5"), ("c", "v5")))
+    }
+  }
+
+  test("timestamp, date, decimal, boolean, long, string and null columns round-trip under either datetime API") {
+    for (java8 <- Seq("false", "true")) {
+      withTable("db_apply_types", "CREATE TABLE T_TY (N BIGINT, TS TIMESTAMP, D DATE, AMT DECIMAL(10, 2), " +
+        "FLAG BOOLEAN, S VARCHAR(8), NUL VARCHAR(8))", "T_TY") { (url, conn) =>
+        val s = session("spark.sql.datetime.java8API.enabled" -> java8)
+        val batch = s.sql("SELECT 7L AS n, TIMESTAMP'2024-03-01 12:34:56.789' AS ts, DATE'2024-02-29' AS d, " +
+          "CAST(1234.5 AS DECIMAL(10, 2)) AS amt, true AS flag, 'x' AS s, CAST(NULL AS STRING) AS nul, " +
+          "'insert' AS _op")
+        assert(JdbcApply.write(Jdbc.ConnectionSpec(url, Map.empty), "T_TY", Seq("n"), batch) === 1L, java8)
+        val rs = conn.createStatement().executeQuery("SELECT N, TS, D, AMT, FLAG, S, NUL FROM T_TY")
+        assert(rs.next(), java8)
+        assert(rs.getLong(1) === 7L, java8)
+        assert(rs.getTimestamp(2).toInstant === java.time.Instant.parse("2024-03-01T12:34:56.789Z"), java8)
+        assert(rs.getDate(3).toLocalDate === java.time.LocalDate.parse("2024-02-29"), java8)
+        assert(rs.getBigDecimal(4) === new java.math.BigDecimal("1234.50"), java8)
+        assert(rs.getBoolean(5), java8)
+        assert(rs.getString(6) === "x", java8)
+        assert(rs.getString(7) === null, java8)
+        assert(!rs.next(), java8)
+      }
     }
   }
 }

@@ -74,4 +74,33 @@ class StreamOpsSpec extends SparkSpec {
       assert(last("k2")._2 === true)         // tombstoned
     } finally q.stop()
   }
+
+  test("latestImage: equal seqs resolve by (op, payload) whatever the arrival order; null payloads kept") {
+    implicit val sqlCtx = spark.sqlContext
+    import StreamOps.KeyedChange
+    val in = MemoryStream[KeyedChange]
+    val q = StreamOps.latestImage(in.toDS()).writeStream.format("memory").queryName("latest_ties")
+      .outputMode(OutputMode.Update()).trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      in.addData(
+        KeyedChange("a", 5, "update", "x"), KeyedChange("a", 5, "update", "y"),
+        KeyedChange("b", 5, "update", "y"), KeyedChange("b", 5, "update", "x"), // reversed arrival
+        KeyedChange("c", 3, "update", "z"), KeyedChange("c", 3, "delete", "z"), // "update" > "delete"
+        KeyedChange("d", 1, "insert", null))
+      q.processAllAvailable()
+      in.addData(
+        KeyedChange("c", 3, "delete", "z"), // the losing tie again, in a later batch
+        KeyedChange("d", 2, "update", null))
+      q.processAllAvailable()
+      val got = spark.table("latest_ties").as[StreamOps.LatestImage].collect().toSeq
+        .sortBy(r => (r.key, r.seq))
+      assert(got === Seq(
+        StreamOps.LatestImage("a", 5, "update", "y", deleted = false),
+        StreamOps.LatestImage("b", 5, "update", "y", deleted = false),
+        StreamOps.LatestImage("c", 3, "update", "z", deleted = false),
+        StreamOps.LatestImage("c", 3, "update", "z", deleted = false),
+        StreamOps.LatestImage("d", 1, "insert", null, deleted = false),
+        StreamOps.LatestImage("d", 2, "update", null, deleted = false)))
+    } finally q.stop()
+  }
 }
