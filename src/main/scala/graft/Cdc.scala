@@ -117,10 +117,10 @@ object Cdc {
   /** The snapshot-diff capture LOOP with managed state — entry-point
     * parity with `mode=polling`/`mode=listening` for the no-binlog
     * capture mode: where polling checkpoints an offset under the stream's
-    * checkpoint dir, this checkpoints the last snapshot (parquet + digest
-    * artifact) under `stateDir` and each call returns one round's change
-    * set plus the commit that publishes the new baseline
-    * ([[graft.streaming.SnapshotCapture]]; recovery semantics and the
+    * checkpoint dir, this checkpoints the last snapshot (parquet, its
+    * schema and its digest file) under `stateDir` and each call returns
+    * one round's change set plus the commit that publishes the new
+    * baseline ([[graft.streaming.SnapshotCapture]]; recovery semantics and the
     * crash-replay round-trip pinned in CdcSpec). Same option names as
     * [[snapshot]]. */
   def snapshotCapture(spark: SparkSession, options: Map[String, String],
@@ -132,8 +132,8 @@ object Cdc {
   /** One-call capture → apply → commit: [[snapshotCapture]] pushed into
     * `targetTable` through [[graft.streaming.JdbcApply]], the complete
     * binlog-free replication round as a single scheduled call. Returns
-    * the number of changes applied (0 on a quiet round — two digest
-    * tables compared, zero rows joined). */
+    * the number of changes applied (0 on a quiet round — the two rounds'
+    * digests compared on the driver, zero rows joined). */
   def snapshotDiffApply(spark: SparkSession, options: Map[String, String],
                         pk: Seq[String], stateDir: String,
                         target: graft.sources.Jdbc.ConnectionSpec,

@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.TimeoutException
-import java.util.zip.{Deflater, DeflaterOutputStream, InflaterInputStream}
+import java.util.zip.{Deflater, DeflaterOutputStream, Inflater, InflaterInputStream}
 
 import scala.concurrent.Await
 import scala.concurrent.duration._
@@ -82,14 +82,13 @@ object SnapshotDiff {
   /** [[diff]] behind a digest prune — the shape that makes repeated
     * snapshot capture viable at 100 TB, where between rounds almost
     * nothing changed: both snapshots first collapse map-side to one
-    * xxhash64 row-signature per row, bit_xor-folded per PK-hash bucket
-    * (order-independent, so the aggregation is fully partial — the
-    * shuffle carries `buckets` cells per partition, never rows). Bucket
-    * digests that MATCH on both sides prove their rows need no
-    * comparison; only rows of dirty buckets (digest mismatch, or a
-    * bucket present on one side) enter the full-outer PK join. A
-    * same-bucket-count sync over an unchanged table shuffles two
-    * bucket-count-sized digest tables and zero rows.
+    * xxhash64 row-signature per row, xor-folded per PK-hash bucket with a
+    * row count ([[Digests]]; order-independent, so the aggregation is
+    * fully partial — the shuffle carries digest buffers, never rows).
+    * Bucket digests that MATCH on both sides prove their rows need no
+    * comparison; only rows of dirty buckets (digest or count mismatch)
+    * enter the full-outer PK join. A sync over an unchanged table
+    * shuffles one digest buffer per input partition and zero rows.
     *
     * Trust model: a change is missed only if a bucket's xor of 64-bit
     * row signatures collides before and after — the rsync/Merkle-sync
@@ -98,162 +97,105 @@ object SnapshotDiff {
     * contract are identical to [[diff]] (parity pinned in
     * SnapshotDiffSpec).
     *
-    * Evaluation: the call is EAGER — it runs the digest aggregation and
-    * collects the dirty bucket ids (at most `buckets` longs) when the
-    * frame is built; both sides are then pruned by a plain filter on
-    * those ids. Nothing is cached or checkpointed, so there is nothing to
-    * release and the returned frame stays recomputable. */
+    * Evaluation: the call is EAGER — both sides' digests are computed
+    * by [[digestsOf]] when the frame is built (2 jobs under AQE, pinned
+    * in SnapshotDiffSpec); the rest is [[diffPrunedIncremental]].
+    * Nothing is cached or checkpointed, so there is nothing to release
+    * and the returned frame stays recomputable. */
   def diffPruned(before: DataFrame, after: DataFrame, pk: Seq[String],
                  buckets: Int = 4096): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val cols = after.columns.toSeq
     require(before.columns.toSeq == cols,
       s"snapshots must share a schema; got ${before.columns.toSeq} vs $cols")
-    prunedDiff(before, after,
-      dirtyBuckets(bucketDigests(before, pk, buckets), bucketDigests(after, pk, buckets))
-        .collect().map(_.getLong(0)).toSeq, pk, buckets)
+    val Seq(beforeDigests, afterDigests) = digestsOf(Seq(before, after), pk, buckets)
+    diffPrunedIncremental(before, beforeDigests, after, afterDigests, pk, buckets)
   }
 
-  /** [[diffPruned]] with the BEFORE side's digests supplied instead of
-    * recomputed: a persisted [[bucketDigests]] artifact of `before` (a
-    * `buckets`-row table), so `before` is never scanned for digests.
-    * Rows enter the PK join only from dirty buckets. Eager like
-    * [[diffPruned]]: at call time `after` is digested, the supplied
-    * artifact is validated against its `_buckets`/`_cols` stamps and
-    * collected, and the dirty bucket ids are computed on the driver;
-    * nothing to release.
-    *
-    * [[graft.streaming.SnapshotCapture]] runs the same diff with both
-    * sides' digests already on the driver (see [[Digests]]): the new
-    * snapshot's observed during its write, the previous one's read from
-    * that round's digest file, so its rounds run no digest job. A
-    * previous round of the earlier layout, whose digests are a parquet
-    * `digests/` table, still goes through this validate-and-collect
-    * path. */
-  def diffPrunedIncremental(before: DataFrame, beforeDigests: DataFrame,
-                            after: DataFrame, pk: Seq[String],
-                            buckets: Int = 4096): DataFrame = {
-    val cols = after.columns.toSeq
-    diffPrunedIncremental(before, collectDigests(beforeDigests, cols, pk, buckets),
-      after, collectDigests(bucketDigests(after, pk, buckets), cols, pk, buckets), pk, buckets)
+  /** Each frame's [[Digests]], from ONE global aggregation over every
+    * frame's (bucket, signature) rows, frame i's buckets offset by
+    * `i × buckets` so each folds into its own cells: one collect, 2 jobs
+    * under AQE (the partial-aggregate stage and the final one). */
+  private[graft] def digestsOf(frames: Seq[DataFrame], pk: Seq[String],
+                               buckets: Int): Seq[Digests] = {
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+    val cells = frames.zipWithIndex.map { case (df, i) =>
+      df.select((bucketOf(pk, buckets) + lit(i.toLong * buckets)).as("_bkt"),
+        rowSignature(df.columns.toSeq).as("_sig"))
+    }.reduce(_ union _)
+      .agg(digestFold(frames.size * buckets)(col("_bkt"), col("_sig"))).head().getSeq[Long](0)
+    frames.zip(cells.grouped(2 * buckets).toSeq).map { case (df, c) =>
+      new Digests(buckets, colsTag(df.columns.toSeq, pk), c.toArray)
+    }
   }
 
-  /** [[diffPrunedIncremental]] over digests already on the driver: both
-    * sides' stamps are checked against `after`'s columns and `buckets`
-    * (the [[validateDigests]] refusals, same wording), then the dirty
-    * bucket ids are computed with no job. */
+  /** [[diffPruned]] over digests already on the driver, as the capture
+    * loop ([[graft.streaming.SnapshotCapture]]) holds them: the new
+    * snapshot's observed during its write ([[observeDigests]]), the
+    * previous one's read from that round's digest file. Both sides'
+    * stamps are checked against `after`'s columns and `buckets`
+    * ([[Digests.check]]), the dirty bucket ids are computed on the
+    * driver, and both sides are pruned by a plain filter on those ids:
+    * no job runs at construction. */
   private[graft] def diffPrunedIncremental(before: DataFrame, beforeDigests: Digests,
                                            after: DataFrame, afterDigests: Digests,
                                            pk: Seq[String], buckets: Int): DataFrame = {
     val tag = colsTag(after.columns.toSeq, pk)
     beforeDigests.check(tag, buckets)
     afterDigests.check(tag, buckets)
-    prunedDiff(before, after, beforeDigests.dirtyIds(afterDigests), pk, buckets)
-  }
-
-  /** A [[bucketDigests]] artifact, validated against `cols`/`pk`/`buckets`
-    * ([[validateDigests]]) and collected: one job over a `buckets`-row
-    * table. */
-  private[graft] def collectDigests(artifact: DataFrame, cols: Seq[String], pk: Seq[String],
-                                    buckets: Int): Digests = {
-    val tag = colsTag(cols, pk)
-    val cells = new Array[Long](2 * buckets)
-    validateDigests(artifact, tag, buckets).select("_bkt", "_digest", "_n").collect()
-      .foreach { r =>
-        val b = r.getLong(0).toInt
-        cells(2 * b) = r.getLong(1)
-        cells(2 * b + 1) = r.getLong(2)
-      }
-    new Digests(buckets, tag, cells)
-  }
-
-  /** Guard for persisted digest artifacts: a digest table built with a
-    * different bucket count (or a different column list/order) than this
-    * call's would misalign bucket ids and silently prune rows that DID
-    * change. [[bucketDigests]] stamps `_buckets`/`_cols` into the
-    * artifact; when present they are checked row-wise (digest tables are
-    * `buckets`-sized, so the check is free) and the diff fails loudly on
-    * mismatch. Artifacts from before the stamp existed only get the
-    * weaker range check `0 <= _bkt < buckets` — which cannot catch a
-    * SMALLER original bucket count, hence the stamp. */
-  private def validateDigests(digests: DataFrame, expectTag: String,
-                              buckets: Int): DataFrame = {
-    def refuse(ok: Column, refusal: (String, String), found: Column) =
-      assert_true(ok, concat(lit(refusal._1), found, lit(refusal._2))).isNull
-    val hasMeta = digests.columns.contains("_buckets")
-    if (hasMeta) {
-      val d = if (digests.columns.contains("_cols"))
-        digests.where(refuse(col("_cols") === lit(expectTag), colsRefusal(expectTag), col("_cols")))
-          .drop("_cols")
-      else digests
-      d.where(refuse(col("_buckets") === lit(buckets.toLong), bucketsRefusal(buckets), col("_buckets")))
-        .drop("_buckets")
-    } else
-      digests.where(assert_true(col("_bkt") >= 0 && col("_bkt") < lit(buckets.toLong),
-        concat(lit("digest artifact carries bucket id "), col("_bkt"),
-          lit(s" outside [0, $buckets) — built with a different bucket " +
-            "count?"))).isNull)
-  }
-
-  /** The refusal of a digest artifact whose column stamp is not
-    * `expectTag`, split around the found stamp. */
-  private def colsRefusal(expectTag: String): (String, String) =
-    ("digest artifact was built over [",
-      s"] but this diff runs over [$expectTag]; signatures would not be comparable")
-
-  /** The refusal of a digest artifact whose bucket stamp is not
-    * `buckets`, split around the found stamp. */
-  private def bucketsRefusal(buckets: Int): (String, String) =
-    ("digest artifact was built with buckets=",
-      s" but this diff uses buckets=$buckets; bucket ids would misalign and " +
-        "changed rows would be silently pruned")
-
-  private def colsTag(cols: Seq[String], pk: Seq[String]): String =
-    s"pk=${pk.mkString(",")};cols=${cols.mkString(",")}"
-
-  private def prunedDiff(before: DataFrame, after: DataFrame, dirty: Seq[Long],
-                         pk: Seq[String], buckets: Int): DataFrame = {
     // the dirty set is at most `buckets` longs, already on the driver: a
     // literal IN-set filter prunes both sides with no join, no broadcast
     // exchange and no re-run of the digest passes (an empty set plans
     // both sides as empty relations)
-    def prune(df: DataFrame): DataFrame =
-      df.where(bucketOf(pk, buckets).isInCollection(dirty))
-    diff(prune(before), prune(after), pk)
+    val dirty = bucketOf(pk, buckets).isInCollection(beforeDigests.dirtyIds(afterDigests))
+    diff(before.where(dirty), after.where(dirty), pk)
   }
+
+  private def colsTag(cols: Seq[String], pk: Seq[String]): String =
+    s"pk=${pk.mkString(",")};cols=${cols.mkString(",")}"
 
   /** A row's PK-hash bucket, in `[0, buckets)`. */
   private[graft] def bucketOf(pk: Seq[String], buckets: Int): Column =
     pmod(xxhash64(pk.map(col): _*), lit(buckets.toLong))
 
   /** The row signature a bucket digest folds: xxhash64 over every
-    * column's value AND its null flag (see [[bucketDigests]]). */
+    * column's value AND its null flag. Spark's hash functions skip NULL
+    * inputs (the running hash is unchanged), so without the flags two
+    * rows differing only in WHICH column is null — e.g. (a='x', b=NULL)
+    * updated to (a=NULL, b='x') — would hash identically and the update
+    * would be invisibly pruned, a deterministic collision class rather
+    * than the documented 64-bit accident. */
   private[graft] def rowSignature(cols: Seq[String]): Column =
     xxhash64((cols.map(col) ++ cols.map(c => col(c).isNull)): _*)
 
-  /** [[bucketDigests]] held on the driver: `cells(2b)` is bucket b's xor
-    * of row signatures and `cells(2b + 1)` its row count (0 for an empty
-    * bucket, which [[bucketDigests]] omits), stamped with the bucket
-    * count and column tag they were built under. */
+  /** One snapshot's bucket digests, held on the driver: `cells(2b)` is
+    * bucket b's xor of row signatures and `cells(2b + 1)` its row count
+    * (both 0 for an empty bucket), stamped with the bucket count and
+    * column tag they were built under, so a diff can refuse digests that
+    * would misalign bucket ids or compare signatures of other columns. */
   private[graft] final class Digests(val buckets: Int, val cols: String, val cells: Array[Long]) {
     require(cells.length == 2 * buckets, s"${cells.length} digest cells for $buckets buckets")
 
-    /** The [[validateDigests]] refusals, for stamps read on the driver. */
+    /** Fails loudly when the stamps are not this diff's: digests built
+      * with a different bucket count (or a different column list/order)
+      * would misalign bucket ids and silently prune rows that DID change. */
     def check(expectTag: String, expectBuckets: Int): Unit = {
-      def refuse(r: (String, String), found: Any) =
-        throw new IllegalStateException(r._1 + found + r._2)
-      if (cols != expectTag) refuse(colsRefusal(expectTag), cols)
-      if (buckets != expectBuckets) refuse(bucketsRefusal(expectBuckets), buckets)
+      if (cols != expectTag) throw new IllegalStateException(
+        s"digest artifact was built over [$cols] but this diff runs over [$expectTag]; " +
+          "signatures would not be comparable")
+      if (buckets != expectBuckets) throw new IllegalStateException(
+        s"digest artifact was built with buckets=$buckets but this diff uses " +
+          s"buckets=$expectBuckets; bucket ids would misalign and changed rows would be " +
+          "silently pruned")
     }
 
-    /** The buckets whose digest or row count differs from `other`'s —
-      * [[dirtyBuckets]], including buckets non-empty on one side only. */
+    /** The buckets whose digest or row count differs from `other`'s,
+      * including buckets non-empty on one side only. */
     def dirtyIds(other: Digests): Seq[Long] =
       (0 until buckets).filter(b => cells(2 * b) != other.cells(2 * b) ||
         cells(2 * b + 1) != other.cells(2 * b + 1)).map(_.toLong)
 
-    /** (`_bkt`, `_digest`, `_n`) of every non-empty bucket, in bucket
-      * order: the rows of [[bucketDigests]]. */
+    /** (bucket, digest, row count) of every non-empty bucket, in bucket
+      * order. */
     def rows: Seq[(Long, Long, Long)] =
       (0 until buckets).filter(b => cells(2 * b + 1) > 0)
         .map(b => (b.toLong, cells(2 * b), cells(2 * b + 1)))
@@ -275,13 +217,30 @@ object SnapshotDiff {
   private val DigestFormat = 1
 
   object Digests {
+    /** Parses [[Digests.toBytes]]. The bytes come from a file, so a
+      * damaged one is refused with an `IllegalArgumentException` saying
+      * what is wrong: not exactly one deflate stream (truncated, or bytes
+      * after it), an unknown format number, a bucket count below 1, or a
+      * payload whose length is not what its stamps need. */
     def fromBytes(bytes: Array[Byte]): Digests = {
-      val z = new InflaterInputStream(new java.io.ByteArrayInputStream(bytes))
-      val bb = ByteBuffer.wrap(try z.readAllBytes() finally z.close())
-      val format = bb.getInt()
+      val z = new Inflater()
+      val bb = try {
+        val payload = new InflaterInputStream(new java.io.ByteArrayInputStream(bytes), z).readAllBytes()
+        require(z.getBytesRead == bytes.length,
+          s"${bytes.length - z.getBytesRead} bytes follow the digest file's deflate stream")
+        ByteBuffer.wrap(payload)
+      } catch {
+        case e: java.io.IOException =>
+          throw new IllegalArgumentException(s"digest file is truncated or not deflated: ${e.getMessage}", e)
+      } finally z.end()
+      require(bb.remaining >= 12, s"digest file holds ${bb.remaining} bytes, fewer than its header")
+      val (format, buckets, tagLength) = (bb.getInt(), bb.getInt(), bb.getInt())
       require(format == DigestFormat, s"unknown digest file format $format")
-      val buckets = bb.getInt()
-      val tag = new Array[Byte](bb.getInt())
+      require(buckets >= 1, s"digest file stamps buckets=$buckets")
+      val need = 12L + tagLength + 16L * buckets
+      require(tagLength >= 0 && bb.capacity == need, s"digest file holds ${bb.capacity} bytes " +
+        s"but its stamps (buckets=$buckets, tag length $tagLength) need $need")
+      val tag = new Array[Byte](tagLength)
       bb.get(tag)
       val cells = new Array[Long](2 * buckets)
       bb.asLongBuffer().get(cells)
@@ -292,16 +251,16 @@ object SnapshotDiff {
   /** `df` with its bucket digests attached as an observed metric: the
     * action that runs the returned frame (the capture loop's snapshot
     * write) computes them in the same scan, and the returned handle
-    * yields them. Same buckets, signature and stamps as
-    * [[bucketDigests]] over `df` (parity pinned in SnapshotDiffSpec).
+    * yields them. Same buckets, signature and stamps as [[diffPruned]]'s
+    * digests (parity with a groupBy/`bit_xor` reference pinned in
+    * SnapshotDiffSpec).
     * Each task holds one `2 × buckets` long buffer. */
   private[graft] def observeDigests(df: DataFrame, pk: Seq[String],
                                     buckets: Int): (DataFrame, ObservedDigests) = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val cols = df.columns.toSeq
     val obs = Observation()
-    val fold = udaf(new DigestAgg(buckets), Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-    (df.observe(obs, fold(bucketOf(pk, buckets), rowSignature(cols)).as("cells")),
+    (df.observe(obs, digestFold(buckets)(bucketOf(pk, buckets), rowSignature(cols)).as("cells")),
       new ObservedDigests(obs, buckets, colsTag(cols, pk)))
   }
 
@@ -319,6 +278,10 @@ object SnapshotDiff {
       new Digests(buckets, tag, row.getSeq[Long](0).toArray)
     }
   }
+
+  /** [[DigestAgg]] as a column function of (bucket, signature). */
+  private def digestFold(buckets: Int) =
+    udaf(new DigestAgg(buckets), Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
 
   /** Per-bucket (xor of signatures, count) over (bucket, signature) rows. */
   private final class DigestAgg(buckets: Int)
@@ -338,45 +301,5 @@ object SnapshotDiff {
     def finish(b: Array[Long]): Array[Long] = b
     def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
     def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-  }
-
-  /** The persistable sync artifact: one (bucket, digest, row count) row
-    * per PK-hash bucket — xxhash64 row signatures bit_xor-folded, so the
-    * aggregation is order-independent and fully partial (the shuffle
-    * carries bucket cells, never rows). `buckets` rows total; write it
-    * next to each snapshot and the next capture round never re-scans
-    * this one.
-    *
-    * The row signature hashes every column's value AND its null flag:
-    * Spark's hash functions skip NULL inputs (the running hash is
-    * unchanged), so without the flags two rows differing only in WHICH
-    * column is null — e.g. (a='x', b=NULL) updated to (a=NULL, b='x') —
-    * would hash identically and the update would be invisibly pruned, a
-    * deterministic collision class rather than the documented 64-bit
-    * accident. The artifact also carries `_buckets` and `_cols` stamps so
-    * [[diffPrunedIncremental]] can refuse a digest built with a
-    * mismatched bucket count or column order instead of silently
-    * misaligning bucket ids. */
-  def bucketDigests(df: DataFrame, pk: Seq[String], buckets: Int): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val cols = df.columns.toSeq
-    df.select(bucketOf(pk, buckets).as("_bkt"), rowSignature(cols).as("_sig"))
-      .groupBy("_bkt").agg(bit_xor(col("_sig")).as("_digest"),
-        count(lit(1)).as("_n"))
-      .withColumn("_buckets", lit(buckets.toLong))
-      .withColumn("_cols", lit(colsTag(cols, pk)))
-  }
-
-  /** The buckets whose digest or row count differs — the rows the pruned
-    * diffs actually compare. Exposed so a deployment (and the spec) can
-    * observe prune effectiveness. */
-  def dirtyBuckets(beforeDigests: DataFrame, afterDigests: DataFrame): DataFrame = {
-    val b = beforeDigests.select(col("_bkt"),
-      col("_digest").as("_db"), col("_n").as("_db_n"))
-    val a = afterDigests.select(col("_bkt"),
-      col("_digest").as("_da"), col("_n").as("_da_n"))
-    b.join(a, Seq("_bkt"), "full_outer")
-      .where(!(col("_db") <=> col("_da")) || !(col("_db_n") <=> col("_da_n")))
-      .select("_bkt")
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{ChecksumException, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -24,20 +24,22 @@ import graft.sources.Jdbc
   * stateDir/round_<n>/snapshot/   parquet image of the source at round n
   * stateDir/round_<n>/schema      its schema as JSON, so the next round
   *                                reads it without schema inference
-  * stateDir/round_<n>/digests.bin its per-bucket digests (the rows of
-  *                                SnapshotDiff.bucketDigests), stamped
-  *                                with the bucket count and column list;
+  * stateDir/round_<n>/digests.bin its per-bucket digests
+  *                                (SnapshotDiff.Digests), stamped with
+  *                                the bucket count and column list;
   *                                written and read on the driver
   * stateDir/round_<n>/_COMMIT     marker, written LAST by commit()
   * }}}
   * One committed round is live at a time: each capture starts by deleting
   * every other round directory (uncommitted crash garbage and superseded
   * committed rounds), so the state is one snapshot plus the round in
-  * flight, not one snapshot per round ever captured. State of earlier
-  * layouts still reads: a round without the `schema` sidecar by
-  * inference, a round whose digests are a parquet `digests/` table
-  * through [[SnapshotDiff.diffPrunedIncremental]]'s validate-and-collect
-  * path (one job).
+  * flight, not one snapshot per round ever captured. This is the only
+  * layout read: a committed round that lacks `snapshot/`, `schema` or
+  * `digests.bin` (as state written by earlier versions does, which kept
+  * the digests as a parquet `digests/` table), or whose digest file is
+  * damaged, is refused with one `IllegalStateException` that names the
+  * round and the fix — delete `stateDir` and re-bootstrap against an
+  * empty target, since the bootstrap round sends every row as an insert.
   *
   * Delivery is AT-LEAST-ONCE with the same commit geometry as the
   * streaming engine's foreachBatch checkpoint (offsets commit AFTER the
@@ -86,16 +88,17 @@ object SnapshotCapture {
     * dirty-bucket diff: its two PK exchanges, then the apply's
     * repartition and the apply itself. The previous snapshot's read
     * names its schema (the `schema` sidecar), so no read runs a
-    * schema-inference job; a round without the sidecar falls back to
-    * inference. Each job carries the description `capture round <n>:
-    * snapshot`, `...: diff` or `...: apply`; the diff phase runs jobs only
-    * for a previous round of an earlier layout. */
+    * schema-inference job. Each job carries the description `capture
+    * round <n>: snapshot` or `...: apply`; building the diff runs no job.
+    * A previous round of another layout is refused before the snapshot
+    * scan (see the state layout above). */
   def capture(spark: SparkSession, source: DataFrame, pk: Seq[String],
               stateDir: String, buckets: Int = 4096): CaptureRound = {
     val dir = new Path(stateDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val latest = listRounds(fs, dir).lastOption
     sweep(fs, dir, latest)
+    val prev = latest.map(p => committedRound(spark, fs, new Path(dir, s"round_$p"), stateDir))
     val round = latest.map(_ + 1L).getOrElse(0L)
     val roundDir = new Path(dir, s"round_$round")
     // ONE scan of the live source writes the image and digests it on the
@@ -110,23 +113,8 @@ object SnapshotCapture {
     writeSmallFile(fs, new Path(roundDir, "schema"), schema.json.getBytes(UTF_8))
     writeSmallFile(fs, new Path(roundDir, DigestFile), digests.toBytes)
     val cur = spark.read.schema(schema).parquet(snapshot)
-    val changes = latest match {
-      case Some(prev) => phase(spark, round, "diff") {
-        val prevDir = new Path(dir, s"round_$prev")
-        // a round written before the sidecar existed: infer both schemas
-        val prevSchema = readText(fs, new Path(prevDir, "schema")).map(schemaOf)
-        // a round written before the digest file existed keeps its
-        // digests as a parquet table: validate and collect it
-        val prevDigests = readSmallFile(fs, new Path(prevDir, DigestFile))
-          .map(SnapshotDiff.Digests.fromBytes)
-          .getOrElse(SnapshotDiff.collectDigests(
-            read(spark, new Path(prevDir, "digests"),
-              prevSchema.map(_ => SnapshotDiff.bucketDigests(cur, pk, buckets).schema)),
-            cur.columns.toSeq, pk, buckets))
-        SnapshotDiff.diffPrunedIncremental(read(spark, new Path(prevDir, "snapshot"), prevSchema),
-          prevDigests, cur, digests, pk, buckets)
-      }
-      case None => SnapshotDiff.inserts(cur, pk)
+    val changes = prev.fold(SnapshotDiff.inserts(cur, pk)) { case (prevSnapshot, prevDigests) =>
+      SnapshotDiff.diffPrunedIncremental(prevSnapshot, prevDigests, cur, digests, pk, buckets)
     }
     CaptureRound(round, changes,
       () => { fs.create(new Path(roundDir, "_COMMIT"), true).close(); () })
@@ -169,8 +157,7 @@ object SnapshotCapture {
     *
     * Every parquet read names its schema — the snapshot its round's
     * `schema` sidecar, the ladder the schema stored on the second line
-    * of `ladder_meta` — so no read runs a schema-inference job; state
-    * written without them falls back to inference. */
+    * of `ladder_meta` — so no read runs a schema-inference job. */
   def captureIntoLadder(spark: SparkSession, source: DataFrame, pk: Seq[String],
                         stateDir: String, keyCol: String, tsCol: String,
                         valueCol: String, granularities: Seq[(String, Long)],
@@ -186,37 +173,57 @@ object SnapshotCapture {
     // grain (and column mapping) matches the one it was built under —
     // advanceChanges on a ladder of a different grain would silently
     // merge mixed-grain cells into aggregates equal to nothing. The
-    // grain is persisted next to the ladder and validated every round;
-    // a mismatch (or a pre-metadata ladder) re-bootstraps from the
-    // snapshot instead.
+    // grain and the ladder's schema are persisted next to it and
+    // validated every round; a mismatch (or a meta without the schema
+    // line) re-bootstraps from the snapshot instead.
     val meta = s"grain=${granularities.head._1}:${granularities.head._2};" +
       s"key=$keyCol;ts=$tsCol;value=$valueCol"
-    val prevLines = readText(fs, new Path(prevRound, "ladder_meta"))
-      .map(_.split("\n", 2))
-    val prevMeta = prevLines.map(_.head)
-    val finest =
-      if (r.round == 0L || !fs.exists(prevLadder) || !prevMeta.contains(meta))
-        IncrementalAgg.rollup(
-          read(spark, new Path(roundDir, "snapshot"),
-            readText(fs, new Path(roundDir, "schema")).map(schemaOf)),
-          keyCol, tsCol, valueCol, granularities.take(1)).head._2
-      else
-        IncrementalAgg.advanceChanges(
-          read(spark, prevLadder, prevLines.flatMap(_.lift(1)).map(schemaOf)),
+    val prevMeta = new Path(prevRound, "ladder_meta")
+    val prevSchema =
+      if (!fs.exists(prevMeta) || !fs.exists(prevLadder)) None
+      else new String(readSmallFile(fs, prevMeta), UTF_8).split("\n", 2) match {
+        case Array(`meta`, json) => Some(schemaOf(json))
+        case _ => None
+      }
+    val finest = prevSchema match {
+      case Some(ladderSchema) =>
+        IncrementalAgg.advanceChanges(read(spark, prevLadder, ladderSchema),
           r.changes, keyCol, tsCol, valueCol, granularities.take(1)).head._2
+      case None =>
+        IncrementalAgg.rollup(
+          read(spark, new Path(roundDir, "snapshot"), nullable(source.schema)),
+          keyCol, tsCol, valueCol, granularities.take(1)).head._2
+    }
     val ladder = new Path(roundDir, "ladder")
     val ladderSchema = nullable(finest.schema)
     finest.write.mode("overwrite").parquet(ladder.toString)
     writeSmallFile(fs, new Path(roundDir, "ladder_meta"),
       (meta + "\n" + ladderSchema.json).getBytes(UTF_8))
     r.commit()
-    (r.round, IncrementalAgg.ladder(read(spark, ladder, Some(ladderSchema)), keyCol, granularities))
+    (r.round, IncrementalAgg.ladder(read(spark, ladder, ladderSchema), keyCol, granularities))
   }
 
-  /** Parquet at `p`, read with `schema` when it is known (no
-    * schema-inference job) and by inference otherwise. */
-  private def read(spark: SparkSession, p: Path, schema: Option[StructType]): DataFrame =
-    schema.fold(spark.read)(spark.read.schema).parquet(p.toString)
+  /** Parquet at `p`, read with its known `schema` (no schema-inference
+    * job). */
+  private def read(spark: SparkSession, p: Path, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(p.toString)
+
+  /** The committed round `prevDir`'s snapshot, read with its schema, and
+    * its digests; a round of any other layout, or one whose digest file
+    * is damaged, is refused with the fix. */
+  private def committedRound(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                             prevDir: Path, stateDir: String): (DataFrame, SnapshotDiff.Digests) = {
+    def refuse(why: String, cause: Throwable = null): Nothing =
+      throw new IllegalStateException(s"committed round $prevDir is not of the current state " +
+        s"layout: $why. Delete $stateDir and re-bootstrap against an empty target table " +
+        "(the bootstrap round sends every row as an insert)", cause)
+    val missing = Seq("snapshot", "schema", DigestFile).filterNot(f => fs.exists(new Path(prevDir, f)))
+    if (missing.nonEmpty) refuse(s"it has no ${missing.mkString(", ")}")
+    val digests = try SnapshotDiff.Digests.fromBytes(readSmallFile(fs, new Path(prevDir, DigestFile)))
+      catch { case e @ (_: IllegalArgumentException | _: ChecksumException) => refuse(e.getMessage, e) }
+    val schema = schemaOf(new String(readSmallFile(fs, new Path(prevDir, "schema")), UTF_8))
+    (read(spark, new Path(prevDir, "snapshot"), schema), digests)
+  }
 
   private def schemaOf(json: String): StructType =
     DataType.fromJson(json).asInstanceOf[StructType]
@@ -243,17 +250,11 @@ object SnapshotCapture {
     finally out.close()
   }
 
-  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                            p: Path): Option[Array[Byte]] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(in.readAllBytes())
-      finally in.close()
-    }
-
-  private def readText(fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[String] =
-    readSmallFile(fs, p).map(new String(_, UTF_8))
+  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem, p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes()
+    finally in.close()
+  }
 
   private def listRounds(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[Long] =
     if (!fs.exists(dir)) Seq.empty

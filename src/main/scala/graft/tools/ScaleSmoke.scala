@@ -1,7 +1,10 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
+
 import graft._
 import graft.functions.{Dedup, Similarity, TextFunctions => TF}
+import graft.operators.SnapshotDiff
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -198,15 +201,15 @@ object ScaleSmoke {
     snapFactors.foreach { n =>
       val t0 = System.nanoTime()
       val ordersN = replicateOrders(Tables.orders(spark, dir), n)
-      ordersN.write.mode("overwrite").parquet(s"$smokeDir/orders_before_x$n")
+      // the before-snapshot's digest file, observed during its write
+      val (observed, digests) = SnapshotDiff.observeDigests(ordersN, Seq("o_orderkey"), 4096)
+      observed.write.mode("overwrite").parquet(s"$smokeDir/orders_before_x$n")
+      Files.write(Paths.get(s"$smokeDir/orders_digests_x$n.bin"), digests.await().toBytes)
       ordersN.where(!col("o_orderkey").isin(197L, 397L, 597L))
         .withColumn("o_totalprice",
           when(col("o_orderkey") < 100, col("o_totalprice") * 2)
             .otherwise(col("o_totalprice")))
         .write.mode("overwrite").parquet(s"$smokeDir/orders_after_x$n")
-      graft.operators.SnapshotDiff.bucketDigests(
-          spark.read.parquet(s"$smokeDir/orders_before_x$n"), Seq("o_orderkey"), 4096)
-        .write.mode("overwrite").parquet(s"$smokeDir/orders_digests_x$n")
       println(f"[scale] materialize snapshots   x$n%-3d ${(System.nanoTime() - t0) / 1e9}%8.2f s")
     }
   }
@@ -520,9 +523,10 @@ object ScaleSmoke {
         graft.operators.SnapshotDiff.diff(beforeSnap, afterSnap,
           Seq("o_orderkey")).count())
       time("snap_diff_incr", n) {
-        val prevDigests = spark.read.parquet(s"$smokeDir/orders_digests_x$n")
-        graft.operators.SnapshotDiff.diffPrunedIncremental(
-          beforeSnap, prevDigests, afterSnap, Seq("o_orderkey")).count()
+        val prev = SnapshotDiff.Digests.fromBytes(
+          Files.readAllBytes(Paths.get(s"$smokeDir/orders_digests_x$n.bin")))
+        val Seq(cur) = SnapshotDiff.digestsOf(Seq(afterSnap), Seq("o_orderkey"), 4096)
+        SnapshotDiff.diffPrunedIncremental(beforeSnap, prev, afterSnap, cur, Seq("o_orderkey"), 4096).count()
       }
       // SemDeDup at depth: rotated replicas (decorrelated — see
       // replicateEmbsRotated) and a codebook k = min(16·n, 512). The cap

@@ -638,13 +638,6 @@ class PlanShapeSpec extends SparkSpec {
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
         bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
-    // LiveListenerBus.waitUntilEmpty is private[spark] (public bytecode)
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-        .invoke(bus, java.lang.Long.valueOf(30000L))
-    }
     spark.sparkContext.addSparkListener(listener)
     try {
       val docs = Tables.documents(spark, sf())
@@ -654,7 +647,7 @@ class PlanShapeSpec extends SparkSpec {
       graft.functions.Dedup.lshCandidatePairs(
         graft.functions.Dedup.minhashSignatureRows(
           graft.functions.Dedup.shingleArrays(docs), 8)).count()
-      drain()
+      drainListeners()
       val candsOnce = bytes.get()
       assert(candsOnce > 0L, "baseline run wrote no shuffle bytes")
       // the full estimator: with stage reuse its total shuffle is the
@@ -663,7 +656,7 @@ class PlanShapeSpec extends SparkSpec {
       bytes.set(0)
       val est = SparkEntry.queries("p54_minhash_estimate")(spark, sf())
       est.collect()
-      drain()
+      drainListeners()
       val full = bytes.get()
       assert(full < 2L * candsOnce,
         f"p54 shuffled ${full / 1e6}%.1f MB vs candidate subtree " +

@@ -1,12 +1,14 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Snapshot differencing: op classification, envelope images, null-safe
   * change detection, contract validation. */
 class SnapshotDiffSpec extends SparkSpec {
   import spark.implicits._
+  import SnapshotDiffSpec.bucketDigests
 
   test("diff emits insert/update/delete with envelope images; unchanged rows omitted") {
     val before = Seq(
@@ -83,18 +85,18 @@ class SnapshotDiffSpec extends SparkSpec {
     assert(full.size === 3)
     // 3 changed keys -> at most 3 dirty buckets of 256; unchanged buckets
     // are proven clean by digest and never enter the PK join
-    def digests(df: org.apache.spark.sql.DataFrame) =
-      SnapshotDiff.bucketDigests(df, Seq("id"), 256)
-    val dirty = SnapshotDiff.dirtyBuckets(digests(before), digests(after)).count()
+    val Seq(b, a) = SnapshotDiff.digestsOf(Seq(before, after), Seq("id"), 256)
+    val dirty = b.dirtyIds(a).size
     assert(dirty >= 1 && dirty <= 3, s"expected <=3 dirty buckets, got $dirty")
     // the capture-loop shape: last round's PERSISTED digests, one scan of
     // the new snapshot — identical change set
-    val incr = SnapshotDiff.diffPrunedIncremental(
-        before, digests(before).localCheckpoint(), after, Seq("id"), 256)
+    val persisted = SnapshotDiff.Digests.fromBytes(b.toBytes)
+    val Seq(fresh) = SnapshotDiff.digestsOf(Seq(after), Seq("id"), 256)
+    val incr = SnapshotDiff.diffPrunedIncremental(before, persisted, after, fresh, Seq("id"), 256)
       .orderBy("id").collect().map(_.toSeq).toSeq
     assert(incr === full)
     // unchanged snapshots: zero dirty buckets, empty diff
-    assert(SnapshotDiff.dirtyBuckets(digests(before), digests(before)).isEmpty)
+    assert(b.dirtyIds(persisted).isEmpty)
     assert(SnapshotDiff.diffPruned(before, before, Seq("id"), 256).isEmpty)
   }
 
@@ -114,8 +116,8 @@ class SnapshotDiffSpec extends SparkSpec {
       .select("id", "_op").as[(Long, String)].collect().toSeq
     assert(pruned === full)
     // and the same through the persisted-digest capture-loop path
-    val incr = SnapshotDiff.diffPrunedIncremental(before,
-        SnapshotDiff.bucketDigests(before, Seq("id"), 64), after, Seq("id"), 64)
+    val Seq(b, a) = SnapshotDiff.digestsOf(Seq(before, after), Seq("id"), 64)
+    val incr = SnapshotDiff.diffPrunedIncremental(before, b, after, a, Seq("id"), 64)
       .select("id", "_op").as[(Long, String)].collect().toSeq
     assert(incr === full)
   }
@@ -139,10 +141,13 @@ class SnapshotDiffSpec extends SparkSpec {
       val (observed, digests) = SnapshotDiff.observeDigests(src, pk, buckets)
       observed.write.parquet(path)
       val got = digests.await()
-      val want = SnapshotDiff.bucketDigests(spark.read.parquet(path), pk, buckets)
+      val want = bucketDigests(spark.read.parquet(path), pk, buckets)
       assert(got.rows === want.select("_bkt", "_digest", "_n").orderBy("_bkt")
         .as[(Long, Long, Long)].collect().toSeq, s"buckets=$buckets")
       assert(got.rows.map(_._3).sum === 300L)
+      // and digestsOf, which folds several frames in one aggregation
+      assert(SnapshotDiff.digestsOf(Seq(src, spark.read.parquet(path)), pk, buckets)
+        .map(_.rows) === Seq(got.rows, got.rows), s"buckets=$buckets")
       assert(want.select("_buckets", "_cols").distinct().as[(Long, String)].collect().toSeq ===
         Seq((buckets.toLong, got.cols)))
     }
@@ -163,30 +168,20 @@ class SnapshotDiffSpec extends SparkSpec {
   test("incremental diff refuses a digest artifact with a mismatched bucket count or column set") {
     val before = (1L to 500L).map(i => (i, s"s$i")).toDF("id", "s")
     val after = (1L to 500L).map(i => (i, if (i == 7) "CHANGED" else s"s$i")).toDF("id", "s")
-    // bucket-count mismatch: stamped artifact fails loudly instead of
+    val Seq(afterDigests) = SnapshotDiff.digestsOf(Seq(after), Seq("id"), 256)
+    def incr(beforeDigests: SnapshotDiff.Digests): DataFrame =
+      SnapshotDiff.diffPrunedIncremental(before, beforeDigests, after, afterDigests, Seq("id"), 256)
+    // bucket-count mismatch: stamped digests fail loudly instead of
     // misaligning bucket ids and silently pruning real changes
-    val wrongBuckets = SnapshotDiff.bucketDigests(before, Seq("id"), 128)
-    val e1 = intercept[Exception] {
-      SnapshotDiff.diffPrunedIncremental(before, wrongBuckets, after, Seq("id"), 256).count()
-    }
+    val Seq(wrongBuckets) = SnapshotDiff.digestsOf(Seq(before), Seq("id"), 128)
+    val e1 = intercept[IllegalStateException](incr(wrongBuckets))
     assert(e1.getMessage.contains("buckets"), e1.getMessage)
     // column-order mismatch: signatures not comparable
-    val wrongCols = SnapshotDiff.bucketDigests(before.select("s", "id"), Seq("id"), 256)
-    val e2 = intercept[Exception] {
-      SnapshotDiff.diffPrunedIncremental(before, wrongCols, after, Seq("id"), 256).count()
-    }
+    val Seq(wrongCols) = SnapshotDiff.digestsOf(Seq(before.select("s", "id")), Seq("id"), 256)
+    val e2 = intercept[IllegalStateException](incr(wrongCols))
     assert(e2.getMessage.contains("not be comparable"), e2.getMessage)
-    // legacy artifact (no stamps): the weaker range check still catches a
-    // LARGER original bucket count
-    val legacyBig = SnapshotDiff.bucketDigests(before, Seq("id"), 4096)
-      .drop("_buckets", "_cols")
-    val e3 = intercept[Exception] {
-      SnapshotDiff.diffPrunedIncremental(before, legacyBig, after, Seq("id"), 64).count()
-    }
-    assert(e3.getMessage.contains("outside"), e3.getMessage)
-    // matching stamped artifact passes and finds the change
-    val ok = SnapshotDiff.diffPrunedIncremental(before,
-      SnapshotDiff.bucketDigests(before, Seq("id"), 256), after, Seq("id"), 256)
+    // matching stamped digests pass and find the change
+    val ok = incr(SnapshotDiff.digestsOf(Seq(before), Seq("id"), 256).head)
     assert(ok.select("id").as[Long].collect().toSeq === Seq(7L))
   }
 
@@ -223,6 +218,29 @@ class SnapshotDiffSpec extends SparkSpec {
     }
   }
 
+  test("diffPruned runs at most 2 jobs while its frame is built") {
+    // one global digest aggregation over both sides (its partial and final
+    // stages under AQE); the full-outer join of two digest tables it
+    // replaced ran 3
+    val before = (1L to 2000L).map(i => (i, s"s$i")).toDF("id", "s")
+    val after = (2L to 2001L).map(i => (i, if (i == 7) "CHANGED" else s"s$i")).toDF("id", "s")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drainListeners()
+    spark.sparkContext.addSparkListener(listener)
+    val d = try {
+      val d = SnapshotDiff.diffPruned(before, after, Seq("id"), 64)
+      drainListeners()
+      d
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get <= 2, s"${jobs.get} jobs at construction")
+    assert(d.select("id", "_op").orderBy("id").as[(Long, String)].collect().toSeq ===
+      Seq((1L, "delete"), (7L, "update"), (2001L, "insert")))
+  }
+
   test("identical snapshots diff to empty; fully disjoint ones to inserts + deletes") {
     val x = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
     assert(SnapshotDiff.diff(x, x, Seq("id")).isEmpty)
@@ -230,5 +248,21 @@ class SnapshotDiffSpec extends SparkSpec {
     val ops = SnapshotDiff.diff(x, y, Seq("id"))
       .groupBy("_op").count().as[(String, Long)].collect().toMap
     assert(ops === Map("insert" -> 1L, "delete" -> 2L))
+  }
+}
+
+object SnapshotDiffSpec {
+  /** The parity reference for [[SnapshotDiff.observeDigests]] and
+    * [[SnapshotDiff.digestsOf]]: one (bucket, digest, row count) row per
+    * non-empty PK-hash bucket, by a groupBy and `bit_xor` (an independent
+    * computation of the same digests), stamped `_buckets`/`_cols`. */
+  def bucketDigests(df: DataFrame, pk: Seq[String], buckets: Int): DataFrame = {
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+    val cols = df.columns.toSeq
+    df.select(SnapshotDiff.bucketOf(pk, buckets).as("_bkt"), SnapshotDiff.rowSignature(cols).as("_sig"))
+      .groupBy("_bkt").agg(bit_xor(col("_sig")).as("_digest"),
+        count(lit(1)).as("_n"))
+      .withColumn("_buckets", lit(buckets.toLong))
+      .withColumn("_cols", lit(s"pk=${pk.mkString(",")};cols=${cols.mkString(",")}"))
   }
 }

@@ -16,16 +16,19 @@ import scala.jdk.CollectionConverters._
   * insert capture, offset bootstrap, checkpoint recovery, gap hold-back. */
 class PollingSourceSpec extends SparkSpec {
 
+  /** This suite's own database directory, wiped of a previous run's
+    * databases; other suites' databases under `/tmp/graft-derby` may still
+    * be booted in the same JVM, so they are left alone. */
   private lazy val dbDir = {
     System.setProperty("derby.system.home", "/tmp/graft-derby")
     Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
-    val root = java.nio.file.Paths.get("/tmp/graft-derby")
+    val root = java.nio.file.Paths.get("/tmp/graft-derby/polling")
     if (Files.exists(root)) { // stale DBs from a previous run
       import scala.jdk.CollectionConverters._
       Files.walk(root).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
     }
     Files.createDirectories(root)
-    "/tmp/graft-derby"
+    root.toString
   }
 
   private def withDb[A](name: String)(f: (String, java.sql.Connection) => A): A = {

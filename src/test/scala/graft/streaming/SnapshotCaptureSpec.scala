@@ -9,7 +9,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.{Cdc, SparkSpec}
-import graft.operators.{IncrementalAgg, SnapshotDiff}
+import graft.operators.{IncrementalAgg, SnapshotDiff, SnapshotDiffSpec}
 
 /** The snapshot capture loop's per-round work, pinned by deterministic
   * counts (jobs, call sites, plan nodes, persisted RDDs, round
@@ -61,16 +61,9 @@ class SnapshotCaptureSpec extends SparkSpec {
           String.valueOf(j.properties.getProperty("spark.job.description")))
       }
     }
-    // LiveListenerBus.waitUntilEmpty is private[spark] (public bytecode)
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-        .invoke(bus, java.lang.Long.valueOf(30000L))
-    }
-    drain()
+    drainListeners()
     spark.sparkContext.addSparkListener(listener)
-    try { body; drain() } finally spark.sparkContext.removeSparkListener(listener)
+    try { body; drainListeners() } finally spark.sparkContext.removeSparkListener(listener)
     jobs.synchronized(jobs.toList)
   }
 
@@ -79,6 +72,16 @@ class SnapshotCaptureSpec extends SparkSpec {
 
   private def chain(t: Throwable): String =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).mkString(" | ")
+
+  /** Asserts `e` is the state-layout refusal for `stateDir`'s round 0,
+    * naming the fix, with `why` in it. */
+  private def assertLayoutRefusal(e: IllegalStateException, stateDir: String, why: String): Unit = {
+    val msg = e.getMessage
+    assert(msg.startsWith(s"committed round ${new Path(stateDir, "round_0")} is not of the current state layout: "), msg)
+    assert(msg.contains(why), msg)
+    assert(msg.endsWith(s"Delete $stateDir and re-bootstrap against an empty target table " +
+      "(the bootstrap round sends every row as an insert)"), msg)
+  }
 
   test("bootstrap projection equals the diff against an empty snapshot: names, order, types, rows") {
     val dir = stateDir("cap_boot")
@@ -143,7 +146,7 @@ class SnapshotCaptureSpec extends SparkSpec {
     }
   }
 
-  test("captureIntoLadder rounds read parquet with known schemas; a ladder without one still folds") {
+  test("captureIntoLadder rounds read parquet with known schemas; a ladder without one re-bootstraps with no inference read") {
     val dir = stateDir("cap_ladder")
     def src(n: Int) = ((1 to 40).filterNot(_ == 10 + n) :+ (100 + n))
       .map(i => (i.toLong, (i % 3).toLong, i.toLong * 7 - 120, i / 4.0 + n))
@@ -168,14 +171,16 @@ class SnapshotCaptureSpec extends SparkSpec {
       val reads = round(n, grans)
       assert(reads.isEmpty, s"round $n schema-inference jobs:\n${reads.mkString("\n\n")}")
     }
-    // a ladder_meta of the earlier layout (grain line only) still folds,
-    // reading that ladder by inference
+    // a ladder_meta of the earlier layout (grain line only) is treated like
+    // a grain mismatch: the finest level is rebuilt from the snapshot,
+    // with no inference read of the old ladder
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
     val meta = new Path(dir, "round_2/ladder_meta")
     val grain = scala.io.Source.fromInputStream(fs.open(meta)).getLines().next()
     val out = fs.create(meta, true)
     try out.write(grain.getBytes("UTF-8")) finally out.close()
-    assert(round(3, Seq("b" -> 50L, "b4" -> 400L)).nonEmpty)
+    val reads = round(3, Seq("b" -> 50L, "b4" -> 400L))
+    assert(reads.isEmpty, s"round 3 schema-inference jobs:\n${reads.mkString("\n\n")}")
   }
 
   test("pruned diffs plan no broadcast exchange and register no checkpoint blocks") {
@@ -183,8 +188,8 @@ class SnapshotCaptureSpec extends SparkSpec {
     val after = (2L to 501L).map(i => (i, if (i == 7) "CHANGED" else s"s$i")).toDF("id", "s")
     val baseline = storageBaseline()
     val pruned = SnapshotDiff.diffPruned(before, after, Seq("id"), 64)
-    val incr = SnapshotDiff.diffPrunedIncremental(before,
-      SnapshotDiff.bucketDigests(before, Seq("id"), 64), after, Seq("id"), 64)
+    val Seq(b, a) = SnapshotDiff.digestsOf(Seq(before, after), Seq("id"), 64)
+    val incr = SnapshotDiff.diffPrunedIncremental(before, b, after, a, Seq("id"), 64)
     for (d <- Seq(pruned, incr)) {
       val p = d.queryExecution.executedPlan.toString
       assert(!p.contains("BroadcastExchange"), s"the dirty set must not broadcast:\n$p")
@@ -231,42 +236,79 @@ class SnapshotCaptureSpec extends SparkSpec {
     assert(r3.changes.count() === 1L)
   }
 
-  test("state without the schema sidecar (earlier layout) captures and converges") {
+  test("state without the schema sidecar (earlier layout) is refused, naming the fix") {
     withDerby("cap_compat") { (conn, opts, spec) =>
       val state = stateDir("cap_compat_state")
       assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 40L)
       val fs = new Path(state).getFileSystem(spark.sessionState.newHadoopConf())
       assert(fs.delete(new Path(state, "round_0/schema"), false))
       conn.createStatement().execute("UPDATE CSRC SET V = 0.25 WHERE ID < 4")
-      conn.createStatement().execute("DELETE FROM CSRC WHERE ID = 30")
-      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 4L)
-      assert(table(conn, "CTGT") === table(conn, "CSRC"))
-      // the new round writes the sidecar again
-      assert(fs.exists(new Path(state, "round_1/schema")))
-      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 0L)
+      val e = intercept[IllegalStateException](
+        Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT"))
+      assertLayoutRefusal(e, state, "it has no schema")
+      // refused before the round's scan: no round in flight, target untouched
+      assert(rounds(state) === Seq("round_0"))
+      assert(table(conn, "CTGT").size === 40)
     }
   }
 
-  test("a committed round with a parquet digest table (earlier layout) converges and writes the digest file") {
-    for (sidecar <- Seq(true, false)) withDerby(s"cap_pqdig_$sidecar") { (conn, opts, spec) =>
+  test("a committed round with a parquet digest table (earlier layout) is refused, naming the fix") {
+    withDerby("cap_pqdig") { (conn, opts, spec) =>
       val state = stateDir("cap_pqdig_state")
       assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 40L)
       // rewrite round 0 as the earlier layout stored it: the digests as a
-      // parquet table of bucketDigests over the snapshot
+      // parquet table of bucket digests over the snapshot
       val fs = new Path(state).getFileSystem(spark.sessionState.newHadoopConf())
       val r0 = new Path(state, "round_0")
-      SnapshotDiff.bucketDigests(spark.read.parquet(new Path(r0, "snapshot").toString), Seq("id"), 4096)
+      SnapshotDiffSpec.bucketDigests(spark.read.parquet(new Path(r0, "snapshot").toString), Seq("id"), 4096)
         .coalesce(1).write.parquet(new Path(r0, "digests").toString)
       assert(fs.delete(new Path(r0, "digests.bin"), false))
-      if (!sidecar) assert(fs.delete(new Path(r0, "schema"), false))
-      conn.createStatement().execute("UPDATE CSRC SET NAME = NULL WHERE ID = 7")
       conn.createStatement().execute("DELETE FROM CSRC WHERE ID = 8")
-      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 2L, s"sidecar=$sidecar")
-      assert(table(conn, "CTGT") === table(conn, "CSRC"))
-      assert(fs.exists(new Path(state, "round_1/digests.bin")))
-      assert(!fs.exists(new Path(state, "round_1/digests")))
-      assert(Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT") === 0L)
+      val e = intercept[IllegalStateException](
+        Cdc.snapshotDiffApply(spark, opts, Seq("id"), state, spec, "CTGT"))
+      assertLayoutRefusal(e, state, "it has no digests.bin")
+      assert(rounds(state) === Seq("round_0"))
     }
+  }
+
+  test("a damaged digest file is refused, naming the fix: truncated, one byte over, unknown format") {
+    val src = (1 to 30).map(i => (i.toLong, s"s$i")).toDF("id", "s")
+    /** Round 1 over a committed round 0 whose digest file `damage`
+      * rewrote is refused before its scan, with `why` in the message.
+      * The file is rewritten through the Hadoop filesystem, so its
+      * checksum matches, unless `bypass` writes it directly. */
+    def refused(why: String, bypass: Boolean = false)(damage: Array[Byte] => Array[Byte]): Unit = {
+      val dir = stateDir("cap_damaged")
+      SnapshotCapture.capture(spark, src, Seq("id"), dir, 16).commit()
+      val file = new Path(dir, "round_0/digests.bin")
+      val local = java.nio.file.Paths.get(file.toString)
+      val damaged = damage(Files.readAllBytes(local))
+      if (bypass) Files.write(local, damaged)
+      else {
+        val out = file.getFileSystem(spark.sessionState.newHadoopConf()).create(file, true)
+        try out.write(damaged) finally out.close()
+      }
+      assertLayoutRefusal(intercept[IllegalStateException](
+        SnapshotCapture.capture(spark, src, Seq("id"), dir, 16)), dir, why)
+      assert(rounds(dir) === Seq("round_0"))
+    }
+    /** `damage` applied to the inflated payload, deflated again. */
+    def payload(damage: java.nio.ByteBuffer => java.nio.ByteBuffer)(file: Array[Byte]): Array[Byte] = {
+      val in = new java.util.zip.InflaterInputStream(new java.io.ByteArrayInputStream(file))
+      val p = damage(java.nio.ByteBuffer.wrap(try in.readAllBytes() finally in.close()))
+      val out = new java.io.ByteArrayOutputStream()
+      val z = new java.util.zip.DeflaterOutputStream(out)
+      try z.write(p.array()) finally z.close()
+      out.toByteArray
+    }
+    refused("digest file is truncated")(b => b.take(b.length / 2))
+    refused("1 bytes follow the digest file's deflate stream")(_ :+ 0.toByte)
+    refused("unknown digest file format 2")(payload(_.putInt(0, 2)))
+    refused("digest file stamps buckets=0")(payload(_.putInt(4, 0)))
+    // a payload one byte longer than its stamps need
+    refused("need")(payload(p => java.nio.ByteBuffer.wrap(p.array() :+ 0.toByte)))
+    // a file changed behind the filesystem's back fails its checksum
+    refused("Checksum error", bypass = true)(_ :+ 0.toByte)
   }
 
   test("a digest file stamped with another bucket count or column list is refused, in validateDigests' words") {
@@ -276,21 +318,14 @@ class SnapshotCaptureSpec extends SparkSpec {
       SnapshotCapture.capture(spark, src, Seq("id"), dir, 16).commit()
       chain(intercept[IllegalStateException](SnapshotCapture.capture(spark, after, Seq("id"), dir, buckets)))
     }
-    // the same mismatch through the persisted-table path: a stamped
-    // bucketDigests artifact checked by validateDigests
-    def tableRefusal(after: DataFrame, buckets: Int): String =
-      chain(intercept[Exception](SnapshotDiff.diffPrunedIncremental(src,
-        SnapshotDiff.bucketDigests(src, Seq("id"), 16), after, Seq("id"), buckets).count()))
     val changed = src.where($"id" =!= 5L)
     val wrongBuckets = refusal(changed, 32)
     assert(wrongBuckets.contains("digest artifact was built with buckets=16 but this diff uses " +
       "buckets=32; bucket ids would misalign and changed rows would be silently pruned"), wrongBuckets)
-    assert(tableRefusal(changed, 32).contains(wrongBuckets.split(" \\| ").head))
     val reordered = changed.select("s", "id")
     val wrongCols = refusal(reordered, 16)
     assert(wrongCols.contains("digest artifact was built over [pk=id;cols=id,s] but this diff runs " +
       "over [pk=id;cols=s,id]; signatures would not be comparable"), wrongCols)
-    assert(tableRefusal(reordered, 16).contains(wrongCols.split(" \\| ").head))
   }
 
   test("a source column added between rounds fails loudly, with or without the sidecar") {
@@ -305,9 +340,10 @@ class SnapshotCaptureSpec extends SparkSpec {
           (1 to 10).map(i => (i.toLong, s"s$i", i)).toDF("id", "s", "extra"), Seq("id"), dir, 16)
           .changes.collect()
       }
-      val msg = chain(e)
-      assert(msg.contains("not be comparable") || msg.contains("snapshots must share a schema"),
-        s"sidecar=$sidecar: $msg")
+      if (sidecar) {
+        val msg = chain(e)
+        assert(msg.contains("not be comparable") || msg.contains("snapshots must share a schema"), msg)
+      } else assertLayoutRefusal(e.asInstanceOf[IllegalStateException], dir, "it has no schema")
     }
   }
 }
